@@ -1042,8 +1042,8 @@ def q_code_profile_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_curate_fused_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The fused single-scan curation pass
-    (:func:`jsl_engine.spark_validate.validate_and_curate`): JSL verdicts
-    + quality + language id + secret counts + license classification in
+    (:func:`jsl_engine.spark_validate.validate_df`, ``curate=True``):
+    JSL verdicts + quality + language id + secret counts + license classification in
     ONE stage — one scan, zero joins, zero operator-added shuffles
     (plan-gated in pytest on raw input; at sandbox scale the
     caller-side ``_t`` fan_out adds one input-conditioning exchange,
@@ -1059,8 +1059,6 @@ def q_curate_fused_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     this exact modified-text input at sf0.01 AND sf0.1 before the
     switch, so the hash gate now covers the production kernel; the JVM
     operator stays independently oracled via `language_id_documents`."""
-    from jsl_engine.spark_validate import validate_and_curate
-
     docs = _docs_with_licenses(spark, sf_dir).withColumn(
         "text",
         F.concat(
@@ -1070,8 +1068,9 @@ def q_curate_fused_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.lit("")),
         ),
     ).withColumn("content", _docs_json_content())
-    out = validate_and_curate(
-        docs, compile_schema(DOCS_JSON_SCHEMA), lang_engine="arrow"
+    out = validate_df(
+        docs, compile_schema(DOCS_JSON_SCHEMA), key_cols=("doc_id",),
+        curate=True, text_col="text", lang_engine="arrow",
     )
     return out.drop("violations")
 

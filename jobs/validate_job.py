@@ -114,7 +114,7 @@ def main() -> int:
             route_col="lang",
             default_schema=schema,
             # --schemas --curate composes: riders fuse into the same
-            # registry-dispatch scan (validate_and_curate_multi)
+            # registry-dispatch scan (validate_multi(..., curate=True))
             curate=args.curate,
             lang_engine=args.lang_engine,
         )

@@ -473,12 +473,6 @@ class _BitReader:
         return sym, v
 
 
-def _extend(v: int, s: int) -> int:
-    if s and v < (1 << (s - 1)):
-        return v - (1 << s) + 1
-    return v
-
-
 def _decode_scan(payload, pos, sos, state, huff, restart):
     """Decode one scan (baseline full-band or any progressive band)
     into the frame state's coefficient grids; returns the stream

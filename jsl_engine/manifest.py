@@ -40,7 +40,7 @@ from pyspark.sql.types import (
 )
 
 from jsl_engine.schema import Schema
-from jsl_engine.spark_validate import validate_df, violations
+from jsl_engine.spark_validate import validate_multi, violations
 
 MANIFEST_SCHEMA = StructType(
     [
@@ -272,9 +272,9 @@ def run_validation_job(
     one row per ``schema_key`` carrying that route's own schema
     fingerprint and verdict metrics.
 
-    ``curate=True`` swaps the validation stage for the fused
-    validation+curation pass (:func:`jsl_engine.spark_validate
-    .validate_and_curate`, ``text_col = content_col``): the validated
+    ``curate=True`` makes the validation stage the fused
+    validation+curation pass (``validate_multi(..., curate=True)``,
+    ``text_col = content_col``): the validated
     sink then also carries ``quality, lang_id, n_secrets, license`` per
     document at zero extra scans — the map-only curation columns ride
     the one content pass the job already pays for. Resume/manifest
@@ -290,7 +290,7 @@ def run_validation_job(
     """
     # registry mode and the fused curate pass COMPOSE (round 5): the
     # per-route dispatch and the rider scorers share the one content
-    # scan via validate_and_curate_multi
+    # scan of validate_multi(..., curate=True)
     # EVERY flag that changes verdict semantics or sink layout is part of
     # the resume identity: a run resumed under a different strict mode,
     # key set, content column, partition-prefix width or curate flag
@@ -359,52 +359,22 @@ def run_validation_job(
 
         todo = repartition_salted(todo, repartition, cols=key_cols)
 
-    if schemas is not None and curate:
-        from jsl_engine.spark_validate import validate_and_curate_multi
-
-        validated = validate_and_curate_multi(
-            todo,
-            schemas,
-            route_col=route_col,
-            default=default_schema,
-            content_col=content_col,
-            text_col=content_col,
-            key_cols=("part_key",) + key_cols,
-            strict_instance_semantics=strict_instance_semantics,
-            lang_engine=lang_engine,
-        )
-    elif schemas is not None:
-        from jsl_engine.spark_validate import validate_multi
-
-        validated = validate_multi(
-            todo,
-            schemas,
-            route_col=route_col,
-            default=default_schema,
-            content_col=content_col,
-            key_cols=("part_key",) + key_cols,
-            strict_instance_semantics=strict_instance_semantics,
-        )
-    elif curate:
-        from jsl_engine.spark_validate import validate_and_curate
-
-        validated = validate_and_curate(
-            todo,
-            schema,
-            content_col=content_col,
-            text_col=content_col,
-            key_cols=("part_key",) + key_cols,
-            strict_instance_semantics=strict_instance_semantics,
-            lang_engine=lang_engine,
-        )
-    else:
-        validated = validate_df(
-            todo,
-            schema,
-            content_col=content_col,
-            key_cols=("part_key",) + key_cols,
-            strict_instance_semantics=strict_instance_semantics,
-        )
+    # one validation pass for all four modes: a registry job routes on
+    # route_col, a single-schema job is the no-route case of the same
+    # kernel; curate fuses the rider columns into that pass
+    registry_mode = schemas is not None
+    validated = validate_multi(
+        todo,
+        schemas if registry_mode else {},
+        route_col=route_col if registry_mode else None,
+        default=default_schema if registry_mode else schema,
+        content_col=content_col,
+        key_cols=("part_key",) + key_cols,
+        strict_instance_semantics=strict_instance_semantics,
+        curate=curate,
+        text_col=content_col,
+        lang_engine=lang_engine,
+    )
     # Single Python pass: write the combined result (verdicts + nested
     # violations) once, then derive everything else from the SINK — a
     # columnar re-scan that reads only the narrow columns it needs. No

@@ -30,12 +30,3 @@ def format_pointer(tokens: Iterable[str]) -> str:
         out.append("/")
         out.append(escape_token(t))
     return "".join(out)
-
-
-def parse_pointer(pointer: str) -> list[str]:
-    """Inverse of :func:`format_pointer` (used by tests)."""
-    if pointer == "":
-        return []
-    if not pointer.startswith("/"):
-        raise ValueError(f"not a JSON pointer: {pointer!r}")
-    return [t.replace("~1", "/").replace("~0", "~") for t in pointer[1:].split("/")]

@@ -47,8 +47,6 @@ from __future__ import annotations
 
 import re
 
-import numpy as np
-
 #: Field ranges live in the regex (C-speed alternations): month 01-12,
 #: day 01-31, hour 00-23, minute 00-59, second 00-60 (leap second),
 #: offset hour 00-23 / minute 00-59. Python code only settles the
@@ -84,12 +82,3 @@ def is_rfc3339(s: str) -> bool:
         y = int(m.group(1))
         return y % 4 == 0 and (y % 100 != 0 or y % 400 == 0)
     return False
-
-
-def is_rfc3339_array(values: "np.ndarray | list[str]") -> np.ndarray:
-    """Vectorized :func:`is_rfc3339` over an array of Python strings."""
-    return np.fromiter(
-        (isinstance(v, str) and is_rfc3339(v) for v in values),
-        dtype=bool,
-        count=len(values),
-    )

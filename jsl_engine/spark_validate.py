@@ -6,8 +6,12 @@ The distributed analogue of the reference's validate-many loop
 broadcast of plain tuples, compiled **once per executor process** into
 fast-path closures (:mod:`jsl_engine.fastcheck`), then applied to Arrow
 batches of documents inside ``mapInArrow`` — no per-row Python UDFs, no
-per-row pandas object conversion (key and sha columns pass through as
-Arrow buffers zero-copy), no schema re-parsing per row or per batch.
+per-row pandas object conversion (key columns pass through as Arrow
+buffers zero-copy; the content sha256 is computed in the same kernel),
+no schema re-parsing per row or per batch. One kernel serves both the
+single-schema (:func:`validate_df`) and the schema-registry
+(:func:`validate_multi`) entry points, with or without the fused
+curation riders (``curate=True``).
 
 Two-phase evaluation per document:
 
@@ -32,7 +36,6 @@ Engine extensions beyond the reference (documented verdict taxonomy):
 
 from __future__ import annotations
 
-import json
 from typing import Any, Iterator
 
 import pyarrow as pa
@@ -54,13 +57,10 @@ from jsl_engine.schema import Schema, plan_payload
 
 
 # serde_json-parity parsing lives in jsl_engine.jsonio (shared with the
-# driver-side schema compiler); re-exported here for the tests/API
+# driver-side schema compiler); the kernel resolves these module globals
+# per call
 from jsl_engine.jsonio import PARSE_ERROR as _PARSE_ERROR
-from jsl_engine.jsonio import (  # noqa: F401
-    exceeds_nesting,
-    loads_strict,
-    parse_document,
-)
+from jsl_engine.jsonio import exceeds_nesting, parse_document
 
 #: Appended to the pass-through key columns in the validation output.
 RESULT_FIELDS = [
@@ -81,6 +81,14 @@ RESULT_FIELDS = [
         True,
     ),
 ]
+
+#: Arrow type of the ``violations`` column the kernel builds.
+_VIOLATIONS_TYPE = pa.list_(
+    pa.struct(
+        [pa.field("instance_path", pa.string(), nullable=False),
+         pa.field("schema_path", pa.string(), nullable=False)]
+    )
+)
 
 # Per-executor-process cache of compiled checkers, keyed by
 # (schema fingerprint, strict, max_depth): compile once, validate many.
@@ -178,76 +186,101 @@ def _validate_batch(
     return ok_col, n_col, err_col, vio_col
 
 
-def validate_df(
+def _validate_routed(
+    contents: list,
+    routes: "pa.Array | None",
+    registry: dict,
+    default: "dict | None",
+    *opts,
+) -> tuple[list, list, list, list]:
+    """Validate one batch against the payload each row's route selects
+    (``default`` for an unmapped or NULL route; ``error='no_schema'``
+    when that is ``None`` too); ``opts`` are :func:`_validate_batch`'s
+    trailing arguments.
+
+    Without a route column (``routes is None``) the whole content list
+    goes through a single :func:`_validate_batch` call: no per-row route
+    list, grouping, gather or scatter on the single-schema hot path
+    (those cost +15-24% per document). A routed batch is grouped by
+    route value."""
+    n = len(contents)
+    if routes is None:
+        if default is None:
+            return [False] * n, [0] * n, ["no_schema"] * n, [None] * n
+        return _validate_batch(contents, default, *opts)
+    ok, nerr = [False] * n, [0] * n
+    err: list = [None] * n
+    vio: list = [None] * n
+    idx_by_route: dict = {}
+    for i, r in enumerate(routes.to_pylist()):
+        idx_by_route.setdefault(r, []).append(i)
+    for r, idxs in idx_by_route.items():
+        o2, n2, e2, v2 = _validate_routed(
+            [contents[i] for i in idxs], None, registry,
+            registry.get(r, default), *opts,
+        )
+        for j, i in enumerate(idxs):
+            ok[i], nerr[i], err[i], vio[i] = o2[j], n2[j], e2[j], v2[j]
+    return ok, nerr, err, vio
+
+
+def _validation_pass(
     df: DataFrame,
-    schema: Schema,
+    registry: "dict[str, Schema]",
+    default: "Schema | None",
+    route_col: "str | None",
     *,
-    content_col: str = "content",
-    key_cols: tuple[str, ...] = ("repo", "path", "commit"),
-    strict_instance_semantics: bool = False,
-    max_errors: int = 0,
-    max_depth: int = 32,
-    with_sha256: bool = True,
-    max_nesting: int | None = None,
+    content_col: str,
+    key_cols: tuple[str, ...],
+    strict_instance_semantics: bool,
+    max_errors: int,
+    max_depth: int,
+    max_nesting: "int | None",
+    curate: bool,
+    text_col: str,
+    lang_engine: str,
 ) -> DataFrame:
-    """Validate every row's ``content_col`` against a compiled root schema.
-
-    Returns one row per input row::
-
-        *key_cols, ok, n_errors, error, content_sha256, violations
-
-    The content sha256 (``hashlib.sha256(content.encode()).hexdigest()``
-    == ``F.sha2(content, 256)`` — the per-row invariant against the
-    reference harness) is computed INSIDE the Arrow kernel since r8: as
-    a JVM projection Catalyst pushed it *below* the caller's fan-out
-    repartition, so on a single-split input every hash ran on the one
-    scan task AND the exchange carried hash + content both; in-kernel it
-    runs on the post-exchange parallelism and the shuffle carries only
-    keys + content (guide §2.3 — plans/r08/jsl_validate_events_*.txt).
-
-    Catalyst sees the UDF as a black box, so input pruning is explicit:
-    only ``key_cols + (content,)`` enter the Arrow exchange.
-
-    ``max_nesting=128`` opts into exact serde_json deep-instance parity
-    (instances nested past the limit become ``json_parse_error``); the
-    default ``None`` skips the O(nodes) depth walk on the hot path — see
-    :mod:`jsl_engine.jsonio` for the documented divergence window.
-
-    Every executor batch asserts it resolved the same JSON parser
-    (orjson vs stdlib) as the driver, so a mixed-environment cluster
-    fails fast instead of mixing verdict semantics within one job.
-    """
+    """The one validation stage behind :func:`validate_df` and
+    :func:`validate_multi`: prune the input (with ``curate``, behind the
+    rider chain of :func:`_curation_riders`), broadcast every compiled
+    plan once, and run ONE mapInArrow pass emitting
+    ``*key_cols, [schema_key,] ok, n_errors, error, content_sha256,
+    violations`` — ``schema_key`` (the route value as a string) only
+    when there is a ``route_col``."""
+    if route_col is None and registry:
+        raise ValueError("a schema registry needs a route_col")
+    if curate:
+        df = _curation_riders(
+            df, text_col=text_col, content_col=content_col,
+            k0=key_cols[0], rest=tuple(key_cols[1:]),
+            lang_engine=lang_engine,
+            extra_carry=(route_col,) if route_col is not None else (),
+        )
+        key_cols = tuple(key_cols) + ("quality", "lang_id", "n_secrets", "license")
     spark = df.sparkSession
-    payload = plan_payload(schema)
-    bc = spark.sparkContext.broadcast(payload)
+    bc = spark.sparkContext.broadcast((
+        {k: plan_payload(s) for k, s in registry.items()},
+        plan_payload(default) if default is not None else None,
+    ))
     from jsl_engine import jsonio as _jsonio
 
     driver_parser = _jsonio.PARSER
 
-    cols = [F.col(c) for c in key_cols]
+    # Catalyst sees the UDF as a black box, so input pruning is explicit
+    routed = route_col is not None
     pruned = df.select(
-        *cols,
+        *[F.col(c) for c in key_cols],
+        *([F.col(route_col).cast("string").alias("schema_key")] if routed else []),
         F.col(content_col).alias("__content"),
     )
-
     out_schema = StructType(
         [pruned.schema[c] for c in key_cols]
-        + [
-            StructField("ok", BooleanType(), False),
-            StructField("n_errors", IntegerType(), False),
-            StructField("error", StringType(), True),
-            StructField("content_sha256", StringType(), True),
-            RESULT_FIELDS[-1],
-        ]
+        + ([StructField("schema_key", StringType(), True)] if routed else [])
+        + RESULT_FIELDS
     )
-
-    key_list = list(key_cols)
-    vio_type = pa.list_(
-        pa.struct(
-            [pa.field("instance_path", pa.string(), nullable=False),
-             pa.field("schema_path", pa.string(), nullable=False)]
-        )
-    )
+    out_names = out_schema.fieldNames()
+    n_pass = len(key_cols) + routed  # pass-through columns before __content
+    opts = (strict_instance_semantics, max_errors, max_depth, max_nesting)
 
     def run(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
         # mapInArrow, not mapInPandas: key columns pass through as Arrow
@@ -260,96 +293,28 @@ def validate_df(
         from jsl_engine.jsonio import require_parser
 
         require_parser(driver_parser)  # fail fast on mixed environments
-        payload_local = bc.value
+        registry_local, default_local = bc.value
         sha256 = hashlib.sha256
         for batch in batches:
-            contents = batch.column(len(key_list)).to_pylist()
-            ok, n, err, vio = _validate_batch(
-                contents, payload_local, strict_instance_semantics,
-                max_errors, max_depth, max_nesting,
+            contents = batch.column(n_pass).to_pylist()
+            ok, nerr, err, vio = _validate_routed(
+                contents, batch.column(n_pass - 1) if routed else None,
+                registry_local, default_local, *opts,
             )
-            if with_sha256:
-                sha = pa.array(
-                    [
-                        None if c is None
-                        else sha256(c.encode()).hexdigest()
-                        for c in contents
-                    ],
-                    pa.string(),
-                )
-            else:
-                sha = pa.nulls(batch.num_rows, pa.string())
-            arrays = [batch.column(i) for i in range(len(key_list))]
-            arrays.append(pa.array(ok, pa.bool_()))
-            arrays.append(pa.array(n, pa.int32()))
-            arrays.append(pa.array(err, pa.string()))
-            arrays.append(sha)
-            arrays.append(pa.array(vio, vio_type))
+            sha = [None if c is None else sha256(c.encode()).hexdigest()
+                   for c in contents]
             yield pa.RecordBatch.from_arrays(
-                arrays,
-                key_list + ["ok", "n_errors", "error", "content_sha256", "violations"],
+                batch.columns[:n_pass] + [
+                    pa.array(ok, pa.bool_()),
+                    pa.array(nerr, pa.int32()),
+                    pa.array(err, pa.string()),
+                    pa.array(sha, pa.string()),
+                    pa.array(vio, _VIOLATIONS_TYPE),
+                ],
+                out_names,
             )
 
     return pruned.mapInArrow(run, out_schema)
-
-
-def validate_and_curate(
-    df: DataFrame,
-    schema: Schema,
-    *,
-    content_col: str = "content",
-    text_col: str = "text",
-    key_cols: tuple[str, ...] = ("doc_id",),
-    strict_instance_semantics: bool = False,
-    max_errors: int = 0,
-    max_depth: int = 32,
-    max_nesting: "int | None" = None,
-    lang_engine: str = "jvm",
-) -> DataFrame:
-    """Fused validation + curation: ONE content scan produces JSL
-    verdicts **and** every map-only curation column::
-
-        *key_cols, quality, lang_id, n_secrets, license,
-        ok, n_errors, error, content_sha256, violations
-
-    ``text_col`` may equal ``content_col`` (source-code corpora: the
-    code IS the validated content).
-
-    At 10^12 files the corpus scan dominates every map-only operator, so
-    quality scoring, language ID, secret counting and license
-    classification ride along with the validation pass instead of each
-    re-reading 100 TB: the curation columns are computed in the JVM
-    projection *before* the mapInArrow validation stage and pass through
-    the Arrow exchange as zero-copy key columns. The whole job is a
-    single stage — one scan, zero joins, zero shuffles (plan-gated in
-    ``tests/test_spark_validate.py``).
-
-    Each rider column is the exact output of its standalone operator
-    (:func:`jsl_engine.text_ops.quality_score` /
-    :func:`~jsl_engine.text_ops.language_id`,
-    :func:`jsl_engine.redaction.secret_scan`,
-    :func:`jsl_engine.code_ops.license_scan`) — the fusion chains them
-    through their ``keep_cols`` passthroughs, so there is one
-    implementation of every scorer, not a fused copy.
-
-    ``lang_engine="arrow"`` swaps the language stage for the numpy
-    kernel (:func:`jsl_engine.lang_arrow.language_id_arrow` — ~2.5× the
-    JVM rate, BENCH/ANALYSIS.md round 4, parity-pinned in
-    tests/test_lang_arrow.py): the dominant rider becomes a second
-    Arrow stage in the same single-scan plan — still zero joins, zero
-    shuffles."""
-    k0, rest = key_cols[0], tuple(key_cols[1:])
-    cur = _curation_riders(
-        df, text_col=text_col, content_col=content_col, k0=k0, rest=rest,
-        lang_engine=lang_engine,
-    )
-    return validate_df(
-        cur, schema,
-        content_col=content_col,
-        key_cols=key_cols + ("quality", "lang_id", "n_secrets", "license"),
-        strict_instance_semantics=strict_instance_semantics,
-        max_errors=max_errors, max_depth=max_depth, max_nesting=max_nesting,
-    )
 
 
 def _curation_riders(
@@ -362,13 +327,12 @@ def _curation_riders(
     lang_engine: str,
     extra_carry: tuple[str, ...] = (),
 ) -> DataFrame:
-    """The shared map-only scorer chain (secret scan → quality score →
+    """The map-only scorer chain (secret scan → quality score →
     language id → license scan) threaded through each operator's
-    ``keep_cols`` passthrough — ONE implementation feeding both the
-    single-schema fused pass (:func:`validate_and_curate`) and the
-    registry fused pass (:func:`validate_and_curate_multi`), so there is
-    never a fused copy of a scorer to drift. ``extra_carry`` columns
-    (e.g. the registry route column) survive to the final projection."""
+    ``keep_cols`` passthrough — ONE implementation feeding every
+    ``curate=True`` pass, single-schema or registry, so there is never
+    a fused copy of a scorer to drift. ``extra_carry`` columns (e.g. the
+    registry route column) survive to the final projection."""
     from jsl_engine.code_ops import license_scan
     from jsl_engine.redaction import secret_scan
     from jsl_engine.text_ops import language_id, quality_score
@@ -413,50 +377,84 @@ def _curation_riders(
     )
 
 
-def validate_and_curate_multi(
+def validate_df(
     df: DataFrame,
-    schemas: "dict[str, Schema]",
+    schema: Schema,
     *,
-    route_col: str = "lang",
-    default: "Schema | None" = None,
     content_col: str = "content",
-    text_col: str = "text",
-    key_cols: tuple[str, ...] = ("doc_id",),
+    key_cols: tuple[str, ...] = ("repo", "path", "commit"),
     strict_instance_semantics: bool = False,
     max_errors: int = 0,
     max_depth: int = 32,
-    with_sha256: bool = True,
-    max_nesting: "int | None" = None,
+    max_nesting: int | None = None,
+    curate: bool = False,
+    text_col: str = "text",
     lang_engine: str = "jvm",
 ) -> DataFrame:
-    """The realistic production job in ONE pass: schema-REGISTRY
-    validation (per-route compiled plans, :func:`validate_multi`) with
-    the map-only curation riders fused into the same scan::
+    """Validate every row's ``content_col`` against a compiled root schema.
 
-        *key_cols, quality, lang_id, n_secrets, license, schema_key,
-        ok, n_errors, error, content_sha256, violations
+    Returns one row per input row::
 
-    Same fusion contract as :func:`validate_and_curate`: each rider is
-    the exact standalone operator chained through ``keep_cols``
-    (:func:`_curation_riders`), computed in the JVM projection before
-    the one mapInArrow dispatch stage — one scan, zero joins, zero
-    shuffles (plan-gated in tests/test_spark_validate.py). At 10^12
-    files this is the shape that matters: per-language schemas AND
-    curation signals without a second 100 TB read."""
-    k0, rest = key_cols[0], tuple(key_cols[1:])
-    cur = _curation_riders(
-        df, text_col=text_col, content_col=content_col, k0=k0, rest=rest,
-        lang_engine=lang_engine, extra_carry=(route_col,),
-    )
-    return validate_multi(
-        cur, schemas,
-        route_col=route_col,
-        default=default,
-        content_col=content_col,
-        key_cols=key_cols + ("quality", "lang_id", "n_secrets", "license"),
+        *key_cols, ok, n_errors, error, content_sha256, violations
+
+    The content sha256 (``hashlib.sha256(content.encode()).hexdigest()``
+    == ``F.sha2(content, 256)`` — the per-row invariant against the
+    reference harness) is computed INSIDE the Arrow kernel since r8: as
+    a JVM projection Catalyst pushed it *below* the caller's fan-out
+    repartition, so on a single-split input every hash ran on the one
+    scan task AND the exchange carried hash + content both; in-kernel it
+    runs on the post-exchange parallelism and the shuffle carries only
+    keys + content (guide §2.3 — plans/r08/jsl_validate_events_*.txt).
+
+    Catalyst sees the UDF as a black box, so input pruning is explicit:
+    only ``key_cols + (content,)`` enter the Arrow exchange.
+
+    ``max_nesting=128`` opts into exact serde_json deep-instance parity
+    (instances nested past the limit become ``json_parse_error``); the
+    default ``None`` skips the O(nodes) depth walk on the hot path — see
+    :mod:`jsl_engine.jsonio` for the documented divergence window.
+
+    Every executor batch asserts it resolved the same JSON parser
+    (orjson vs stdlib) as the driver, so a mixed-environment cluster
+    fails fast instead of mixing verdict semantics within one job.
+
+    ``curate=True`` is the fused validation + curation pass: ONE content
+    scan produces the JSL verdicts **and** every map-only curation
+    column, inserted after the key columns::
+
+        *key_cols, quality, lang_id, n_secrets, license, ok, ...
+
+    At 10^12 files the corpus scan dominates every map-only operator, so
+    quality scoring, language ID, secret counting and license
+    classification ride along with the validation pass instead of each
+    re-reading 100 TB: the curation columns are computed in the JVM
+    projection *before* the mapInArrow validation stage and pass through
+    the Arrow exchange as zero-copy key columns. The whole job is a
+    single stage — one scan, zero joins, zero shuffles (plan-gated in
+    ``tests/test_spark_validate.py``). The riders are scored on
+    ``text_col``, which may equal ``content_col`` (source-code corpora:
+    the code IS the validated content); ``key_cols[0]`` is their id.
+
+    Each rider column is the exact output of its standalone operator
+    (:func:`jsl_engine.text_ops.quality_score` /
+    :func:`~jsl_engine.text_ops.language_id`,
+    :func:`jsl_engine.redaction.secret_scan`,
+    :func:`jsl_engine.code_ops.license_scan`) — the fusion chains them
+    through their ``keep_cols`` passthroughs, so there is one
+    implementation of every scorer, not a fused copy.
+
+    ``lang_engine="arrow"`` swaps the language stage for the numpy
+    kernel (:func:`jsl_engine.lang_arrow.language_id_arrow` — ~2.5× the
+    JVM rate, BENCH/ANALYSIS.md round 4, parity-pinned in
+    tests/test_lang_arrow.py): the dominant rider becomes a second
+    Arrow stage in the same single-scan plan — still zero joins, zero
+    shuffles."""
+    return _validation_pass(
+        df, {}, schema, None,
+        content_col=content_col, key_cols=key_cols,
         strict_instance_semantics=strict_instance_semantics,
-        max_errors=max_errors, max_depth=max_depth,
-        with_sha256=with_sha256, max_nesting=max_nesting,
+        max_errors=max_errors, max_depth=max_depth, max_nesting=max_nesting,
+        curate=curate, text_col=text_col, lang_engine=lang_engine,
     )
 
 
@@ -464,124 +462,45 @@ def validate_multi(
     df: DataFrame,
     schemas: "dict[str, Schema]",
     *,
-    route_col: str = "lang",
+    route_col: "str | None" = "lang",
     default: "Schema | None" = None,
     content_col: str = "content",
     key_cols: tuple[str, ...] = ("repo", "path", "commit"),
     strict_instance_semantics: bool = False,
     max_errors: int = 0,
     max_depth: int = 32,
-    with_sha256: bool = True,
     max_nesting: int | None = None,
+    curate: bool = False,
+    text_col: str = "text",
+    lang_engine: str = "jvm",
 ) -> DataFrame:
     """Schema-registry validation: each row validates against the schema
     selected by its ``route_col`` value (per-language/per-dataset
     schemas — the multi-tenant shape a real validation service runs).
     Output adds ``schema_key`` (the route value) to
     :func:`validate_df`'s columns; rows whose route has no schema and no
-    ``default`` get ``ok=false, error='no_schema'``.
+    ``default`` get ``ok=false, error='no_schema'``. ``route_col=None``
+    (with an empty registry) is exactly :func:`validate_df` against
+    ``default``, without ``schema_key`` — so a caller switching between
+    the two modes makes one call.
 
     Execution shape: ONE broadcast carries every compiled plan, ONE
-    mapInArrow pass dispatches per batch — rows are grouped by route
-    value inside the batch and each group runs through the same
-    vectorized `_validate_batch` as the single-schema path, hitting the
+    mapInArrow pass groups each batch by route value and runs each group
+    through the vectorized `_validate_batch`, hitting the
     per-executor checker cache keyed by schema fingerprint. No
     per-schema scans, no join against a registry table, and adding a
-    schema is a broadcast refresh, not a plan change."""
-    spark = df.sparkSession
-    payloads = {k: plan_payload(s) for k, s in schemas.items()}
-    default_payload = plan_payload(default) if default is not None else None
-    bc = spark.sparkContext.broadcast((payloads, default_payload))
-    from jsl_engine import jsonio as _jsonio
+    schema is a broadcast refresh, not a plan change.
 
-    driver_parser = _jsonio.PARSER
-
-    cols = [F.col(c) for c in key_cols]
-    # sha256 is computed in-kernel (see validate_df — keeps the hash off
-    # the single-split side of a caller's fan-out exchange, r8)
-    pruned = df.select(
-        *cols,
-        F.col(route_col).cast("string").alias("schema_key"),
-        F.col(content_col).alias("__content"),
+    ``curate``, ``text_col`` and ``lang_engine`` fuse the curation
+    riders into the same scan exactly as in :func:`validate_df`; the
+    rider columns come before ``schema_key``."""
+    return _validation_pass(
+        df, schemas, default, route_col,
+        content_col=content_col, key_cols=key_cols,
+        strict_instance_semantics=strict_instance_semantics,
+        max_errors=max_errors, max_depth=max_depth, max_nesting=max_nesting,
+        curate=curate, text_col=text_col, lang_engine=lang_engine,
     )
-    out_schema = StructType(
-        [pruned.schema[c] for c in key_cols]
-        + [StructField("schema_key", StringType(), True)]
-        + [
-            StructField("ok", BooleanType(), False),
-            StructField("n_errors", IntegerType(), False),
-            StructField("error", StringType(), True),
-            StructField("content_sha256", StringType(), True),
-            RESULT_FIELDS[-1],
-        ]
-    )
-    key_list = list(key_cols)
-    n_keys = len(key_list)
-    vio_type = pa.list_(
-        pa.struct(
-            [pa.field("instance_path", pa.string(), nullable=False),
-             pa.field("schema_path", pa.string(), nullable=False)]
-        )
-    )
-
-    def run(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
-        import hashlib
-
-        from jsl_engine.jsonio import require_parser
-
-        require_parser(driver_parser)
-        payloads_local, default_local = bc.value
-        sha256 = hashlib.sha256
-        for batch in batches:
-            routes = batch.column(n_keys).to_pylist()
-            contents = batch.column(n_keys + 1).to_pylist()
-            n = len(contents)
-            ok = [False] * n
-            nerr = [0] * n
-            err: list = [None] * n
-            vio: list = [None] * n
-            idx_by_route: dict = {}
-            for i, r in enumerate(routes):
-                idx_by_route.setdefault(r, []).append(i)
-            for r, idxs in idx_by_route.items():
-                payload = payloads_local.get(r, default_local)
-                if payload is None:
-                    for i in idxs:
-                        err[i] = "no_schema"
-                    continue
-                o2, n2, e2, v2 = _validate_batch(
-                    [contents[i] for i in idxs], payload,
-                    strict_instance_semantics, max_errors, max_depth,
-                    max_nesting,
-                )
-                for j, i in enumerate(idxs):
-                    ok[i], nerr[i], err[i], vio[i] = o2[j], n2[j], e2[j], v2[j]
-            if with_sha256:
-                sha = pa.array(
-                    [
-                        None if c is None
-                        else sha256(c.encode()).hexdigest()
-                        for c in contents
-                    ],
-                    pa.string(),
-                )
-            else:
-                sha = pa.nulls(n, pa.string())
-            arrays = [batch.column(i) for i in range(n_keys)]
-            arrays.append(batch.column(n_keys))  # schema_key
-            arrays.append(pa.array(ok, pa.bool_()))
-            arrays.append(pa.array(nerr, pa.int32()))
-            arrays.append(pa.array(err, pa.string()))
-            arrays.append(sha)
-            arrays.append(pa.array(vio, vio_type))
-            yield pa.RecordBatch.from_arrays(
-                arrays,
-                key_list
-                + ["schema_key", "ok", "n_errors", "error",
-                   "content_sha256", "violations"],
-            )
-
-    return pruned.mapInArrow(run, out_schema)
 
 
 def verdicts(validated: DataFrame, key_cols: tuple[str, ...] = ("repo", "path", "commit")) -> DataFrame:

@@ -45,9 +45,10 @@ def run_quality_suite(
     The caller owns the lifetime of the returned frames; ``validated`` is
     cached — call ``report["validated"].unpersist()`` when done.
 
-    ``curate=True`` swaps the validation stage for the fused
-    validation+curation pass — ``validated`` (and hence ``verdicts``)
-    then also carries ``quality, lang_id, n_secrets, license`` per
+    ``curate=True`` makes the validation stage the fused
+    validation+curation pass (``validate_df(..., curate=True)``) —
+    ``validated`` (and hence ``verdicts``) then also carries
+    ``quality, lang_id, n_secrets, license`` per
     document at zero extra scans, and the summary gains
     ``avg_quality``/``docs_with_secret``. ``lang_engine="arrow"``
     forwards to the fused pass's numpy language kernel (same verdicts,
@@ -57,26 +58,16 @@ def run_quality_suite(
         "part_key", F.substring(F.col(key_cols[0]), 1, part_prefix_len)
     )
 
-    if curate:
-        from jsl_engine.spark_validate import validate_and_curate
-
-        validated = validate_and_curate(
-            keyed,
-            schema,
-            content_col=content_col,
-            text_col=content_col,
-            key_cols=("part_key",) + key_cols,
-            strict_instance_semantics=strict_instance_semantics,
-            lang_engine=lang_engine,
-        ).cache()
-    else:
-        validated = validate_df(
-            keyed,
-            schema,
-            content_col=content_col,
-            key_cols=("part_key",) + key_cols,
-            strict_instance_semantics=strict_instance_semantics,
-        ).cache()
+    validated = validate_df(
+        keyed,
+        schema,
+        content_col=content_col,
+        key_cols=("part_key",) + key_cols,
+        strict_instance_semantics=strict_instance_semantics,
+        curate=curate,
+        text_col=content_col,
+        lang_engine=lang_engine,
+    ).cache()
 
     report: dict = {
         "validated": validated,

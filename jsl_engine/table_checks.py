@@ -976,13 +976,6 @@ def group_topk_prune(
     return df.mapInArrow(prune, schema).select(*names)
 
 
-def top_k(df: DataFrame, order_col: str, k: int, *, group_cols: list[str] | None = None) -> DataFrame:
-    """Top-k rows by ``order_col`` descending (global TakeOrdered — no full
-    sort; Spark's physical plan is a per-partition top-k + driver merge)."""
-    out = df.orderBy(F.desc(order_col), *(group_cols or []))
-    return out.limit(k)
-
-
 def pending_partitions(all_parts: DataFrame, committed: DataFrame, key: str = "part_key") -> DataFrame:
     """Resume set: partitions not yet committed (anti-join on the manifest)."""
     return all_parts.select(key).distinct().join(

@@ -130,28 +130,30 @@ def test_null_text_is_und(spark):
 
 
 def test_fused_curate_pass_arrow_engine_parity(spark):
-    """validate_and_curate(lang_engine='arrow') must equal the JVM-engine
+    """validate_df(curate=True, lang_engine='arrow') must equal the JVM-engine
     fused pass row-for-row on a generated corpus (the composed-job
     surface of the kernel), and stay single-scan / zero-shuffle."""
     from jsl_engine.corpus import CODE_FILE_SCHEMA, generate_corpus
     from jsl_engine.schema import compile_schema
-    from jsl_engine.spark_validate import validate_and_curate
+    from jsl_engine.spark_validate import validate_df
 
     schema = compile_schema(CODE_FILE_SCHEMA)
     src = generate_corpus(spark, 2000, seed=5).cache()
     try:
         def rows(engine):
-            out = validate_and_curate(
+            out = validate_df(
                 src, schema, content_col="content", text_col="content",
-                key_cols=("repo", "path", "commit"), lang_engine=engine,
+                key_cols=("repo", "path", "commit"), curate=True,
+                lang_engine=engine,
             )
             return sorted(map(tuple, out.drop("violations").collect()))
 
         assert rows("arrow") == rows("jvm")
         plan = (
-            validate_and_curate(
+            validate_df(
                 src, schema, content_col="content", text_col="content",
-                key_cols=("repo", "path", "commit"), lang_engine="arrow",
+                key_cols=("repo", "path", "commit"), curate=True,
+                lang_engine="arrow",
             )._jdf.queryExecution().executedPlan().toString()
         )
         assert "Exchange" not in plan

@@ -432,8 +432,28 @@ def test_validate_multi_routes_per_schema(spark):
         (not r.ok) and r.error == "no_schema" and r.n_errors == 0 for r in rs
     )
 
+    # a frame on ONE mapped route equals the single-schema path on that
+    # schema
+    py = df.where(F.col("lang") == "py")
+    one = validate_multi(py, schemas, route_col="lang")
+    assert [r.schema_key for r in one.collect()] == ["py"] * 31
+    assert sorted(map(repr, one.drop("schema_key").collect())) == sorted(
+        map(repr, validate_df(py, schemas["py"]).collect())
+    )
 
-def test_validate_and_curate_single_pass_and_matches_standalone(spark, tmp_path):
+    # validate_df is the no-registry case of validate_multi: every row on
+    # the default, column for column once schema_key is dropped
+    single = validate_df(df, default)
+    via_multi = validate_multi(df, {}, route_col="lang", default=default)
+    assert via_multi.drop("schema_key").columns == single.columns
+    assert sorted(map(repr, via_multi.drop("schema_key").collect())) == sorted(
+        map(repr, single.collect())
+    )
+    with pytest.raises(ValueError, match="route_col"):
+        validate_multi(df, schemas, route_col=None)
+
+
+def test_validate_df_curate_single_pass_and_matches_standalone(spark, tmp_path):
     """The fused pass must (a) execute as ONE stage — one parquet scan,
     zero joins, zero Exchanges — and (b) produce per-column output
     identical to each standalone operator (the fusion chains the real
@@ -442,7 +462,6 @@ def test_validate_and_curate_single_pass_and_matches_standalone(spark, tmp_path)
 
     from jsl_engine.code_ops import license_scan
     from jsl_engine.redaction import secret_scan
-    from jsl_engine.spark_validate import validate_and_curate
     from jsl_engine.text_ops import language_id, quality_score
 
     rows = []
@@ -459,7 +478,9 @@ def test_validate_and_curate_single_pass_and_matches_standalone(spark, tmp_path)
     df = spark.read.parquet(src)
 
     schema = compile_schema({"properties": {"k": {"type": "uint32"}}})
-    fused = validate_and_curate(df, schema).drop("violations")
+    fused = validate_df(
+        df, schema, key_cols=("doc_id",), curate=True
+    ).drop("violations")
     plan = fused._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Scan parquet") == 1
     assert "Exchange" not in plan
@@ -511,7 +532,7 @@ def test_validation_job_curate_flag(spark, tmp_path):
     assert a == b
 
 
-def test_validate_and_curate_multi_single_pass_and_matches_surfaces(spark, tmp_path):
+def test_validate_multi_curate_single_pass_and_matches_surfaces(spark, tmp_path):
     """The registry+curation composition (round 5) must (a) stay ONE
     stage — one parquet scan, zero joins, zero Exchanges — and (b) equal
     the two existing surfaces column-for-column: verdicts+schema_key ==
@@ -520,10 +541,7 @@ def test_validate_and_curate_multi_single_pass_and_matches_surfaces(spark, tmp_p
     from pyspark.sql import Row
 
     from jsl_engine.redaction import secret_scan
-    from jsl_engine.spark_validate import (
-        validate_and_curate_multi,
-        validate_multi,
-    )
+    from jsl_engine.spark_validate import validate_multi
     from jsl_engine.text_ops import language_id, quality_score
 
     langs = ["python", "java", "js"]  # js is unmapped -> no_schema
@@ -541,8 +559,8 @@ def test_validate_and_curate_multi_single_pass_and_matches_surfaces(spark, tmp_p
     lax = compile_schema({})
     registry = {"python": strict, "java": lax}
 
-    fused = validate_and_curate_multi(
-        df, registry, route_col="lang", key_cols=("doc_id",)
+    fused = validate_multi(
+        df, registry, route_col="lang", key_cols=("doc_id",), curate=True
     ).drop("violations")
     plan = fused._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Scan parquet") == 1
@@ -665,3 +683,29 @@ def test_validate_multi_null_route(spark):
     assert out2["b"].ok is True and out2["b"].error is None
     assert out2["d"].ok is False and out2["d"].n_errors == 1  # -1 < uint32
     assert out2["b"].schema_key is None  # NULL route surfaces as NULL key
+
+    # a frame whose every row is NULL-routed, without and with a default
+    nulls = df.where(F.col("lang").isNull())
+    out3 = {r.path: r for r in validate_multi(
+        nulls, schemas, route_col="lang", key_cols=("repo", "path", "commit"),
+    ).collect()}
+    assert sorted(out3) == ["b", "d"]
+    assert all(not r.ok and r.error == "no_schema" and r.n_errors == 0
+               and r.schema_key is None for r in out3.values())
+    out4 = {r.path: r for r in validate_multi(
+        nulls, schemas, route_col="lang", key_cols=("repo", "path", "commit"),
+        default=default,
+    ).collect()}
+    assert out4["b"].ok is True and out4["b"].error is None
+    assert out4["d"].ok is False and out4["d"].n_errors == 1
+
+    # a frame whose every row is on one unmapped route, no default
+    unmapped = df.withColumn("lang", F.lit("zz"))
+    out5 = validate_multi(
+        unmapped, schemas, route_col="lang", key_cols=("repo", "path", "commit"),
+    ).collect()
+    assert len(out5) == 3 and all(
+        not r.ok and r.error == "no_schema" and r.n_errors == 0
+        and r.violations is None and r.schema_key == "zz"
+        and r.content_sha256 is not None for r in out5
+    )

@@ -665,7 +665,6 @@ def test_fused_curation_composes_with_streams(spark, tmp_path):
     from pyspark.sql import Row
 
     from jsl_engine.schema import compile_schema
-    from jsl_engine.spark_validate import validate_and_curate
 
     src = str(tmp_path / "fc_src")
     rows = [
@@ -685,7 +684,7 @@ def test_fused_curation_composes_with_streams(spark, tmp_path):
         .parquet(src)
     )
     q = (
-        validate_and_curate(stream_df, schema)
+        validate_df(stream_df, schema, key_cols=("doc_id",), curate=True)
         .drop("violations")
         .writeStream.format("memory")
         .queryName("fused_stream")
@@ -695,7 +694,9 @@ def test_fused_curation_composes_with_streams(spark, tmp_path):
     )
     q.awaitTermination(120)
     got = spark.sql("SELECT * FROM fused_stream").collect()
-    want = validate_and_curate(batch_df, schema).drop("violations").collect()
+    want = validate_df(
+        batch_df, schema, key_cols=("doc_id",), curate=True
+    ).drop("violations").collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
     assert sum(1 for r in got if r.n_secrets > 0) == 12
     assert sum(1 for r in got if not r.ok) == 16

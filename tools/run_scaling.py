@@ -166,7 +166,8 @@ north rule) — {'PASS' if out['pass'] else 'FAIL'}.
 Reproduce: `python tools/run_scaling.py --rows {args.rows} --n {args.n}`.
 Kernel microbenchmark: orjson parse ≈ 0.95 µs/doc (stdlib json ≈ 3.8) +
 compiled fast-check per doc, single-core; validation-only through Spark
-reaches ≈ 1.57M files/s at 32 cores (mapInArrow, sha256 JVM-side).
+reaches ≈ 1.57M files/s at 32 cores (mapInArrow; measured with sha256
+JVM-side, which moved into the Python kernel in round 8).
 
 Phase decomposition, the small-input transparency numbers and rejected
 optimizations are maintained by hand in `BENCH/ANALYSIS.md`.
