@@ -26,10 +26,13 @@ from __future__ import annotations
 
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 
+import pyarrow as pa
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     BinaryType,
     DoubleType,
@@ -76,6 +79,7 @@ MANIFEST_SCHEMA = StructType(
         StructField("schema_key", StringType(), True),
     ]
 )
+_MANIFEST_ARROW = to_arrow_schema(MANIFEST_SCHEMA)
 
 
 def registry_fingerprint(
@@ -213,13 +217,23 @@ def read_manifest(spark: SparkSession, manifest_path: str) -> DataFrame:
 
     Only the missing-path case maps to "nothing committed" — a corrupt or
     unreadable manifest must SURFACE, not silently re-validate the whole
-    corpus and append a second commit log on top of the bad one."""
+    corpus and append a second commit log on top of the bad one. The
+    empty frame is Arrow-backed (a ``LocalTableScan``), so a fresh root's
+    resume lookup launches no Spark job."""
     try:
         return spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_path)
     except AnalysisException as e:
         if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return spark.createDataFrame([], MANIFEST_SCHEMA)
+            return spark.createDataFrame(_MANIFEST_ARROW.empty_table(), MANIFEST_SCHEMA)
         raise
+
+
+def _overwrite_partitions(df: DataFrame, path: str) -> None:
+    """Dynamic partition overwrite as a write option: re-processing a
+    partition replaces exactly its files; the session conf is untouched."""
+    df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+        "part_key"
+    ).parquet(path)
 
 
 def committed_partitions(
@@ -380,18 +394,16 @@ def run_validation_job(
     # columnar re-scan that reads only the narrow columns it needs. No
     # cache: at 10^12-file scale the result does not fit in memory, and in
     # local mode a multi-GB cache next to 32 task threads is a GC storm.
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    validated.write.mode("overwrite").partitionBy("part_key").parquet(
-        f"{output_root}/validated"
-    )
+    _overwrite_partitions(validated, f"{output_root}/validated")
 
-    try:
-        done_data = spark.read.parquet(f"{output_root}/validated")
-    except AnalysisException:
-        # an empty source's write leaves only _SUCCESS (no footers to
-        # infer a schema from): a scheduled job over a not-yet-populated
-        # table must no-op cleanly, not crash after the write
-        done_data = spark.createDataFrame([], validated.schema)
+    # read back with the WRITTEN schema (part_key last, where the reader
+    # puts it): no inference job, part_key stays a string when every
+    # prefix is numeric ("0012", never 12), and an empty source's sink
+    # (only _SUCCESS, no footers) reads as an empty frame
+    cols = validated.schema
+    done_data = spark.read.schema(
+        StructType([f for f in cols if f.name != "part_key"] + [cols["part_key"]])
+    ).parquet(f"{output_root}/validated")
     if pending_keys is not None:
         done_data = done_data.where(F.col("part_key").isin(pending_keys))
 
@@ -401,8 +413,8 @@ def run_validation_job(
     # overlaps their stages (on a cluster they fill idle executors; in
     # local mode this saves about a third of the derive wall time).
     # Metrics are aggregated per part_key — a bounded-cardinality row set —
-    # and collected, so manifest totals below come from memory instead of
-    # re-reading the (ever-growing) manifest table twice.
+    # and collected as Arrow, so manifest totals below come from memory
+    # instead of re-reading the (ever-growing) manifest table twice.
     #
     # COMMIT ORDERING INVARIANT: the manifest append happens strictly
     # AFTER both derived outputs exist — only the metrics *computation*
@@ -411,12 +423,13 @@ def run_validation_job(
     # would skip it and the violations dataset would silently lack its
     # rows forever.
     committed_at = time.time()
-    metric_rows: list = []
+    tables: dict[str, pa.Table] = {}  # "summary" + registry-mode "detail"
 
     def write_violations() -> None:
-        violations(done_data, key_cols=("part_key",) + key_cols).write.mode(
-            "overwrite"
-        ).partitionBy("part_key").parquet(f"{output_root}/violations")
+        _overwrite_partitions(
+            violations(done_data, key_cols=("part_key",) + key_cols),
+            f"{output_root}/violations",
+        )
 
     def _verdict_aggs(with_hll: bool):
         aggs = [
@@ -456,7 +469,7 @@ def run_validation_job(
             .withColumn("schema_key", F.lit(None).cast("string"))
             .select([f.name for f in MANIFEST_SCHEMA.fields])
         )
-        metric_rows.extend(metrics.collect())
+        tables["summary"] = metrics.toArrow()
         if schemas is not None:
             # per-route detail rows: each carries the ROUTE's own schema
             # fingerprint; content_hll stays NULL so the summary row is
@@ -499,41 +512,28 @@ def run_validation_job(
                 .withColumn("content_sig", F.lit(None).cast("long"))
                 .select([f.name for f in MANIFEST_SCHEMA.fields])
             )
-            metric_rows.extend(detail.collect())
+            tables["detail"] = detail.toArrow()
 
-    import threading
-
-    failures: list[BaseException] = []
-
-    def guarded(fn) -> None:
-        try:
-            fn()
-        except BaseException as exc:  # propagate to the caller, never swallow
-            failures.append(exc)
-
-    threads = [
-        threading.Thread(target=guarded, args=(write_violations,)),
-        threading.Thread(target=guarded, args=(compute_metrics,)),
-    ]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    if failures:
-        raise failures[0]
-    # commit LAST: every derived output above succeeded
-    spark.createDataFrame(metric_rows, MANIFEST_SCHEMA).write.mode(
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        derived = [pool.submit(write_violations), pool.submit(compute_metrics)]
+    for d in derived:
+        d.result()  # a failed pass propagates: nothing is committed
+    # commit LAST: every derived output above succeeded. One Arrow table
+    # (summary and detail differ in nullability, so both take the
+    # manifest's) -> a local scan written as one file
+    commit = pa.concat_tables([t.cast(_MANIFEST_ARROW) for t in tables.values()])
+    spark.createDataFrame(commit, MANIFEST_SCHEMA).coalesce(1).write.mode(
         "append"
     ).parquet(manifest_path)
 
-    summary_rows = [r for r in metric_rows if r.schema_key is None]
+    summary = tables["summary"]
     return {
         "job_id": job_id,
         "partitions_pending": (
-            len(summary_rows) if pending_keys is None else len(pending_keys)
+            summary.num_rows if pending_keys is None else len(pending_keys)
         ),
         "partitions_committed": n_done,
-        "docs": sum(r.n_docs for r in summary_rows),
-        "docs_ok": sum(r.n_ok for r in summary_rows),
+        "docs": sum(summary["n_docs"].to_pylist()),
+        "docs_ok": sum(summary["n_ok"].to_pylist()),
         "fingerprint": fingerprint,
     }

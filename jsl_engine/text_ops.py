@@ -1823,15 +1823,23 @@ def connected_components(
                 # min-reachable-id label the distributed loop computes
                 lo, hi = (a, b) if (a <= b) else (b, a)
                 parent[hi] = lo
-        out = [(v, find(v)) for v in {x for r in rows for x in (r["src"], r["dst"])}]
+        ids = list({x for r in rows for x in (r["src"], r["dst"])})
         src_field = pairs.schema[a_col]
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
         from pyspark.sql.types import StructField as _SF, StructType as _ST
 
         schema = _ST([
             _SF("id", src_field.dataType, True),
             _SF("component", src_field.dataType, True),
         ])
-        return spark.createDataFrame(out, schema)
+        # an Arrow table, not a row list: a local scan instead of pickled
+        # rows through Python workers on every downstream action
+        labels = pa.Table.from_pydict(
+            {"id": ids, "component": [find(v) for v in ids]},
+            schema=to_arrow_schema(schema),
+        )
+        return spark.createDataFrame(labels, schema)
 
     labels = (
         edges.select(F.col("src").alias("id"))

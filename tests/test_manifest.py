@@ -460,10 +460,90 @@ def test_null_first_key_lands_in_sentinel_partition(spark, tmp_path):
 
 def test_empty_source_first_run_is_clean_noop(spark, tmp_path):
     """A scheduled job over a not-yet-populated table returns docs=0
-    instead of crashing on the schemaless empty sink."""
+    instead of crashing: its sink holds only _SUCCESS (no parquet footers)
+    and is read back with the written schema, so it reads as empty."""
     src = generate_corpus(spark, 100, seed=5, defect_rate=0.0,
                           partitions=2).where(F.lit(False))
     schema = compile_schema(CODE_FILE_SCHEMA)
     r = run_validation_job(spark, src, schema,
                            output_root=str(tmp_path / "empty"))
     assert r["docs"] == 0
+
+
+def test_all_numeric_part_key_stays_string(spark, tmp_path):
+    """Zero-padded numeric repo prefixes stay strings end to end: an
+    inferred read-back would turn part_key '0099' into 12/99, so the
+    manifest would record keys no resume lookup matches (every re-run
+    re-validates everything) and violations would land in part_key=99
+    while the verdicts sit in part_key=0099."""
+    from pyspark.sql import Row
+
+    source = spark.createDataFrame([
+        Row(repo="0012/x", path="a", commit="c", content='{"n": 1}'),
+        Row(repo="0099/y", path="b", commit="c", content='{"n": "bad"}'),
+    ])
+    schema = compile_schema({"properties": {"n": {"type": "int32"}}})
+    root = str(tmp_path / "numeric")
+    r1 = run_validation_job(spark, source, schema, output_root=root)
+    assert r1["partitions_pending"] == 2 and r1["docs"] == 2
+    keys = {r.part_key for r in read_manifest(spark, f"{root}/manifest").collect()}
+    assert keys == {"0012", "0099"}
+    assert (tmp_path / "numeric" / "violations" / "part_key=0099").is_dir()
+    assert (tmp_path / "numeric" / "validated" / "part_key=0099").is_dir()
+
+    r2 = run_validation_job(spark, source, schema, output_root=root)
+    assert r2["partitions_pending"] == 0 and r2["partitions_committed"] == 2
+
+
+def test_job_leaves_session_overwrite_mode_alone(spark, corpus, tmp_path):
+    """The sink writes overwrite dynamically per write; the caller's
+    session-wide partitionOverwriteMode is not touched."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        schema = compile_schema(CODE_FILE_SCHEMA)
+        run_validation_job(spark, corpus, schema, output_root=str(tmp_path / "o"))
+        assert spark.conf.get(key).lower() == "static"
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_absent_manifest_lookup_launches_no_spark_job(spark, tmp_path):
+    """A fresh root's resume lookup is answered from an Arrow-backed empty
+    frame (a local scan): collecting it registers no Spark job."""
+    sc = spark.sparkContext
+    group = "absent-manifest-lookup"
+    sc.setJobGroup(group, "committed_partitions on a missing manifest")
+    try:
+        rows = committed_partitions(
+            spark, str(tmp_path / "missing" / "manifest"), "fp"
+        ).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert rows == []
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_each_commit_writes_one_manifest_file(spark, corpus, tmp_path):
+    """The manifest append is one local Arrow table written as one file:
+    a single-schema commit and a registry commit (summary + per-route
+    detail rows) leave exactly one parquet file each."""
+    full = compile_schema(CODE_FILE_SCHEMA)
+    root = tmp_path / "onefile"
+    s1 = run_validation_job(spark, corpus, full, output_root=str(root))
+    s2 = run_validation_job(
+        spark, corpus, None, output_root=str(root),
+        schemas={"python": full, "java": compile_schema({})},
+        route_col="lang", default_schema=full,
+    )
+    assert s1["partitions_pending"] > 0 and s2["partitions_pending"] > 0
+    files = sorted((root / "manifest").glob("*.parquet"))
+    assert len(files) == 2
+    m = read_manifest(spark, str(root / "manifest"))
+    assert m.select("job_id").distinct().count() == 2
+    assert m.where("schema_key IS NOT NULL").count() > 0
+    summary = m.where("schema_key IS NULL")
+    assert summary.where(F.col("job_id") == s2["job_id"]).agg(
+        F.sum("n_docs")).first()[0] == s2["docs"] == 1200
