@@ -621,18 +621,6 @@ def ngram_jaccard(
     )
 
 
-#: Candidate-pair count at or below which the verify tail keeps the
-#: round-7 JVM string-array form: its per-pair array<string> set ops are
-#: slow per unit but its plan is two joins with NO extra kernel stages,
-#: so at a few hundred pairs the hashed path's fixed costs (two gram
-#: broadcast builds + the intersection kernel stage) dominate — measured
-#: r8 at sf0.1 minhash (256 pairs): 2.06 s string vs 2.32 s hashed, and
-#: the reverse by 9 s at 1.1M pairs. The pair list is ALREADY
-#: checkpointed when the count runs, so the switch costs one ~40 ms
-#: metadata-light job (the connected_components short-circuit pattern).
-VERIFY_SMALL_PAIRS = 20_000
-
-
 def verified_jaccard_pairs(
     df: DataFrame,
     pairs: DataFrame,
@@ -640,7 +628,6 @@ def verified_jaccard_pairs(
     id_col: str = "doc_id",
     n: int = 5,
     threshold: float = 0.5,
-    small_pairs: int = VERIFY_SMALL_PAIRS,
 ) -> DataFrame:
     """Exact-Jaccard verification tail for candidate-pair generators:
     ``id_a, id_b, jaccard`` with exact word-``n``-gram Jaccard ≥
@@ -672,30 +659,25 @@ def verified_jaccard_pairs(
     ~2 s. The final Jaccard division runs in-plan on the counts, so
     float semantics match ``size(intersect)/size(union)`` exactly.
 
-    Candidate sets at or below ``small_pairs`` keep the round-7 JVM
-    string-array form instead (see :data:`VERIFY_SMALL_PAIRS` — the
-    hashed path's fixed stage costs dominate there); both paths produce
-    the same rows (string-gram vs 64-bit-hash counts are equal absent
-    the 2⁻⁶⁴ collision), pinned against each other in pytest, and the
-    switch reads the count of the already-checkpointed pair list.
-
     The gram-table broadcast is bounded by the CANDIDATE set (the same
     boundedness assumption as the id-set broadcast semi-join); for a
-    pathological candidate set too large to broadcast, drop the two
-    ``F.broadcast`` hints below and the joins degrade to sort-merge
-    with the same result.
+    pathological candidate set too large to broadcast, drop the
+    ``F.broadcast`` hint below and both joins degrade to sort-merge with
+    the same result.
 
     EAGER: the candidate pairs are materialized with an eager
     ``localCheckpoint`` — they are small by the near-dup-rate assumption
-    and feed THREE plan branches (the id-set derivation, the broadcast,
-    and the verify join), each of which would otherwise re-run the
-    upstream candidate generator; checkpointing also truncates the
-    lineage so the verify plan stays flat. The gram table is NOT
-    checkpointed: the two broadcast builds re-run the (cheap, hashed)
-    kernel, which measured consistently faster than paying a
-    materialization job first (r8: 5.4 s → 4.2 s at 1.1M candidate
-    pairs, 3.6 s → 2.4 s at 2.5k — same lesson as round 4's rejected
-    shingle-table cache)."""
+    and feed THREE plan branches (the two id-set selects and the verify
+    join), each of which would otherwise re-run the upstream candidate
+    generator; checkpointing also truncates the lineage so the verify
+    plan stays flat. Building the tail launches no other job. The gram
+    table is NOT checkpointed: it is built and broadcast once, and both
+    joins (``ga`` for ``id_a``, ``gb`` for ``id_b``) probe that one
+    broadcast (the second is a ``ReusedExchange``). Re-running the
+    cheap hashed kernel inside the action measured consistently faster
+    than paying a materialization job first (r8: 5.4 s → 4.2 s at 1.1M
+    candidate pairs, 3.6 s → 2.4 s at 2.5k — same lesson as round 4's
+    rejected shingle-table cache)."""
     from jsl_engine.text_ops_arrow import gram_hash_table, pair_intersection_counts
 
     p = pairs.select("id_a", "id_b").localCheckpoint(eager=True)
@@ -723,40 +705,20 @@ def verified_jaccard_pairs(
         .where(F.col(text_col).isNotNull())
         .repartition(spread)
     )
-    if p.count() <= small_pairs:
-        # small-candidate path: the round-7 string-array verify — two
-        # joins, zero extra kernel stages (identical rows; see above)
-        sh = sub.select(
-            F.col(id_col),
-            F.array_distinct(shingles(F.col(text_col), n)).alias("sh"),
-        )
-        a = sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
-        b = sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
-        return (
-            p.join(a, "id_a")
-            .join(b, "id_b")
-            .select(
-                "id_a",
-                "id_b",
-                F.round(
-                    F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-                    / F.size(F.array_union("sh_a", "sh_b")),
-                    6,
-                ).alias("jaccard"),
-            )
-            .where(F.col("jaccard") >= threshold)
-        )
-    grams = gram_hash_table(sub, text_col, id_col, n)
-    a = grams.select(
-        F.col(id_col).alias("id_a"), F.col("grams").alias("g_a"),
-        F.col("n_grams").alias("n_a"),
-    )
-    b = grams.select(
-        F.col(id_col).alias("id_b"), F.col("grams").alias("g_b"),
-        F.col("n_grams").alias("n_b"),
-    )
+    # ONE broadcast gram table, joined under two aliases: the two join
+    # branches are the same plan, so Spark builds and broadcasts it once
+    # and the second branch reads it back as a ReusedExchange
+    grams = F.broadcast(gram_hash_table(sub, text_col, id_col, n))
+    ga, gb = grams.alias("ga"), grams.alias("gb")
     counted = pair_intersection_counts(
-        p.join(F.broadcast(a), "id_a").join(F.broadcast(b), "id_b")
+        p.alias("p")
+        .join(ga, F.col("p.id_a") == F.col(f"ga.{id_col}"))
+        .join(gb, F.col("p.id_b") == F.col(f"gb.{id_col}"))
+        .select(
+            "p.id_a", "p.id_b",
+            F.col("ga.grams").alias("g_a"), F.col("ga.n_grams").alias("n_a"),
+            F.col("gb.grams").alias("g_b"), F.col("gb.n_grams").alias("n_b"),
+        )
     )
     return (
         counted.select(

@@ -43,10 +43,13 @@ def test_verified_jaccard_tail_plan_shape(spark):
     """The exact-verify tail's scale-critical physical properties: the
     corpus semi-join against the candidate id set must be a BROADCAST
     join (no full-corpus shuffle to meet a few thousand ids), and an
-    explicit round-robin exchange must sit before the shingling HOF (the
+    explicit round-robin exchange must sit before the gram kernel (the
     candidate subset is small — without it, scan splits or AQE
-    coalescing serialize the interpreter-bound shingling on one core;
-    measured 6.8s -> ~0.5s at sf0.1)."""
+    coalescing serialize the per-doc kernel on one core; measured
+    6.8s -> ~0.5s at sf0.1). The gram table is built and broadcast ONCE
+    (both pair-side joins probe it; the second is a ReusedExchange),
+    building the tail launches no job beyond the pair checkpoint's, and
+    an empty candidate set yields an empty result."""
     from pyspark.sql import Row, functions as F
 
     from jsl_engine.text_ops import verified_jaccard_pairs
@@ -58,13 +61,46 @@ def test_verified_jaccard_tail_plan_shape(spark):
     pairs = spark.createDataFrame(
         [Row(id_a=2 * i, id_b=2 * i + 1) for i in range(50)]
     )
-    out = verified_jaccard_pairs(docs, pairs, threshold=0.0)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs_of(group, build):
+        sc.setJobGroup(group, group)
+        try:
+            built = build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return built, len(tracker.getJobIdsForGroup(group))
+
+    _, checkpoint_jobs = jobs_of(
+        "verify-tail-bare-checkpoint",
+        lambda: pairs.select("id_a", "id_b").localCheckpoint(eager=True),
+    )
+    out, tail_jobs = jobs_of(
+        "verify-tail-build",
+        lambda: verified_jaccard_pairs(docs, pairs, threshold=0.0),
+    )
+    assert tail_jobs == checkpoint_jobs, (tail_jobs, checkpoint_jobs)
+
     plan = out._sc._jvm.PythonSQLUtils.explainString(
         out._jdf.queryExecution(), "formatted"
     )
     assert "BroadcastHashJoin" in plan and "LeftSemi" in plan, plan[:3000]
     assert "RoundRobinPartitioning" in plan, plan[:3000]
-    assert out.count() == 50
+    assert len(out.collect()) == 50
+    # after execution the adaptive plan is final: the semi-join's id set
+    # and the gram table are the only two broadcasts built, and the
+    # second gram-table join reuses the first one's exchange
+    final = out._sc._jvm.PythonSQLUtils.explainString(
+        out._jdf.queryExecution(), "formatted"
+    )
+    tree = final.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    assert tree.count("BroadcastExchange") == 2, final[:4000]
+    assert tree.count("ReusedExchange") == 1, final[:4000]
+
+    empty = pairs.where(F.lit(False))
+    assert verified_jaccard_pairs(docs, empty, threshold=0.0).count() == 0
 
 
 def test_fan_out_probes_only_shuffle_free_plans(spark, tmp_path):

@@ -2361,39 +2361,54 @@ def test_lsh_recall_report_measures_banding(spark):
     assert bad.recall < mid.recall and mid.recall < good.recall
 
 
-def test_verified_jaccard_small_and_hashed_paths_agree(spark):
-    """The r8 size-gated verify: the small-candidate JVM string-array
-    path and the hashed-gram broadcast path must emit IDENTICAL rows on
-    the same candidate set (string-gram counts == 64-bit-hash counts
-    absent a 2^-64 collision), including the duplicate-heavy and
-    short-doc clip regimes and threshold 0."""
-    docs = spark.createDataFrame(
-        [
-            (1, "alpha beta gamma delta epsilon zeta eta theta"),
-            (2, "alpha beta gamma delta epsilon zeta eta IOTA"),
-            (3, "one two three four five six seven eight nine"),
-            (4, "one two three four five six seven eight nine"),
-            (5, "short doc"),
-            (6, "short doc"),
-            (7, None),
-        ],
-        "doc_id long, text string",
-    )
+def test_verified_jaccard_matches_ngram_jaccard(spark):
+    """The hashed-gram verify tail emits exactly the rows of the
+    string-gram reference :func:`ngram_jaccard` filtered at the
+    threshold (64-bit-hash counts == string-gram counts absent a 2^-64
+    collision), across the duplicate-heavy, short-doc, empty,
+    whitespace-only, case/punctuation and non-ASCII regimes, at
+    threshold 0 and 0.5. A pair touching a NULL doc is never emitted."""
+    texts = [
+        (1, "alpha beta gamma delta epsilon zeta eta theta"),
+        (2, "alpha beta gamma delta epsilon zeta eta IOTA"),
+        (3, "one two three four five six seven eight nine"),
+        (4, "one two three four five six seven eight nine"),
+        (5, "short doc"),
+        (6, "short doc"),
+        (7, None),
+        (8, ""),
+        (9, "   \t\n  "),
+        (10, "Alpha Beta Gamma Delta Epsilon Zeta Eta Theta"),
+        (11, "alpha, beta; gamma delta! epsilon zeta eta theta."),
+        (12, "die straße ist lang und die Strasse ist breit heute"),
+        (13, "die STRASSE ist lang und die straße ist breit heute"),
+        (14, "σοφός λόγος σοφίας ὁδός ἐστιν ἀεὶ καὶ πάντως"),
+        (15, "ΣΟΦΟΣ ΛΟΓΟΣ ΣΟΦΙΑΣ ὁδός ἐστιν ἀεὶ καὶ πάντως"),
+        (16, "İstanbul ılık ıslak İzmir istanbul Izmir ılık ıslak"),
+        (17, "istanbul ılık ıslak izmir İstanbul Izmir ılık ıslak"),
+        (18, "東京 大阪 京都 名古屋 札幌 福岡 神戸 横浜"),
+        (19, "東京 大阪 京都 名古屋 札幌 福岡 神戸 川崎"),
+        (20, "東京大阪京都名古屋札幌福岡神戸横浜"),
+    ]
+    docs = spark.createDataFrame(texts, "doc_id long, text string")
     pairs = spark.createDataFrame(
-        [(1, 2), (3, 4), (5, 6), (1, 7), (1, 3)], "id_a long, id_b long"
+        [(1, 2), (3, 4), (5, 6), (1, 7), (1, 3),
+         (8, 9), (8, 5), (9, 9), (1, 10), (1, 11), (10, 11),
+         (12, 13), (14, 15), (16, 17), (18, 19), (18, 20), (19, 20),
+         (8, 7), (12, 12)],
+        "id_a long, id_b long",
     )
+    # the reference scores NULL docs as empty gram sets; the tail's
+    # contract drops them, so they leave the reference's input
+    ref = T.ngram_jaccard(docs.where("text IS NOT NULL"), pairs, n=5)
     for thr in (0.0, 0.5):
-        small = {
+        got = {
             tuple(r)
             for r in T.verified_jaccard_pairs(
-                docs, pairs, threshold=thr, small_pairs=10**9
+                docs, pairs, threshold=thr
             ).collect()
         }
-        hashed = {
-            tuple(r)
-            for r in T.verified_jaccard_pairs(
-                docs, pairs, threshold=thr, small_pairs=0
-            ).collect()
-        }
-        assert small == hashed, (thr, small ^ hashed)
-    assert (5, 6, 1.0) in small and (1, 7, 1.0) not in small
+        want = {tuple(r) for r in ref.where(f"jaccard >= {thr}").collect()}
+        assert got == want, (thr, got ^ want)
+        assert not {(a, b) for a, b, _ in got} & {(1, 7), (8, 7)}
+    assert (5, 6, 1.0) in got and (1, 7, 1.0) not in got
