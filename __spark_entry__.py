@@ -10,8 +10,10 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from jsl_engine import table_checks as tc
 from jsl_engine.sampling import (
@@ -52,7 +54,13 @@ _FAN_OUT_TABLES = frozenset({"documents"})
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    # the schema comes from the file footer, read on the driver: an
+    # unpinned read launches a schema-inference job (~0.1 s) per table.
+    # prefer_timestamp_ntz maps naive timestamps to timestamp_ntz, as
+    # Spark's own inference does (orders, lineitem, events)
+    path = f"{sf_dir}/{name}.parquet"
+    schema = from_arrow_schema(pq.read_schema(path), prefer_timestamp_ntz=True)
+    df = spark.read.schema(schema).parquet(path)
     if name in _FAN_OUT_TABLES:
         from jsl_engine.partitioning import fan_out
 

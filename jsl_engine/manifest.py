@@ -29,7 +29,6 @@ import uuid
 from concurrent.futures import ThreadPoolExecutor
 
 import pyarrow as pa
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -219,13 +218,14 @@ def read_manifest(spark: SparkSession, manifest_path: str) -> DataFrame:
     unreadable manifest must SURFACE, not silently re-validate the whole
     corpus and append a second commit log on top of the bad one. The
     empty frame is Arrow-backed (a ``LocalTableScan``), so a fresh root's
-    resume lookup launches no Spark job."""
-    try:
-        return spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_path)
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return spark.createDataFrame(_MANIFEST_ARROW.empty_table(), MANIFEST_SCHEMA)
-        raise
+    resume lookup launches no Spark job. Absence is a Hadoop
+    ``FileSystem.exists`` check (~4 ms), not a caught ``PATH_NOT_FOUND``
+    from the reader (~0.1 s)."""
+    sc = spark.sparkContext
+    path = sc._jvm.org.apache.hadoop.fs.Path(manifest_path)
+    if not path.getFileSystem(sc._jsc.hadoopConfiguration()).exists(path):
+        return spark.createDataFrame(_MANIFEST_ARROW.empty_table(), MANIFEST_SCHEMA)
+    return spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_path)
 
 
 def _overwrite_partitions(df: DataFrame, path: str) -> None:

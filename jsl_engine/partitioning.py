@@ -96,6 +96,20 @@ def fan_out(df: DataFrame, target: int | None = None) -> DataFrame:
     return df.repartition(t)
 
 
+def hash_spread(df: DataFrame, *cols: str) -> DataFrame:
+    """Hash-partition ``df`` on ``cols`` into ``spark.sql.shuffle.partitions``
+    partitions: the exchange a window or join on ``cols`` would plan
+    anyway, with its count made explicit so that AQE cannot coalesce it.
+
+    AQE sizes coalesced partitions by shuffle bytes, so a narrow exchange
+    whose cost sits in the operators after it (a bucket window and a
+    self-join on the same keys) can end up as one task on one core.
+    Those operators reuse this partitioning, so the plan keeps its
+    exchange count."""
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return df.repartition(n, *cols)
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "jsl-engine",

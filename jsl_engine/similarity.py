@@ -32,7 +32,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from jsl_engine.partitioning import fan_out
+from jsl_engine.partitioning import fan_out, hash_spread
 from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
 
@@ -819,7 +819,11 @@ def embedding_near_duplicates(
     banded rows carry only ``(id, band, bucket)`` — vectors are fetched
     back by id for the exact-cosine verify AFTER the candidate pairs are
     deduplicated across bands, so the wide embedding column never rides
-    the candidate join.
+    the candidate join. The band exchange has an explicit
+    ``spark.sql.shuffle.partitions`` count
+    (:func:`jsl_engine.partitioning.hash_spread`): AQE merged the
+    sandbox-sized band exchange into one task, which ran the window and
+    the self-join on one core.
 
     Pass ``dim`` (the embedding width) to keep plan construction
     action-free; if omitted it is probed with a one-row job."""
@@ -871,7 +875,8 @@ def embedding_near_duplicates(
     )
     w = Window.partitionBy("band", "bucket")
     v = (
-        v.withColumn("__bucket_n", F.count(F.lit(1)).over(w))
+        hash_spread(v, "band", "bucket")
+        .withColumn("__bucket_n", F.count(F.lit(1)).over(w))
         .where(F.col("__bucket_n") <= max_bucket)
         .drop("__bucket_n")
     )

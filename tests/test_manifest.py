@@ -526,6 +526,20 @@ def test_absent_manifest_lookup_launches_no_spark_job(spark, tmp_path):
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
+def test_unreadable_manifest_raises(spark, tmp_path):
+    """Only an ABSENT manifest reads as "nothing committed": a manifest
+    directory holding a file that is not Parquet must raise, never come
+    back as an empty frame (that would re-validate the whole corpus and
+    append a second commit log on top of the bad one)."""
+    manifest = tmp_path / "bad" / "manifest"
+    manifest.mkdir(parents=True)
+    (manifest / "part-00000.parquet").write_text("not a parquet file\n")
+    with pytest.raises(Exception, match="not a Parquet file"):
+        read_manifest(spark, str(manifest)).collect()
+    with pytest.raises(Exception, match="not a Parquet file"):
+        committed_partitions(spark, str(manifest), "fp").collect()
+
+
 def test_each_commit_writes_one_manifest_file(spark, corpus, tmp_path):
     """The manifest append is one local Arrow table written as one file:
     a single-schema commit and a registry commit (summary + per-route

@@ -1,6 +1,9 @@
 """Physical-plan property gate: pushdown, pruning, broadcast, partial aggs
 must survive refactors (tools/explain_plans.py as a test)."""
 
+#: The shipped sf tables (TESTDATA.md).
+TESTDATA = "/root/testdata"
+
 
 def test_plan_properties():
     from tools.explain_plans import main
@@ -101,6 +104,109 @@ def test_verified_jaccard_tail_plan_shape(spark):
 
     empty = pairs.where(F.lit(False))
     assert verified_jaccard_pairs(docs, empty, threshold=0.0).count() == 0
+
+
+def _band_exchange_reads(final_plan: str) -> list[tuple[str, str]]:
+    """(exchange line, the line two levels up) for every (band, bucket)
+    exchange in an executed adaptive plan's final tree: the grandparent
+    is what reads the exchange's query stage (an ``AQEShuffleRead``
+    when AQE coalesced it)."""
+    tree = final_plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    nodes = []  # (depth, text) in tree order
+    for line in tree.splitlines():
+        body = line.lstrip(" :+-")
+        if body:
+            nodes.append((len(line) - len(body), body))
+    out = []
+    for i, (depth, text) in enumerate(nodes):
+        if "hashpartitioning(band" not in text:
+            continue
+        ancestors = []
+        for d, t in reversed(nodes[:i]):
+            if d < (ancestors[-1][0] if ancestors else depth):
+                ancestors.append((d, t))
+                if len(ancestors) == 2:
+                    break
+        assert len(ancestors) == 2, tree[:4000]
+        out.append((text, ancestors[1][1]))
+    return out
+
+
+def test_band_exchange_keeps_shuffle_partitions(spark):
+    """The LSH band stage (bucket-size window + self-join on (band,
+    bucket)) runs on ``spark.sql.shuffle.partitions`` tasks: its
+    exchange is an explicit-count repartition, so after execution AQE
+    has not coalesced it (no ``AQEShuffleRead`` reads it). Left to AQE,
+    a sandbox-sized band exchange was merged into one task and the
+    window and self-join ran on one core. Both banded near-dup
+    operators (text MinHash and embedding SRP) are pinned."""
+    import random
+
+    from pyspark.sql import Row
+
+    from jsl_engine.similarity import embedding_near_duplicates
+    from jsl_engine.text_ops import lsh_candidate_pairs, minhash_signatures
+
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    docs = spark.createDataFrame(
+        [Row(doc_id=i, text=f"alpha beta gamma delta {i % 40} epsilon {i % 7} eta")
+         for i in range(400)]
+    )
+    sigs = minhash_signatures(docs, "text", "doc_id", 32, 3).cache()
+    sigs.count()
+    rng = random.Random(7)
+    vecs = spark.createDataFrame(
+        [Row(vec_id=i, embedding=[rng.gauss(0, 1) for _ in range(8)])
+         for i in range(400)]
+    )
+    try:
+        for out in (
+            lsh_candidate_pairs(sigs, bands=8, num_hashes=32),
+            embedding_near_duplicates(vecs, threshold=0.9, n_planes=4, dim=8),
+        ):
+            out.collect()
+            final = out._jdf.queryExecution().executedPlan().toString()
+            reads = _band_exchange_reads(final)
+            assert reads, final[:4000]
+            for exchange, reader in reads:
+                assert f", {n}), " in exchange, exchange
+                assert "AQEShuffleRead" not in reader, (reader, final[:4000])
+    finally:
+        sigs.unpersist()
+
+
+def test_registry_table_read_launches_no_job(spark):
+    """``__spark_entry__._t`` pins each table's schema from its Parquet
+    footer (read on the driver), so building a registry table frame
+    launches no Spark job; an unpinned read runs a schema-inference job
+    per table."""
+    import __spark_entry__ as em
+    from tools.check_oracle import TABLES
+
+    sc = spark.sparkContext
+    group = "registry-table-read"
+    sc.setJobGroup(group, "_t over every registry table")
+    try:
+        for name in TABLES:
+            em._t(spark, f"{TESTDATA}/sf0.01", name)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_registry_table_schema_matches_inferred(spark):
+    """The footer-pinned schema equals Spark's own inferred schema for
+    every registry table at every scale, naive timestamps included
+    (``timestamp_ntz``, not the session-zoned ``timestamp``)."""
+    import __spark_entry__ as em
+    from tools.check_oracle import TABLES
+
+    for sf in ("sf0.001", "sf0.01", "sf0.1"):
+        sf_dir = f"{TESTDATA}/{sf}"
+        for name in TABLES:
+            inferred = spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
+            assert em._t(spark, sf_dir, name).schema == inferred, (sf, name)
 
 
 def test_fan_out_probes_only_shuffle_free_plans(spark, tmp_path):

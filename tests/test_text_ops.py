@@ -2398,9 +2398,7 @@ def test_verified_jaccard_matches_ngram_jaccard(spark):
          (8, 7), (12, 12)],
         "id_a long, id_b long",
     )
-    # the reference scores NULL docs as empty gram sets; the tail's
-    # contract drops them, so they leave the reference's input
-    ref = T.ngram_jaccard(docs.where("text IS NOT NULL"), pairs, n=5)
+    ref = T.ngram_jaccard(docs, pairs, n=5)
     for thr in (0.0, 0.5):
         got = {
             tuple(r)
