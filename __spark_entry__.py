@@ -689,9 +689,10 @@ def q_winnow_overlap_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact verify makes the loose net free of precision cost) filtered
     by exact word-5-gram Jaccard ≥ 0.5. Fully oracled: the DuckDB
     inverted-index oracle computes ALL pairs at the threshold, so a
-    fingerprint recall miss is a hash mismatch. The JVM winnowing kernel
-    (:func:`jsl_engine.text_ops.fingerprint_overlap_pairs`) stays
-    pytest-pinned for the winnowing guarantee itself."""
+    fingerprint recall miss is a hash mismatch. The winnowing guarantee
+    of the kernel itself
+    (:func:`jsl_engine.text_ops_arrow.winnow_flat_arrow`) is
+    pytest-pinned."""
     from jsl_engine.text_ops_arrow import winnow_overlap_exact_arrow
 
     # max_bucket lifted for the unqualified oracle contract (see minhash)
@@ -1316,7 +1317,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     correctness gate covers the first 50 in insertion order, so the
     flagship ``jsl_*`` queries lead and every row stays green. Operators
     consolidated out of the registry (still library API + pytest):
-    the JVM near-dup twins (Arrow kernels are the headline; JVM pinned
+    the JVM MinHash twin (the Arrow kernel is the headline; JVM pinned
     equivalent in pytest), the standalone binned drift ops (surface =
     ``drift_report_events``), ``ngram_jaccard`` (its verify tail runs
     inside the minhash/winnow headline queries with the identical

@@ -145,7 +145,9 @@ def main() -> int:
     out_dir = Path(args.output) if args.output else Path(
         tempfile.mkdtemp(prefix="media_job_")
     )
-    spark = get_spark(f"local[{args.cpus}]")
+    spark = get_spark(
+        f"local[{args.cpus}]", shuffle_partitions=max(8, args.cpus)
+    )
     t0 = time.time()
 
     if args.input:

@@ -5,8 +5,9 @@ lineage/metrics to a manifest table and resume idempotently from the last
 committed partition. The reference has no notion of this (single-process
 library); the design is engine-native:
 
-* work is partitioned by a bounded-cardinality **partition key** (repo
-  prefix — :func:`jsl_engine.partitioning.partition_key`);
+* work is partitioned by a bounded-cardinality **partition key** (a
+  fixed-width prefix of the first key column, derived inline in
+  :func:`run_validation_job`);
 * each completed partition appends one manifest row carrying lineage
   (schema fingerprint, job id, config) and metrics (docs, ok/bad,
   violations, parse/depth errors);
@@ -264,7 +265,6 @@ def run_validation_job(
     content_col: str = "content",
     part_prefix_len: int = 4,
     strict_instance_semantics: bool = False,
-    repartition: int | None = None,
     curate: bool = False,
     lang_engine: str = "jvm",
     schemas: "dict[str, Schema] | None" = None,
@@ -366,12 +366,6 @@ def run_validation_job(
                 "docs": 0,
             }
         todo = keyed.where(F.col("part_key").isin(pending_keys))
-    if repartition:
-        # balanced exchange before the Python stage: salt on full key so a
-        # monorepo prefix cannot pin a straggler task
-        from jsl_engine.partitioning import repartition_salted
-
-        todo = repartition_salted(todo, repartition, cols=key_cols)
 
     # one validation pass for all four modes: a registry job routes on
     # route_col, a single-schema job is the no-route case of the same

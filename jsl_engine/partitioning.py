@@ -2,15 +2,16 @@
 
 The reference is single-threaded and has no notion of partitioning; this
 module is pure engine infrastructure mandated by the north rule: explicit
-repartitioning before the validation map and the stats shuffle, repo-prefix
-salting to defuse monorepo skew, and AQE for runtime re-planning.
+repartitioning before per-row-expensive kernels and narrow band stages,
+bucketed writes for co-located joins, and AQE for runtime re-planning.
 
 Scale notes (the design target is ~10^12 files on a multi-executor
 cluster; the sandbox runs local[N]):
 
 * the validation map is embarrassingly parallel — throughput scales with
-  cores as long as input partitions are balanced; salting decouples
-  partition size from repo size so one monorepo cannot stall a stage;
+  cores as long as input partitions are balanced (:func:`fan_out` for
+  under-split scans); no key salting is applied, since no run has yet
+  measured the skew it would treat;
 * AQE (adaptive.enabled) coalesces small shuffle partitions and splits
   skewed ones at runtime, which covers the join/agg stages;
 * Arrow batch size is capped so pandas batches stay cache-friendly inside
@@ -25,7 +26,6 @@ import zipfile
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 #: Defaults applied to every session the engine builds. Each is a public
 #: Spark conf; values are tuned for the validation workload.
@@ -119,10 +119,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's conf.
 
-    ``shuffle_partitions`` defaults to 2× the local core count — enough
-    tasks to keep every core busy through AQE coalescing without drowning
-    the scheduler at sandbox scale. On a real cluster, pass an explicit
-    value sized to executors × cores.
+    ``shuffle_partitions=None`` leaves ``spark.sql.shuffle.partitions``
+    unset, so Spark's own default (200) applies. Every job, bench and
+    tool in this repo passes an explicit count (2× the local cores or
+    ``max(8, cpus)``), because the ``hash_spread`` band stages plan
+    exactly that many tasks. On a real cluster, pass a value sized to
+    executors × cores.
 
     ``driver_memory`` sizes the single local-mode JVM (Spark's 1g default
     OOMs once cached validation output plus shuffle buffers exceed the
@@ -166,47 +168,6 @@ def ship_package(spark: SparkSession) -> None:
                 zf.write(py, f"jsl_engine/{py.name}")
     sc.addPyFile(zip_path)
     sc.setLocalProperty(marker, "1")
-
-
-def with_salt(
-    df: DataFrame,
-    cols: tuple[str, ...] = ("repo", "path"),
-    buckets: int = 1024,
-    salt_col: str = "salt",
-) -> DataFrame:
-    """Add a deterministic salt derived from ``cols``.
-
-    ``xxhash64`` is JVM-side and codegen-friendly; ``pmod`` keeps the salt
-    non-negative. Salting on (repo, path) spreads a monorepo's files evenly
-    across buckets while staying deterministic for resume/idempotency.
-    """
-    return df.withColumn(salt_col, F.pmod(F.xxhash64(*[F.col(c) for c in cols]), F.lit(buckets)))
-
-
-def repartition_salted(
-    df: DataFrame,
-    num_partitions: int,
-    cols: tuple[str, ...] = ("repo", "path"),
-    buckets: int | None = None,
-) -> DataFrame:
-    """Repartition by a salt of ``cols`` — balanced partitions even when a
-    single repo dominates the table (north-rule skew handling).
-
-    The salt column is dropped after the exchange; downstream operators see
-    the original schema.
-    """
-    salted = with_salt(df, cols, buckets or max(num_partitions * 8, 1024))
-    return salted.repartition(num_partitions, "salt").drop("salt")
-
-
-def partition_key(df: DataFrame, prefix_len: int = 2, col: str = "repo") -> DataFrame:
-    """Derive the manifest partition key: a fixed-width repo prefix.
-
-    A prefix (rather than the full repo name) bounds manifest cardinality at
-    10^12-file scale while keeping resume granularity useful; prefix_len=2
-    over a hex-ish name space yields ~O(1k) partitions.
-    """
-    return df.withColumn("part_key", F.substring(F.col(col), 1, prefix_len))
 
 
 def write_bucketed(

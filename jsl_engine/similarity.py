@@ -1,9 +1,8 @@
 """Similarity search over embedding columns (``array<float>``).
 
 Engine additions for training-data pipelines: exact brute-force cosine
-top-k as the correctness baseline, and an LSH-bucketed (random hyperplane
-/ SRP) variant as the scale path. Embedding-cosine near-duplicate detection
-composes the same pieces.
+top-k as the correctness baseline, IVF top-k as the scale path, and
+banded random-hyperplane (SRP) embedding near-duplicate detection.
 
 Spark-first design:
 
@@ -13,14 +12,13 @@ Spark-first design:
   codegen pass, and cuts to ≤ k rows per (query, Arrow batch) map-side
   (:func:`_local_topk_prune` — lossless by total order) before the tiny
   per-query ranking window, so the shuffle never carries the corpus;
-* the SRP variant buckets vectors by the sign pattern of ``n_planes``
-  random projections (seeded, deterministic): candidate generation is an
-  equi-join on the bucket key, exact cosine re-ranks within buckets.
-  Recall/cost trades with ``n_planes`` (more planes → smaller buckets).
-
-At 10^12-vector scale the same layout maps to IVF: k-means coarse
-centroids as the bucket key instead of hyperplane signs; the join/re-rank
-skeleton is unchanged.
+* IVF assigns every vector to its k-means coarse cell (one numpy matmul
+  per Arrow batch): candidate generation is an equi-join on the cell,
+  exact cosine re-ranks within the probed cells;
+* embedding near-dup buckets vectors by the sign pattern of ``n_planes``
+  random projections per band (seeded, deterministic): candidates are an
+  equi-join on (band, bucket), verified by exact cosine. Recall/cost
+  trades with ``n_planes`` (more planes → smaller buckets).
 """
 
 from __future__ import annotations
@@ -380,79 +378,6 @@ def _random_planes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
     return planes
 
 
-def srp_bucket(vec_col, planes: list[list[float]]):
-    """Signed-random-projection bucket id: one bit per hyperplane."""
-    bits = [
-        F.when(
-            _dot(vec_col, F.array(*[F.lit(float(x)) for x in plane])) >= 0, 1
-        ).otherwise(0)
-        for plane in planes
-    ]
-    out = F.lit(0)
-    for i, b in enumerate(bits):
-        out = out + (b * F.lit(2**i))
-    return out
-
-
-def lsh_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    *,
-    k: int = 10,
-    n_planes: int = 8,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    multi_probe: bool = False,
-    dim: int | None = None,
-) -> DataFrame:
-    """Approximate cosine top-k: SRP-bucket the corpus once, probe each
-    query's bucket, exact-rank within it. Same output shape as
-    :func:`brute_force_topk` (rank within the probed buckets).
-
-    ``multi_probe=True`` probes the query's bucket plus every one-bit
-    flip of it (``n_planes``+1 probes): a neighbor separated from the
-    query by exactly one hyperplane is then still found. The probe
-    explosion lives on the tiny broadcast query side, so corpus-side cost
-    is unchanged — this is the production default at scale; single-probe
-    is kept as the minimal-recall baseline.
-
-    Pass ``dim`` (the embedding width) to keep plan construction
-    action-free; if omitted it is probed with a one-row job."""
-    vectors = _indexable(vectors, vec_col)
-    queries = _indexable(queries, vec_col)
-    if dim is None:
-        dim = len(vectors.select(vec_col).first()[0])
-    planes = _random_planes(dim, n_planes, seed)
-    v = vectors.select(
-        F.col(id_col), F.col(vec_col), srp_bucket(F.col(vec_col), planes).alias("bucket")
-    )
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        srp_bucket(F.col(vec_col), planes).alias("bucket"),
-    )
-    if multi_probe:
-        probes = F.array(
-            F.col("bucket"),
-            *[F.col("bucket").bitwiseXOR(F.lit(2**i)) for i in range(n_planes)],
-        )
-        q = q.select(
-            "query_id", "q_vec", F.explode(probes).alias("bucket")
-        )
-    q = F.broadcast(q)
-    scored = cosine_scores_arrow(
-        v.join(q, "bucket"), vec_col, "q_vec", ("query_id", id_col)
-    ).select(
-        "query_id", id_col, F.round(F.col("cos_raw"), 6).alias("cos_sim")
-    )
-    # multi-probe needs no dedup: the probed buckets (bucket ⊕ one-bit
-    # flips) are pairwise distinct and each vector holds ONE bucket, so
-    # a (query, vector) pair joins at most once
-    return _ranked_topk(scored, k, id_col)
-
-
 def train_ivf_centroids(
     vectors: DataFrame,
     *,
@@ -603,18 +528,6 @@ def train_ivf_centroids_distributed(
     return [[float(v) for v in row] for row in c]
 
 
-#: Cell count at/above which ivf_topk switches from literal-array JVM
-#: scoring to the Arrow matmul assignment. Since round 8 the default is 0
-#: — ALWAYS the Arrow matmul: the literal-array JVM form never reaches
-#: whole-stage codegen (higher-order-function folds are interpreted per
-#: element), so even 16 cells × 64 dims cost ~20M lambda evaluations on
-#: the assignment pass (measured r8 at sf1.0: the full-probe IVF arm
-#: 4.4 s with JVM assignment vs 1.3 s with the matmul; guide §4.2). The
-#: JVM arm is kept for parity testing (forced via ``arrow_threshold``)
-#: and as the zero-Python fallback.
-ARROW_ASSIGN_THRESHOLD = 0
-
-
 def assign_cells_arrow(
     df: DataFrame,
     centroids: list[list[float]],
@@ -676,19 +589,6 @@ def assign_cells_arrow(
     return df.mapInArrow(run, out_schema)
 
 
-def _cell_scores(vec_col, centroids: list[list[float]]):
-    """array<struct<score, cell>> of dot products with each centroid."""
-    return F.array(
-        *[
-            F.struct(
-                _dot(vec_col, F.array(*[F.lit(float(v)) for v in c])).alias("score"),
-                F.lit(i).alias("cell"),
-            )
-            for i, c in enumerate(centroids)
-        ]
-    )
-
-
 def ivf_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -701,22 +601,19 @@ def ivf_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     seed: int = 42,
-    arrow_threshold: int = ARROW_ASSIGN_THRESHOLD,
     train: str = "driver",
 ) -> DataFrame:
     """IVF approximate top-k: assign every vector to its best coarse cell
     (the corpus is scanned once), probe each query's best ``n_probe``
     cells, exact-rank inside.
 
-    Two assignment strategies, switched on cell count: below
-    ``arrow_threshold`` the centroid dot products are literal-array JVM
-    expressions (whole-stage codegen, zero Python); at or above it —
-    where the literal expression tree would blow up codegen — assignment
-    is one broadcast numpy matmul per Arrow batch
+    Assignment is one broadcast numpy matmul per Arrow batch
     (:func:`assign_cells_arrow`), the same scale path a FAISS-style
-    10^12-vector deployment uses. Both paths feed the identical
-    bucket-equi-join → exact re-rank skeleton, and agree exactly
-    (pinned by pytest).
+    10^12-vector deployment uses: a literal-array JVM form of the
+    centroid dot products never reaches whole-stage codegen (its
+    higher-order folds are interpreted per element; measured at sf1.0
+    the full-probe IVF arm took 4.4 s that way vs 1.3 s with the
+    matmul). The cells then feed a bucket-equi-join → exact re-rank.
 
     Same output shape as :func:`brute_force_topk`. Recall follows
     ``n_probe``/``n_cells`` as in an IVF-Flat index.
@@ -743,36 +640,19 @@ def ivf_topk(
                 vectors, n_cells=n_cells, vec_col=vec_col, id_col=id_col,
                 seed=seed,
             )
-    if len(centroids) >= arrow_threshold:
-        v = assign_cells_arrow(
-            vectors.select(F.col(id_col), F.col(vec_col)), centroids,
-            vec_col=vec_col, n_probe=1,
-        )
-        q = F.broadcast(
-            assign_cells_arrow(
-                queries.select(
-                    F.col(query_id_col).alias("query_id"),
-                    F.col(vec_col).alias("q_vec"),
-                ),
-                centroids, vec_col="q_vec", n_probe=n_probe,
-            )
-        )
-    else:
-        scores = _cell_scores(F.col(vec_col), centroids)
-        v = vectors.select(
-            F.col(id_col), F.col(vec_col), F.array_max(scores)["cell"].alias("cell")
-        )
-        # queries probe their n_probe best cells (explode → equi-join per cell)
-        q_scores = F.reverse(F.array_sort(scores))
-        q = F.broadcast(
+    v = assign_cells_arrow(
+        vectors.select(F.col(id_col), F.col(vec_col)), centroids,
+        vec_col=vec_col, n_probe=1,
+    )
+    q = F.broadcast(
+        assign_cells_arrow(
             queries.select(
                 F.col(query_id_col).alias("query_id"),
                 F.col(vec_col).alias("q_vec"),
-                F.explode(
-                    F.transform(F.slice(q_scores, 1, n_probe), lambda s: s["cell"])
-                ).alias("cell"),
-            )
+            ),
+            centroids, vec_col="q_vec", n_probe=n_probe,
         )
+    )
     pairs = v.join(q, "cell")
     scored = cosine_scores_arrow(
         pairs, vec_col, "q_vec", ("query_id", id_col)

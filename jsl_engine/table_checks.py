@@ -179,17 +179,6 @@ def duplicate_keys(df: DataFrame, keys: list[str]) -> DataFrame:
     )
 
 
-def duplicate_rows(df: DataFrame, keys: list[str]) -> DataFrame:
-    """Every row belonging to a duplicated key (violation rows for the
-    manifest). Window count avoids a self-join: one shuffle, no broadcast."""
-    w = Window.partitionBy(*[F.col(k) for k in keys])
-    return (
-        df.withColumn("n_dup", F.count(F.lit(1)).over(w))
-        .where(F.col("n_dup") > 1)
-        .drop("n_dup")
-    )
-
-
 # ---------------------------------------------------------------------------
 # referential integrity
 # ---------------------------------------------------------------------------
@@ -721,58 +710,6 @@ def skew_aware_counts(
         F.count(F.lit(1)).alias("__partial")
     )
     return partial.groupBy(*key_cols).agg(F.sum("__partial").alias(count_col))
-
-
-# ---------------------------------------------------------------------------
-# mergeable sketches (incremental cross-partition cardinality)
-# ---------------------------------------------------------------------------
-
-def hll_partition_sketches(
-    df: DataFrame,
-    columns: list[str],
-    part_col: str = "part_key",
-    *,
-    lg_k: int = 12,
-) -> DataFrame:
-    """Per-partition mergeable HLL sketches (Apache DataSketches)::
-
-        part_key, col_name, sketch (binary), estimate
-
-    The scale pattern behind it: a resumable job stores one sketch per
-    committed partition (alongside its manifest row); global cardinality
-    is then :func:`hll_global_estimate` over the sketches — **no rescan
-    of already-committed data**, and re-processing a partition just
-    replaces its sketch. One aggregation pass with map-side combine.
-    """
-    aggs = []
-    for c in columns:
-        aggs.append(F.hll_sketch_agg(F.col(c), F.lit(lg_k)).alias(f"__s_{c}"))
-    wide = df.groupBy(part_col).agg(*aggs)
-    stack_args = ", ".join(f"'{c}', __s_{c}" for c in columns)
-    return wide.selectExpr(
-        part_col, f"stack({len(columns)}, {stack_args}) as (col_name, sketch)"
-    ).withColumn("estimate", F.hll_sketch_estimate("sketch"))
-
-
-def hll_global_estimate(sketches: DataFrame) -> DataFrame:
-    """Union per-partition sketches → global distinct estimate per column::
-
-        col_name, distinct_estimate
-
-    HLL union takes the per-register max; the union of partition sketches
-    estimates within a fraction of a percent of a single global sketch at
-    the same ``lg_k`` (not byte-identical — DataSketches' sparse-mode
-    promotion history differs — but pinned ≤1% apart by pytest, and both
-    within standard HLL error of exact).
-    """
-    return (
-        sketches.groupBy("col_name")
-        .agg(
-            F.hll_sketch_estimate(F.hll_union_agg("sketch")).alias(
-                "distinct_estimate"
-            )
-        )
-    )
 
 
 # ---------------------------------------------------------------------------

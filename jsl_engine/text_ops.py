@@ -13,8 +13,9 @@ source, n_chars)`` table and are built Spark-first:
   seeds applied to shingle hashes — a few JVM expression evaluations per
   row, then banding turns near-dup detection into an equi-join
   (shuffle on band keys) instead of an O(n²) comparison;
-* SimHash packs 64 sign-bits of seed-hashed shingles; Hamming distance is
-  ``bit_count(a XOR b)`` — again a plain join + expression.
+* SimHash signatures come from the Arrow kernel
+  (:func:`jsl_engine.text_ops_arrow.simhash_arrow`); the Hamming tail
+  here is ``bit_count(a XOR b)`` — again a plain join + expression.
 
 Scale notes: candidate generation is always join-on-key (LSH bucket,
 band hash, fingerprint); nothing materializes pairwise products except
@@ -161,10 +162,8 @@ def minhash_signatures(
     the per-seed mins; CollapseProject's alias-inlining is blocked here
     (64 references from the array elements — measured working: this
     formulation benches faster than both the explode+groupBy and the
-    single-tree fold alternatives). Contrast with :func:`simhash` and
-    :func:`_winnow_flat`, where the same defense did NOT hold and the
-    shapes had to change — when touching any of these, re-measure; the
-    collapse behavior is formulation-specific.
+    single-tree fold alternatives). The collapse behavior is
+    formulation-specific, so re-measure when touching this.
 
     NULL-text docs emit NO signature row (see the Arrow twin's
     docstring for the full rationale — parity-pinned).
@@ -312,8 +311,10 @@ def minhash_near_duplicates(
     consumed would defeat it)."""
     sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n)
     if cache:
-        # eager: see simhash_near_duplicates — a lazy cache races the
-        # join build sides within the first action
+        # eager: within one action the join build sides start before
+        # the probe side has populated a lazy cache, so the signature
+        # plan would still run twice (measured on simhash at sf0.1:
+        # 10.7 s lazy vs ~7 s eager)
         sigs = sigs.cache()
         sigs.count()
     return near_duplicates_from_signatures(
@@ -428,54 +429,6 @@ def cross_corpus_near_dups_from_signatures(
 # SimHash
 # ---------------------------------------------------------------------------
 
-#: Bit masks for the 64 simhash positions as signed longs (bit 63 is the
-#: sign bit in two's complement, hence the negative literal).
-_BIT_MASKS = [1 << b for b in range(63)] + [-(2**63)]
-
-
-def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-            shingle_n: int = 3) -> DataFrame:
-    """64-bit SimHash per document: sum shingle-hash sign contributions per
-    bit, pack the sign vector — all JVM expressions.
-
-    Execution shape: ONE expression tree in which the shingle-hash array
-    appears exactly once — a single ``aggregate`` folds a 64-counter array
-    (``zip_with`` adds each hash's ±1 contribution per bit), then a second
-    fold XOR-packs the sign vector against the literal mask array. The
-    previous formulation (64 per-bit aggregates over an aliased hash
-    array) hit the CollapseProject trap — the alias was re-inlined into
-    every per-bit expression, recomputing the shingling 64× (measured
-    8.7 s vs 1.4 s with the array cached at sf0.1; the single tree runs
-    6.1 s with zero caching and zero shuffle, and the explode+groupBy
-    alternative measured worse). Bit packing XOR-folds literal masks
-    (bit 63 is the sign bit, hence the negative literal in
-    ``_BIT_MASKS``); mask arithmetic is bitwise, so nothing overflows
-    under ANSI mode.
-
-    NULL-text docs emit NO simhash row (see the Arrow twin's docstring
-    — the arms used to diverge on them; parity-pinned)."""
-    df = df.where(F.col(text_col).isNotNull())
-    masks = F.array(*[F.lit(m).cast("bigint") for m in _BIT_MASKS])
-    sh_expr = F.transform(shingles(F.col(text_col), shingle_n), lambda x: F.xxhash64(x))
-    counts = F.aggregate(
-        sh_expr,
-        F.array(*[F.lit(0)] * len(_BIT_MASKS)),
-        lambda acc, h: F.zip_with(
-            acc, masks,
-            lambda a, m: a + F.when(h.bitwiseAND(m) != 0, 1).otherwise(-1),
-        ),
-    )
-    packed = F.aggregate(
-        F.zip_with(
-            counts, masks,
-            lambda c, m: F.when(c > 0, m).otherwise(F.lit(0).cast("bigint")),
-        ),
-        F.lit(0).cast("bigint"),
-        lambda acc, v: acc.bitwiseXOR(v),
-    )
-    return df.select(F.col(id_col), packed.alias("simhash"))
-
-
 def simhash_pairs_from_hashes(
     h: DataFrame,
     id_col: str = "doc_id",
@@ -484,7 +437,8 @@ def simhash_pairs_from_hashes(
 ) -> DataFrame:
     """Pigeonhole block banding + exact Hamming verify over an
     ``(id, simhash)`` table — the common tail of every SimHash pipeline
-    (JVM and Arrow signature kernels both feed it).
+    (:func:`jsl_engine.text_ops_arrow.simhash_arrow` signatures and the
+    media pHash both feed it).
 
     The 64 signature bits are split into ``max_hamming + 1`` contiguous
     blocks: a pair within Hamming distance ``max_hamming`` differs in at
@@ -555,48 +509,6 @@ def simhash_pairs_from_hashes(
         .where(F.col("hamming") <= max_hamming)
         .distinct()
     )
-
-
-def simhash_near_duplicates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    max_bucket: int = 4096,
-    cache: bool = True,
-) -> DataFrame:
-    """SimHash near-dups with **exact recall** (EAGER by default:
-    ``cache=True`` runs a signature-materialization job at construction;
-    ``cache=False`` keeps composition action-free): pigeonhole block banding
-    (split the 64 bits into ``max_hamming + 1`` blocks — any pair within
-    the Hamming budget shares at least one exact block value) followed by
-    an exact ``bit_count`` verify. Returns ``id_a, id_b, hamming``.
-
-    Replaces the earlier prefix+multi-probe formulation, which produced
-    ×(prefix_bits+1) probe rows on a full side of the self-join and still
-    missed pairs differing in ≥2 prefix bits; pigeonhole banding emits
-    only ``max_hamming + 1`` rows per document and misses nothing except
-    pairs inside buckets pruned by the ``max_bucket`` boilerplate guard
-    (see :func:`simhash_pairs_from_hashes` for the guarantee and that
-    qualifier — groups of >``max_bucket`` near-identical documents are
-    exact-dup territory).
-
-    ``cache=True`` (default) caches the 16-byte/doc ``(id, simhash)``
-    table: the self-join would otherwise evaluate the signature
-    expression once per branch (measured 12.1 s vs 7 s total at sf0.1 —
-    exchange reuse does not trigger across the dedup-rewritten branches).
-    The cache stays pinned for the session; long-lived drivers should
-    pass ``cache=False`` and materialize the signature table to storage
-    instead (the manifest pattern)."""
-    h = simhash(df, text_col, id_col)
-    if cache:
-        # eager materialization: within a single action the broadcast/build
-        # side of the self-join starts before the probe side has populated
-        # a lazy cache, so the signature plan would still run twice
-        # (measured 10.7 s lazy vs ~7 s eager at sf0.1)
-        h = h.cache()
-        h.count()
-    return simhash_pairs_from_hashes(h, id_col, max_hamming, max_bucket)
 
 
 # ---------------------------------------------------------------------------
@@ -1432,105 +1344,12 @@ def token_counts(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
 # winnowing (rolling-hash fingerprints, MOSS-style)
 # ---------------------------------------------------------------------------
 
-def _winnow_flat(
-    df: DataFrame, text_col: str, id_col: str, k: int, window: int
-) -> DataFrame:
-    """``(id, fp)`` rows: the distinct winnowing-selected k-gram hashes.
-
-    Shape matters here: an earlier formulation computed the per-window
-    minima as ``transform(sequence, i -> array_min(slice(kh, ...)))`` over
-    a k-gram-hash alias — and CollapseProject does **not** count
-    references made from inside higher-order-function lambdas, so it
-    happily re-inlined the whole shingle+hash pipeline into the lambda,
-    recomputing it once per window: a measured **400×** slowdown (218 s →
-    0.5 s on 5k documents). This version has no lambda cross-reference to
-    collapse: ``posexplode`` evaluates the k-gram hashing exactly once per
-    document (generators evaluate their input per input row), and the
-    sliding minimum is a plain window frame over (doc, pos) — the same
-    shuffle key the downstream fingerprint join needs anyway.
-
-    NULL-text docs emit NO fingerprint rows (kernel-level near-dup
-    exclusion; parity with winnow_flat_arrow)."""
-    df = df.where(F.col(text_col).isNotNull())
-    kh_rows = df.select(
-        F.col(id_col),
-        F.posexplode(
-            F.transform(shingles(F.col(text_col), k), lambda x: F.xxhash64(x))
-        ).alias("pos", "h"),
-    )
-    wmin = Window.partitionBy(id_col).orderBy("pos").rowsBetween(0, window - 1)
-    wn = Window.partitionBy(id_col)
-    return (
-        kh_rows.select(
-            F.col(id_col),
-            F.col("pos"),
-            F.min("h").over(wmin).alias("fp"),
-            F.count(F.lit(1)).over(wn).alias("__n"),
-        )
-        # windows fully inside the hash sequence; short docs (< window
-        # k-grams) keep their single clipped-frame window at pos 0
-        .where((F.col("pos") <= F.col("__n") - window) | (F.col("pos") == 0))
-        .select(id_col, "fp")
-        .distinct()
-    )
-
-
-def winnow_fingerprints(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 4,
-    window: int = 4,
-) -> DataFrame:
-    """MOSS-style winnowing fingerprints: hash every word ``k``-gram, keep
-    the minimum hash of each sliding window of ``window`` consecutive
-    k-grams, output the distinct selected hashes::
-
-        id, fingerprints: array<bigint> (sorted)
-
-    Winnowing guarantee: two documents sharing a passage of at least
-    ``window + k - 1`` words share at least one selected fingerprint —
-    which makes this a *containment* detector (a copied paragraph inside
-    two otherwise-different documents), the case Jaccard-based MinHash
-    misses by construction. See :func:`_winnow_flat` for the execution
-    shape (and the CollapseProject lambda trap it avoids).
-    """
-    return (
-        _winnow_flat(df, text_col, id_col, k, window)
-        .groupBy(id_col)
-        .agg(F.sort_array(F.collect_list("fp")).alias("fingerprints"))
-    )
-
-
-def fingerprint_overlap_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 4,
-    window: int = 4,
-    min_shared: int = 2,
-    max_bucket: int = 64,
-) -> DataFrame:
-    """Containment candidates: pairs of documents sharing at least
-    ``min_shared`` winnowing fingerprints::
-
-        id_a, id_b, n_shared
-
-    Equi-join on the fingerprint hash over the flat (id, fp) rows. Same
-    scale shape as LSH banding: boilerplate fingerprints (shared by more
-    than ``max_bucket`` docs) are pruned with a windowed count *before*
-    the self-join, so they contribute zero pairs (see
-    :func:`lsh_candidate_pairs` for the rationale)."""
-    flat = _winnow_flat(df, text_col, id_col, k, window)
-    return overlap_pairs_from_flat(flat, id_col, min_shared, max_bucket)
-
-
 def overlap_pairs_from_flat(
     flat: DataFrame, id_col: str, min_shared: int, max_bucket: int
 ) -> DataFrame:
     """Guard + self-join + shared-count over ``(id, fp)`` rows — the
-    common tail of every fingerprint-overlap pipeline (JVM and Arrow
-    winnowing kernels both feed it)."""
+    common tail of every fingerprint-overlap pipeline (fed by
+    :func:`jsl_engine.text_ops_arrow.winnow_flat_arrow`)."""
     w = Window.partitionBy("fp")
     pruned = (
         flat.withColumn("__n", F.count(F.lit(1)).over(w))

@@ -10,6 +10,9 @@ Arrow variants are the scale path: one numpy matrix per Arrow batch,
 ~10-20× the JVM rate, same distributed shape (a narrow signature table
 feeding the identical LSH banding / Hamming blocking joins).
 
+SimHash and winnowing have only these Arrow kernels; MinHash keeps its
+JVM twin in :mod:`jsl_engine.text_ops` as well.
+
 Hash family: a genuinely 64-bit shingle fingerprint — each word is
 hashed to 64 bits (forward crc32 in the high half, byte-reversed crc32
 in the low half: two distinct GF(2)-linear maps of the word bytes, so a
@@ -24,10 +27,10 @@ thousands of docs), so the max_bucket guard would prune essentially all
 buckets and unrelated docs would share >= min_shared fingerprints by
 collision. Hashing per word instead of per shingle also removes the
 per-shingle string join, so the fix is *faster* than the scheme it
-replaces. Values differ from the JVM xxhash64 family; MinHash/SimHash
+replaces. Values differ from the JVM xxhash64 family; MinHash
 semantics are identical (any well-mixed family works; equivalence is
 pinned by the same planted-dup and estimate-tracking tests as the JVM
-variants).
+variant).
 """
 
 from __future__ import annotations
@@ -287,13 +290,12 @@ def simhash_arrow(
 
     Per document: unpack the shingle hashes to a (shingles × 64) sign
     matrix with one broadcasted shift-and-mask, column-sum, pack the sign
-    bits. Output shape matches :func:`jsl_engine.text_ops.simhash`.
+    bits. The output feeds
+    :func:`jsl_engine.text_ops.simhash_pairs_from_hashes`.
 
-    NULL-text docs emit NO simhash row (pinned with the JVM twin): the
-    two arms used to DIVERGE on them — this kernel's ``t or ""`` gave
-    NULL the empty doc's simhash while the JVM expression tree gave it
-    all-negative bit counts — and a Hamming-0 "near-dup" of a NULL doc
-    contradicts the near-dup contract anyway (exact-dup territory).
+    NULL-text docs emit NO simhash row: a ``t or ""`` fallback would give
+    NULL the empty doc's simhash, and a Hamming-0 "near-dup" of a NULL
+    doc contradicts the near-dup contract anyway (exact-dup territory).
     """
     pruned = df.where(F.col(text_col).isNotNull()).select(id_col, text_col)
     if balance:
@@ -336,13 +338,12 @@ def winnow_flat_arrow(
 ) -> DataFrame:
     """``(id, fp)`` rows of winnowing-selected k-gram hashes, computed
     entirely in the map: numpy ``sliding_window_view(...).min(axis=1)``
-    per document. Compared to the JVM path
-    (:func:`jsl_engine.text_ops._winnow_flat`) this removes the whole
-    per-document window shuffle — the only remaining shuffle in an
-    overlap-detection pipeline is the fingerprint equi-join itself.
+    per document. A JVM window-frame formulation needs a per-document
+    window shuffle; here the only shuffle in an overlap-detection
+    pipeline is the fingerprint equi-join itself.
 
-    NULL-text docs emit NO fingerprint rows (same pin as the minhash
-    and simhash kernels; parity with the JVM arm)."""
+    NULL-text docs emit NO fingerprint rows (the same rule as the
+    minhash and simhash kernels)."""
     pruned = df.where(F.col(text_col).isNotNull()).select(id_col, text_col)
     if balance:
         pruned = fan_out(pruned)
@@ -396,33 +397,6 @@ def fingerprint_overlap_pairs_arrow(
 
     flat = winnow_flat_arrow(df, text_col, id_col, k, window)
     return overlap_pairs_from_flat(flat, id_col, min_shared, max_bucket)
-
-
-def simhash_near_duplicates_arrow(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-    max_hamming: int = 3,
-    max_bucket: int = 4096,
-    cache: bool = True,
-) -> DataFrame:
-    """SimHash near-dups on the Arrow signature kernel (EAGER by default:
-    ``cache=True`` materializes signatures at construction; ``cache=False``
-    keeps composition action-free) — the 10^12-doc
-    path: signatures from :func:`simhash_arrow` (numpy sign-matrix, no
-    interpreted HOF lambdas), then the shared pigeonhole-banding + exact
-    Hamming verify tail (:func:`jsl_engine.text_ops.simhash_pairs_from_hashes`,
-    100% recall within ``max_hamming``). ``cache`` as on the JVM variant
-    (the self-join evaluates the kernel once per branch otherwise);
-    long-lived drivers pass ``cache=False`` and materialize to storage."""
-    from jsl_engine.text_ops import simhash_pairs_from_hashes
-
-    h = simhash_arrow(df, text_col, id_col, shingle_n)
-    if cache:
-        h = h.cache()
-        h.count()  # eager: see the JVM variant
-    return simhash_pairs_from_hashes(h, id_col, max_hamming, max_bucket)
 
 
 def minhash_near_duplicates_arrow(
@@ -692,41 +666,6 @@ def contamination_arrow(
             F.round(F.col("n_hits") / F.col("n_grams"), 6),
         ).alias("hit_rate"),
         (F.col("n_hits") >= F.lit(min_hits)).alias("contaminated"),
-    )
-
-
-def fuzzy_contamination_arrow(
-    df: DataFrame,
-    benchmark: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.7,
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_n: int = 5,
-    max_bucket: int = 64,
-) -> DataFrame:
-    """Fuzzy decontamination on the Arrow signature kernel: corpus and
-    benchmark MinHash signatures from :func:`minhash_signatures_arrow`,
-    then the cross-corpus banding + verify tail
-    (:func:`jsl_engine.text_ops.cross_corpus_near_dups_from_signatures`,
-    benchmark side broadcast). Catches paraphrased benchmark leaks that
-    exact n-gram contamination misses; the exact-overlap operator
-    remains the first, cheaper pass."""
-    from jsl_engine.text_ops import cross_corpus_near_dups_from_signatures
-
-    c = minhash_signatures_arrow(df, text_col, id_col, num_hashes, shingle_n)
-    b = minhash_signatures_arrow(
-        benchmark, text_col, id_col, num_hashes, shingle_n
-    )
-    return cross_corpus_near_dups_from_signatures(
-        c, b,
-        id_col=id_col,
-        threshold=threshold,
-        bands=bands,
-        num_hashes=num_hashes,
-        max_bucket=max_bucket,
     )
 
 

@@ -87,11 +87,29 @@ def test_lsh_oversized_bucket_bounds_pairs(spark):
     assert unguarded.count() == 150 * 149 // 2 + 1
 
 
+def _simhash_pairs(df, max_hamming, **kw):
+    """The registry query's SimHash pipeline: Arrow signatures through
+    the shared pigeonhole tail."""
+    from jsl_engine.text_ops_arrow import simhash_arrow
+
+    return {(r.id_a, r.id_b): r.hamming
+            for r in T.simhash_pairs_from_hashes(
+                simhash_arrow(df), max_hamming=max_hamming, **kw).collect()}
+
+
+def _hamming(x, y):
+    return bin((x ^ y) & (2**64 - 1)).count("1")
+
+
 def test_simhash_near_duplicates(spark, docs):
-    out = {(r.id_a, r.id_b): r.hamming
-           for r in T.simhash_near_duplicates(docs, max_hamming=12).collect()}
+    from jsl_engine.text_ops_arrow import simhash_arrow
+
+    sig = {r.doc_id: r.simhash for r in simhash_arrow(docs).collect()}
+    out = _simhash_pairs(docs, max_hamming=12)
     assert out.get((1, 2)) == 0  # identical → identical simhash
-    assert out.get((1, 3)) == 1 and out.get((2, 3)) == 1  # near-dup found
+    # near-dup found, at its true Hamming distance
+    assert out.get((1, 3)) == _hamming(sig[1], sig[3])
+    assert out.get((2, 3)) == _hamming(sig[2], sig[3])
     assert (4, 5) not in out  # unrelated texts differ
 
 
@@ -114,16 +132,22 @@ def test_simhash_pigeonhole_exact_recall(spark):
     budget (100% recall — the guarantee that replaced the probabilistic
     multi-probe formulation) and, because the bit_count verify is exact,
     produce exactly the ground-truth pair set."""
-    df = _planted_corpus(spark)
+    from jsl_engine.text_ops_arrow import simhash_arrow
+
+    # a NULL-text document has no signature row and never pairs (the
+    # NULL-text rule)
+    df = _planted_corpus(spark).unionByName(
+        spark.createDataFrame([(9999, None)], "doc_id long, text string")
+    )
     max_hamming = 8
-    sig = {r.doc_id: r.simhash for r in T.simhash(df).collect()}
+    sig = {r.doc_id: r.simhash for r in simhash_arrow(df).collect()}
+    assert 9999 not in sig and len(sig) == 80
     truth = {
-        (a, b): bin((sig[a] ^ sig[b]) & (2**64 - 1)).count("1")
+        (a, b): _hamming(sig[a], sig[b])
         for a in sig for b in sig if a < b
-        if bin((sig[a] ^ sig[b]) & (2**64 - 1)).count("1") <= max_hamming
+        if _hamming(sig[a], sig[b]) <= max_hamming
     }
-    got = {(r.id_a, r.id_b): r.hamming
-           for r in T.simhash_near_duplicates(df, max_hamming=max_hamming).collect()}
+    got = _simhash_pairs(df, max_hamming)
     assert got == truth
     assert len(truth) >= 20  # the fixture plants real near-dups
 
@@ -135,7 +159,7 @@ def test_simhash_banded_volume_and_bucket_guard(spark):
     # max_bucket=1: every bucket with >= 2 members (i.e. every potential
     # pair) is pruned -> zero output rows, proving the guard sits before
     # the join rather than filtering pairs afterwards
-    assert T.simhash_near_duplicates(df, max_hamming=8, max_bucket=1).count() == 0
+    assert _simhash_pairs(df, max_hamming=8, max_bucket=1) == {}
 
 
 def test_text_profile_values(spark):
@@ -227,36 +251,6 @@ def test_token_counts_values(spark):
     assert r.n_subword_tokens == 6
     assert r.n_chars == 11
     assert r.chars_per_token == round(11 / 6, 6)
-
-
-def test_winnowing_shared_passage_guarantee(spark):
-    """Two documents sharing a passage of >= window + k - 1 words must
-    share at least one fingerprint (the winnowing guarantee); identical
-    docs get identical fingerprint sets; disjoint docs get disjoint sets."""
-    shared = "the quick brown fox jumps over the lazy dog near the river bank today"
-    df = spark.createDataFrame(
-        [
-            Row(doc_id=1, text="intro about databases and engines. " + shared + " closing words here."),
-            Row(doc_id=2, text="completely different opening sentence. " + shared + " unrelated tail text."),
-            Row(doc_id=3, text="nothing in common with the others at all, just some filler prose."),
-            Row(doc_id=4, text="nothing in common with the others at all, just some filler prose."),
-        ]
-    )
-    fps = {r.doc_id: set(r.fingerprints) for r in T.winnow_fingerprints(df).collect()}
-    assert fps[1] & fps[2]  # shared passage -> shared fingerprint
-    assert fps[3] == fps[4]  # identical docs -> identical sets
-    assert not (fps[1] & fps[3])
-
-    pairs = {(r.id_a, r.id_b): r.n_shared
-             for r in T.fingerprint_overlap_pairs(df, min_shared=2).collect()}
-    assert (1, 2) in pairs and pairs[(1, 2)] >= 2
-    assert (3, 4) in pairs
-    assert (1, 3) not in pairs and (1, 4) not in pairs
-
-    # the containment case MinHash misses: full-doc Jaccard of 1 vs 2 is
-    # low (different intros/tails), so near-dup at 0.5 finds nothing
-    mh = T.minhash_near_duplicates(df.where("doc_id in (1,2)"), threshold=0.5)
-    assert not [r for r in mh.collect() if (r.id_a, r.id_b) == (1, 2)]
 
 
 def test_quality_score(spark, docs):
@@ -354,58 +348,64 @@ def test_arrow_shingle_hashes_content_identity():
 
 
 def test_arrow_simhash_pipeline_equivalence(spark):
-    """JVM and Arrow SimHash near-dup pipelines agree behaviorally on
-    planted pairs: different hash families, same planted-pair detection
-    through the shared pigeonhole tail, and the Arrow output equals its
-    own ground truth exactly (100%-recall guarantee holds for both)."""
+    """The Arrow SimHash pipeline finds the planted pairs through the
+    shared pigeonhole tail, and its output equals its own ground truth
+    exactly (the 100%-recall guarantee)."""
     from jsl_engine import text_ops_arrow as TA
 
     df = _planted_corpus(spark)
     planted = {(2 * p, 2 * p + 1) for p in range(40)}
     max_hamming = 8
 
-    jvm = {(r.id_a, r.id_b)
-           for r in T.simhash_near_duplicates(df, max_hamming=max_hamming).collect()}
-    arrow = {(r.id_a, r.id_b)
-             for r in TA.simhash_near_duplicates_arrow(df, max_hamming=max_hamming).collect()}
-    # both kernels find the overwhelming majority of planted pairs ...
-    assert len(jvm & planted) / len(planted) >= 0.9
+    arrow = set(_simhash_pairs(df, max_hamming))
+    # the kernel finds the overwhelming majority of planted pairs ...
     assert len(arrow & planted) / len(planted) >= 0.9
-    # ... and the Arrow pipeline matches ITS ground truth exactly
+    # ... and the pipeline matches its ground truth exactly
     sig = {r.doc_id: r.simhash for r in TA.simhash_arrow(df).collect()}
     truth = {(a, b) for a in sig for b in sig if a < b
-             if bin((sig[a] ^ sig[b]) & (2**64 - 1)).count("1") <= max_hamming}
+             if _hamming(sig[a], sig[b]) <= max_hamming}
     assert arrow == truth
 
 
 def test_arrow_winnowing_guarantee(spark):
-    """The Arrow winnowing kernel honors the same guarantee as the JVM
-    path: a shared passage of >= window+k-1 words yields shared
-    fingerprints; identical docs identical sets; disjoint docs disjoint —
-    and the overlap pipeline finds the planted containment pair."""
+    """The winnowing guarantee: a shared passage of >= window+k-1 words
+    yields shared fingerprints; identical docs identical sets; disjoint
+    docs disjoint — and the overlap pipeline finds the planted
+    containment pair, which MinHash near-dup misses. A NULL-text
+    document has no fingerprint row and never pairs."""
     from jsl_engine import text_ops_arrow as TA
 
     shared = "the quick brown fox jumps over the lazy dog near the river bank today"
     df = spark.createDataFrame(
         [
-            Row(doc_id=1, text="intro about databases and engines. " + shared + " closing words here."),
-            Row(doc_id=2, text="completely different opening sentence. " + shared + " unrelated tail text."),
-            Row(doc_id=3, text="nothing in common with the others at all, just some filler prose."),
-            Row(doc_id=4, text="nothing in common with the others at all, just some filler prose."),
-        ]
+            (1, "intro about databases and engines. " + shared + " closing words here."),
+            (2, "completely different opening sentence. " + shared + " unrelated tail text."),
+            (3, "nothing in common with the others at all, just some filler prose."),
+            (4, "nothing in common with the others at all, just some filler prose."),
+            (5, None),
+        ],
+        "doc_id long, text string",
     )
     flat = TA.winnow_flat_arrow(df)
     fps = {}
     for r in flat.collect():
         fps.setdefault(r.doc_id, set()).add(r.fp)
+    assert 5 not in fps
     assert fps[1] & fps[2]
     assert fps[3] == fps[4]
     assert not (fps[1] & fps[3])
 
     pairs = {(r.id_a, r.id_b): r.n_shared
              for r in TA.fingerprint_overlap_pairs_arrow(df, min_shared=2).collect()}
-    assert (1, 2) in pairs and (3, 4) in pairs
-    assert (1, 3) not in pairs
+    assert (1, 2) in pairs and pairs[(1, 2)] >= 2
+    assert (3, 4) in pairs
+    assert (1, 3) not in pairs and (1, 4) not in pairs
+    assert not any(5 in p for p in pairs)
+
+    # the containment case MinHash misses: full-doc Jaccard of 1 vs 2 is
+    # low (different intros/tails), so near-dup at 0.5 finds nothing
+    mh = T.minhash_near_duplicates(df.where("doc_id in (1,2)"), threshold=0.5)
+    assert not [r for r in mh.collect() if (r.id_a, r.id_b) == (1, 2)]
 
 
 def test_connected_components_multi_hop(spark):
@@ -624,9 +624,7 @@ def test_simhash_max_hamming_zero_exact_blocking(spark, docs):
     """max_hamming=0 = identical-signature blocking: one full-width
     64-bit block (the all-ones mask is -1 in two's complement — a
     positive 2^64-1 literal would not fit a bigint)."""
-    out = {(r.id_a, r.id_b): r.hamming
-           for r in T.simhash_near_duplicates(docs, max_hamming=0).collect()}
-    assert out == {(1, 2): 0}
+    assert _simhash_pairs(docs, max_hamming=0) == {(1, 2): 0}
 
 
 def test_connected_components_escalates_to_star_on_nonconvergence(
@@ -1228,7 +1226,7 @@ def test_fuzzy_contamination_finds_paraphrased_leak(spark):
     would still see most trigrams, but heavier paraphrase drops below
     any exact threshold while signatures stay close); unrelated docs
     stay clean, and the benchmark side never pairs with itself."""
-    from jsl_engine.text_ops_arrow import fuzzy_contamination_arrow
+    from jsl_engine.text_ops_arrow import fuzzy_contamination_exact_arrow
 
     base = ("the quick brown fox jumps over the lazy dog while the sun "
             "sets behind the quiet hills and the river flows east " * 3)
@@ -1243,8 +1241,8 @@ def test_fuzzy_contamination_finds_paraphrased_leak(spark):
         Row(doc_id=2, text="unrelated text on gardening soil and compost "
                            "heaps with worms and rain " * 3),
     ])
-    out = {(r.doc_id, r.bench_id): r.est_jaccard
-           for r in fuzzy_contamination_arrow(
+    out = {(r.doc_id, r.bench_id): r.jaccard
+           for r in fuzzy_contamination_exact_arrow(
                corpus, bench, threshold=0.3, bands=32).collect()}
     assert (1, 900) in out and out[(1, 900)] >= 0.3
     assert not any(d == 2 for d, _ in out)
@@ -1253,14 +1251,14 @@ def test_fuzzy_contamination_finds_paraphrased_leak(spark):
 def test_fuzzy_contamination_guard_and_broadcast_plan(spark):
     """Corpus-side boilerplate guard prunes before the join, and both
     benchmark sides (banded rows + signatures) broadcast."""
-    from jsl_engine.text_ops_arrow import fuzzy_contamination_arrow
+    from jsl_engine.text_ops_arrow import fuzzy_contamination_exact_arrow
 
     boiler = [(i, "auto generated header do not edit " * 8) for i in range(120)]
     df = spark.createDataFrame([Row(doc_id=i, text=t) for i, t in boiler])
     bench = spark.createDataFrame(
         [Row(doc_id=999, text="auto generated header do not edit " * 8)]
     )
-    q = fuzzy_contamination_arrow(df, bench, max_bucket=64)
+    q = fuzzy_contamination_exact_arrow(df, bench, max_bucket=64)
     # every corpus doc shares every band-bucket (identical text) -> all
     # buckets oversized -> pruned -> zero candidates despite true matches
     # (the guard trades recall on boilerplate for bounded volume)

@@ -110,8 +110,8 @@ def main(sf_dir: str) -> int:
 
     # 7. winnowing overlap: same guard-before-join property (the guard
     #    column is dropped pre-join), and no cartesian product
-    from jsl_engine.text_ops import fingerprint_overlap_pairs
-    wp = fingerprint_overlap_pairs(docs)
+    from jsl_engine.text_ops_arrow import fingerprint_overlap_pairs_arrow
+    wp = fingerprint_overlap_pairs_arrow(docs)
     ok &= check("winnow guard before self-join", wp,
                 must_contain=["__n", "Window"],
                 must_not=["CartesianProduct"])
@@ -129,8 +129,9 @@ def main(sf_dir: str) -> int:
 
     # 9. simhash pigeonhole banding: per-(block, value) bucket guard
     #    upstream of the self-join, exact bit_count verify, no cartesian
-    from jsl_engine.text_ops import simhash, simhash_pairs_from_hashes
-    sp = simhash_pairs_from_hashes(simhash(docs), max_hamming=3)
+    from jsl_engine.text_ops import simhash_pairs_from_hashes
+    from jsl_engine.text_ops_arrow import simhash_arrow
+    sp = simhash_pairs_from_hashes(simhash_arrow(docs), max_hamming=3)
     ok &= check("simhash guard before join", sp,
                 must_contain=["__bucket_n", "Window", "bit_count"],
                 must_not=["CartesianProduct"])
