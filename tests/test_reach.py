@@ -50,9 +50,9 @@ ALLOWED_UNREACHED = {
 }
 
 
-def _public_defs() -> set[str]:
+def _public_defs(root: Path = ROOT) -> set[str]:
     out = set()
-    for f in sorted((ROOT / "jsl_engine").glob("*.py")):
+    for f in sorted((root / "jsl_engine").glob("*.py")):
         for node in ast.parse(f.read_text()).body:
             if isinstance(
                 node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
@@ -61,7 +61,7 @@ def _public_defs() -> set[str]:
     return out
 
 
-def _references() -> set[str]:
+def _references(root: Path = ROOT) -> set[str]:
     refs: set[str] = set()
 
     def visit(node: ast.AST, own: str | None) -> None:
@@ -84,18 +84,21 @@ def _references() -> set[str]:
                 refs.add(name)
             visit(child, own)
 
-    for f in ROOT.rglob("*.py"):
-        parts = f.relative_to(ROOT).parts
+    for f in root.rglob("*.py"):
+        parts = f.relative_to(root).parts
         if parts[0] == "tests" or any(p.startswith(".") for p in parts):
             continue
         visit(ast.parse(f.read_text()), None)
     return refs
 
 
+def _unreached(root: Path = ROOT) -> set[str]:
+    refs = _references(root)
+    return {d for d in _public_defs(root) if d.split(".", 1)[1] not in refs}
+
+
 def test_every_public_engine_name_is_reached_or_allowed():
-    defs = _public_defs()
-    refs = _references()
-    unreached = {d for d in defs if d.split(".", 1)[1] not in refs}
+    unreached = _unreached()
     missing = sorted(unreached - set(ALLOWED_UNREACHED))
     assert not missing, (
         "public names only tests reach — delete them, or add them to "
@@ -103,3 +106,51 @@ def test_every_public_engine_name_is_reached_or_allowed():
     )
     stale = sorted(set(ALLOWED_UNREACHED) - unreached)
     assert not stale, f"allowlist entries now reached or gone: {stale}"
+
+
+def _tree(root: Path, files: dict[str, str]) -> Path:
+    for rel, text in files.items():
+        f = root / rel
+        f.parent.mkdir(parents=True, exist_ok=True)
+        f.write_text(text)
+    return root
+
+
+def test_reach_guard_flags_a_name_only_tests_reach(tmp_path):
+    """The guard can fail: a public engine function and class that only
+    a test uses are unreached, while one a job imports, one another
+    engine function calls, and a private helper are not."""
+    root = _tree(tmp_path, {
+        "jsl_engine/mod.py": (
+            "def live():\n    return _helper()\n\n"
+            "def inner():\n    return 1\n\n"
+            "def outer():\n    return inner()\n\n"
+            "def dead():\n    return 2\n\n"
+            "def _helper():\n    return 3\n\n"
+            "class Dead:\n    pass\n"
+        ),
+        "jobs/job.py": "from jsl_engine.mod import live, outer\nlive(); outer()\n",
+        "tests/test_mod.py": (
+            "from jsl_engine.mod import dead, Dead\n"
+            "def test_dead():\n    assert dead() == 2 and Dead()\n"
+        ),
+    })
+    assert _unreached(root) == {"mod.dead", "mod.Dead"}
+
+
+def test_reach_guard_ignores_self_reference_docstrings_and_hidden_dirs(tmp_path):
+    """What does not count as a reach: a recursive call to itself, the
+    name in a docstring or a comment, and code under a dot-directory.
+    A module-alias attribute call from a tool does count."""
+    root = _tree(tmp_path, {
+        "jsl_engine/mod.py": (
+            "def walk(n):\n"
+            '    """Calls walk on n - 1."""\n'
+            "    return walk(n - 1) if n else 0  # walk\n"
+        ),
+        "tools/notes_tool.py": '"""uses walk"""\n# walk(3)\n',
+        ".scratch/probe.py": "from jsl_engine.mod import walk\nwalk(3)\n",
+    })
+    assert _unreached(root) == {"mod.walk"}
+    _tree(root, {"tools/real_tool.py": "import jsl_engine.mod as m\nm.walk(3)\n"})
+    assert _unreached(root) == set()

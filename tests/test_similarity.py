@@ -54,6 +54,35 @@ def test_embedding_near_duplicates(spark, vectors):
     assert len(pairs) <= 3
 
 
+def test_embedding_near_dup_scores_are_exact_cosine(spark, vectors):
+    """Every emitted pair carries its exact cosine (the numpy value,
+    rounded to 6 places) and clears the threshold; each pair appears
+    once, oriented ``id_a < id_b``, however many bands it collides in.
+    At 2-plane bands nearly every qualifying pair collides somewhere
+    (``1 - (1 - p^2)^8`` ≈ 99% at cosine 0.5), so the verify — not the
+    bucketing — decides the output."""
+    df, vecs = vectors
+    vecs = vecs.astype("float64")  # Spark widens the float32 fixture exactly
+    threshold = 0.5
+    rows = S.embedding_near_duplicates(
+        df, threshold=threshold, n_planes=2, dim=16
+    ).collect()
+    pairs = [(r.id_a, r.id_b) for r in rows]
+    assert len(pairs) == len(set(pairs))
+    for r in rows:
+        assert r.id_a < r.id_b
+        exact = round(_np_cosine(vecs[r.id_a], vecs[r.id_b]), 6)
+        assert r.cos_sim == pytest.approx(exact, abs=2e-6)
+        assert r.cos_sim >= threshold
+    truth = {
+        (a, b) for a in range(len(vecs)) for b in range(a + 1, len(vecs))
+        if round(_np_cosine(vecs[a], vecs[b]), 6) >= threshold
+    }
+    assert set(pairs) <= truth
+    assert len(truth) >= 50  # the fixture has real work for the verify
+    assert len(set(pairs)) / len(truth) >= 0.9
+
+
 def test_embedding_near_dup_oversized_bucket_guard(spark):
     """A dense cluster bigger than max_bucket must contribute ZERO pairs
     (pruned before the self-join), while a small planted pair in another

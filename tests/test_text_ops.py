@@ -367,32 +367,33 @@ def test_arrow_simhash_pipeline_equivalence(spark):
     assert arrow == truth
 
 
-def test_arrow_winnowing_guarantee(spark):
-    """The winnowing guarantee: a shared passage of >= window+k-1 words
-    yields shared fingerprints; identical docs identical sets; disjoint
-    docs disjoint — and the overlap pipeline finds the planted
-    containment pair, which MinHash near-dup misses. A NULL-text
-    document has no fingerprint row and never pairs."""
-    from jsl_engine import text_ops_arrow as TA
+_WINNOW_SHARED = "the quick brown fox jumps over the lazy dog near the river bank today"
+_WINNOW_ROWS = [
+    (1, "intro about databases and engines. " + _WINNOW_SHARED + " closing words here."),
+    (2, "completely different opening sentence. " + _WINNOW_SHARED + " unrelated tail text."),
+    (3, "nothing in common with the others at all, just some filler prose."),
+    (4, "nothing in common with the others at all, just some filler prose."),
+]
 
-    shared = "the quick brown fox jumps over the lazy dog near the river bank today"
-    df = spark.createDataFrame(
-        [
-            (1, "intro about databases and engines. " + shared + " closing words here."),
-            (2, "completely different opening sentence. " + shared + " unrelated tail text."),
-            (3, "nothing in common with the others at all, just some filler prose."),
-            (4, "nothing in common with the others at all, just some filler prose."),
-            (5, None),
-        ],
-        "doc_id long, text string",
-    )
-    flat = TA.winnow_flat_arrow(df)
+
+def _fingerprint_sets(flat):
     fps = {}
     for r in flat.collect():
         fps.setdefault(r.doc_id, set()).add(r.fp)
-    assert 5 not in fps
-    assert fps[1] & fps[2]
-    assert fps[3] == fps[4]
+    return fps
+
+
+def test_winnowing_shared_passage_guarantee(spark):
+    """The winnowing guarantee: a shared passage of >= window+k-1 words
+    yields shared fingerprints; identical docs identical sets; disjoint
+    docs disjoint — and the overlap pipeline finds the planted
+    containment pair, which MinHash near-dup misses."""
+    from jsl_engine import text_ops_arrow as TA
+
+    df = spark.createDataFrame(_WINNOW_ROWS, "doc_id long, text string")
+    fps = _fingerprint_sets(TA.winnow_flat_arrow(df))
+    assert fps[1] & fps[2]  # shared passage -> shared fingerprint
+    assert fps[3] == fps[4]  # identical docs -> identical sets
     assert not (fps[1] & fps[3])
 
     pairs = {(r.id_a, r.id_b): r.n_shared
@@ -400,12 +401,39 @@ def test_arrow_winnowing_guarantee(spark):
     assert (1, 2) in pairs and pairs[(1, 2)] >= 2
     assert (3, 4) in pairs
     assert (1, 3) not in pairs and (1, 4) not in pairs
-    assert not any(5 in p for p in pairs)
 
     # the containment case MinHash misses: full-doc Jaccard of 1 vs 2 is
     # low (different intros/tails), so near-dup at 0.5 finds nothing
     mh = T.minhash_near_duplicates(df.where("doc_id in (1,2)"), threshold=0.5)
     assert not [r for r in mh.collect() if (r.id_a, r.id_b) == (1, 2)]
+
+
+def test_arrow_winnowing_guarantee(spark):
+    """Row-level rules of the Arrow winnowing kernel: a NULL-text
+    document has no fingerprint row and never pairs; a document shorter
+    than ``window`` shingles keeps exactly one fingerprint (its minimum
+    shingle hash), so it can still pair; and the input fan-out does not
+    change a single fingerprint row."""
+    from jsl_engine import text_ops_arrow as TA
+
+    df = spark.createDataFrame(
+        _WINNOW_ROWS + [(5, None), (6, "tiny doc"), (7, "tiny doc")],
+        "doc_id long, text string",
+    )
+    fps = _fingerprint_sets(TA.winnow_flat_arrow(df))
+    assert 5 not in fps
+    assert len(fps[6]) == 1 and fps[6] == fps[7]
+
+    balanced = sorted(tuple(r) for r in TA.winnow_flat_arrow(df).collect())
+    unbalanced = sorted(
+        tuple(r) for r in TA.winnow_flat_arrow(df, balance=False).collect()
+    )
+    assert balanced == unbalanced
+
+    pairs = {(r.id_a, r.id_b)
+             for r in TA.fingerprint_overlap_pairs_arrow(df, min_shared=1).collect()}
+    assert (6, 7) in pairs
+    assert not any(5 in p for p in pairs)
 
 
 def test_connected_components_multi_hop(spark):
