@@ -158,12 +158,9 @@ def q_session_stats_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_drift_report_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KS + PSI + Wasserstein-1 in ONE histogram pass (the shared
     binned scaffolding's payoff — this is the monitor a production job
-    runs instead of three separate scans). Since round 4 this query IS
-    the registry surface for the standalone binned operators
-    (``ks_drift_binned`` / ``psi_drift_binned`` /
-    ``wasserstein_drift_binned`` remain library API, pinned equal to the
-    report's columns in pytest — dropped as separate registry rows to
-    fit the driver's 50-query correctness window). Fully oracled."""
+    runs instead of three separate scans). The report is the engine's
+    only binned drift operator; pytest checks each of its columns
+    against a numpy reference. Fully oracled."""
     return tc.drift_report(
         _t(spark, sf_dir, "events"), "value", "event_type", bins=1024
     )
@@ -362,7 +359,7 @@ def q_exact_dup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup groups on the shared exact-dup identity
     (:func:`jsl_engine.text_ops.content_hash_expr` — sha256 with NULL
     text mapped to a sentinel group key, the SAME expression
-    exact_duplicates/dedup_exact and the dedup job's state rows use, so
+    dedup_exact and the dedup job's state rows use, so
     hashes from this report join against theirs): hash, group size,
     representative (min doc_id)."""
     from jsl_engine.text_ops import content_hash_expr
@@ -783,15 +780,14 @@ def q_pq_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_minhash_near_dup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-duplicate pairs, headline on the Arrow signature
-    kernel (the 10^12-doc path — HOF lambdas are the JVM variant's
-    interpreter floor) with an exact-verified contract: LSH banding
+    """MinHash+LSH near-duplicate pairs on the Arrow signature kernel
+    with an exact-verified contract: LSH banding
     proposes candidates, each is verified with exact word-5-gram
     Jaccard ≥ 0.5. Fully oracled: the DuckDB inverted-index oracle
     computes ALL pairs at the threshold, so a banding recall miss is a
-    hash mismatch. The JVM signature kernel
-    (:func:`jsl_engine.text_ops.minhash_near_duplicates`) stays
-    pytest-pinned equivalent for oracle diversity."""
+    hash mismatch. The Arrow signatures are the engine's one MinHash
+    hash family: the dedup job bands them and
+    :func:`jsl_engine.text_ops.lsh_recall_report` measures them."""
     from jsl_engine.text_ops_arrow import minhash_near_duplicates_exact_arrow
 
     # max_bucket lifted: the oracle states the UNQUALIFIED contract (all
@@ -1062,12 +1058,12 @@ def q_curate_fused_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     side composes the same generated quality/language/secret/license SQL
     fragments with the defect-class verdict CTE; `violations` is dropped
     (nested array — its exact paths are hash-gated by
-    `jsl_violations_docs`). Runs the **Arrow language engine** (the
-    composed jobs' scale path, ~2.5× the JVM rate) against the
-    JVM-derived language SQL — exact parity verified engine-vs-engine on
-    this exact modified-text input at sf0.01 AND sf0.1 before the
-    switch, so the hash gate now covers the production kernel; the JVM
-    operator stays independently oracled via `language_id_documents`."""
+    `jsl_violations_docs`). Its language column comes from the Arrow
+    kernel (:func:`jsl_engine.lang_arrow.language_id_arrow`, the fused
+    pass's only language engine) against the JVM-derived language SQL,
+    so the hash gate covers the production kernel; the JVM
+    :func:`jsl_engine.text_ops.language_id` stays independently oracled
+    via `language_id_documents`."""
     docs = _docs_with_licenses(spark, sf_dir).withColumn(
         "text",
         F.concat(
@@ -1079,7 +1075,7 @@ def q_curate_fused_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn("content", _docs_json_content())
     out = validate_df(
         docs, compile_schema(DOCS_JSON_SCHEMA), key_cols=("doc_id",),
-        curate=True, text_col="text", lang_engine="arrow",
+        curate=True, text_col="text",
     )
     return out.drop("violations")
 
@@ -1317,9 +1313,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     correctness gate covers the first 50 in insertion order, so the
     flagship ``jsl_*`` queries lead and every row stays green. Operators
     consolidated out of the registry (still library API + pytest):
-    the JVM MinHash twin (the Arrow kernel is the headline; JVM pinned
-    equivalent in pytest), the standalone binned drift ops (surface =
-    ``drift_report_events``), ``ngram_jaccard`` (its verify tail runs
+    ``ngram_jaccard`` (its verify tail runs
     inside the minhash/winnow headline queries with the identical
     oracle machinery), and the per-lang token rollup (a two-line
     composition of oracled ``text_profile``).

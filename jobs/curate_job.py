@@ -16,8 +16,8 @@ reassigns an existing document's fate:
    documents whose duplicate-line fraction or top-bigram share exceeds
    the bound — the Gopher-style filters that length/punctuation scores
    miss;
-2. **language**: :func:`jsl_engine.text_ops.language_id` restricted to
-   ``--langs`` (JVM regexp script counting + marker argmax);
+2. **language**: :func:`jsl_engine.lang_arrow.language_id_arrow` restricted
+   to ``--langs`` (Unicode-script counting + marker argmax);
 2b. **fluency** (with ``--min-logprob``, deliberately AFTER the language
    filter — a pooled multilingual model under-scores minority
    languages): :func:`jsl_engine.text_ops.unigram_logprob_score` drops
@@ -106,11 +106,11 @@ from pyspark.sql import functions as F
 
 from jsl_engine.partitioning import get_spark
 from jsl_engine.code_ops import license_scan
+from jsl_engine.lang_arrow import language_id_arrow
 from jsl_engine.redaction import redact_secrets
 from jsl_engine.sampling import hash_split, mixture_sample
 from jsl_engine.text_ops import (
     contamination,
-    language_id,
     quality_score,
     repetition_profile,
     unigram_logprob_score,
@@ -143,10 +143,6 @@ def main() -> int:
                     help="strip lines appearing in >= N documents before "
                          "scoring (corpus-level boilerplate removal, "
                          "CCNet-style; e.g. 5)")
-    ap.add_argument("--lang-engine", choices=("jvm", "arrow"), default="jvm",
-                    help="language-id engine for --langs: 'arrow' uses the "
-                         "numpy kernel (~2.5x the JVM rate, parity-pinned "
-                         "in tests/test_lang_arrow.py)")
     ap.add_argument("--licenses", default="",
                     help="comma-separated license allowlist (license_scan "
                          "ids, e.g. mit,apache-2.0); empty = keep all")
@@ -295,11 +291,7 @@ def main() -> int:
         n_repetition = n_quality
 
     if langs:
-        if args.lang_engine == "arrow":
-            from jsl_engine.lang_arrow import language_id_arrow as _lid_fn
-        else:
-            _lid_fn = language_id
-        lid = _lid_fn(survivors).where(F.col("lang_id").isin(langs))
+        lid = language_id_arrow(survivors).where(F.col("lang_id").isin(langs))
         survivors = survivors.join(lid.select("doc_id"), "doc_id").localCheckpoint()
         n_lang = survivors.count()
     else:

@@ -57,10 +57,6 @@ def main() -> int:
     ap.add_argument("--curate", action="store_true",
                     help="fused pass: quality/lang_id/n_secrets/license "
                          "ride the validation scan (zero extra scans)")
-    ap.add_argument("--lang-engine", choices=("jvm", "arrow"), default="jvm",
-                    help="language-id engine for --curate: 'arrow' swaps "
-                         "the dominant rider for the numpy kernel "
-                         "(~2.5x the JVM rate, parity-pinned)")
     ap.add_argument("--schemas", action="store_true",
                     help="schema-registry mode: per-lang schema map "
                          "(python/rust/go strict, java/c lax, js via the "
@@ -116,7 +112,6 @@ def main() -> int:
             # --schemas --curate composes: riders fuse into the same
             # registry-dispatch scan (validate_multi(..., curate=True))
             curate=args.curate,
-            lang_engine=args.lang_engine,
         )
     else:
         summary = run_validation_job(
@@ -126,7 +121,6 @@ def main() -> int:
             output_root=output_root,
             strict_instance_semantics=args.strict,
             curate=args.curate,
-            lang_engine=args.lang_engine,
         )
     elapsed = time.time() - t0
 

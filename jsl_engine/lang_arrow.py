@@ -1,13 +1,16 @@
-"""Arrow (numpy) language-id kernel — the scale twin of
-:func:`jsl_engine.text_ops.language_id`.
+"""Arrow (numpy) language-id kernel — the engine's production language
+ID: the fused curation pass (``validate_df(..., curate=True)``) and
+``jobs/curate_job.py --langs`` run it.
 
-The JVM operator costs ~0.31 core-ms/doc (8 script-class
-``regexp_count`` passes + 27 ``array_intersect`` marker votes per
-document — the dominant rider in the fused curation pass,
-BENCH/ANALYSIS.md round 4). This kernel replaces all of it with table
-lookups over a code-point array: one ``np.bincount`` gives every script
-count at once, letter/mark token boundaries come from a boolean table,
-and marker votes are Python set intersections against 16-word sets.
+The JVM operator :func:`jsl_engine.text_ops.language_id` costs ~0.31
+core-ms/doc (8 script-class ``regexp_count`` passes + 27
+``array_intersect`` marker votes per document, BENCH/ANALYSIS.md round
+4); it stays as this kernel's independent reference and as the
+``language_id_documents`` query. This kernel replaces all of it with
+table lookups over a code-point array: one ``np.bincount`` gives every
+script count at once, letter/mark token boundaries come from a boolean
+table, and marker votes are Python set intersections against 16-word
+sets.
 
 Exact-parity contract: the script / letter-mark tables and the
 lowercase map in :mod:`jsl_engine._uniprops` are **extracted from the

@@ -266,7 +266,6 @@ def run_validation_job(
     part_prefix_len: int = 4,
     strict_instance_semantics: bool = False,
     curate: bool = False,
-    lang_engine: str = "jvm",
     schemas: "dict[str, Schema] | None" = None,
     route_col: str = "lang",
     default_schema: "Schema | None" = None,
@@ -316,15 +315,15 @@ def run_validation_job(
         f"|k={','.join(key_cols)}|c={content_col}|p={part_prefix_len}"
         f"|s={int(strict_instance_semantics)}"
     )
-    # the curate riders' lang_id column is engine-dependent (jvm vs
-    # arrow diverge on exotic case mappings — the round-5 caveat), so
-    # the engine choice is part of the resume identity whenever the
-    # riders are in the sink; without curate it never reaches the sink
+    # the curate riders' lang_id column comes from the Arrow language
+    # kernel; "le=arrow" keeps the identity of sinks written when the
+    # engine was selectable, so those resume and sinks whose lang_id
+    # came from the retired JVM rider ("le=jvm") re-validate
     fingerprint = (
         registry_fingerprint(schemas, default_schema)
         if schemas is not None
         else schema.fingerprint()
-    ) + (f"+curate|le={lang_engine}" if curate else "") + job_conf
+    ) + ("+curate|le=arrow" if curate else "") + job_conf
     manifest_path = f"{output_root}/manifest"
     job_id = uuid.uuid4().hex[:12]
 
@@ -381,7 +380,6 @@ def run_validation_job(
         strict_instance_semantics=strict_instance_semantics,
         curate=curate,
         text_col=content_col,
-        lang_engine=lang_engine,
     )
     # Single Python pass: write the combined result (verdicts + nested
     # violations) once, then derive everything else from the SINK — a

@@ -238,7 +238,6 @@ def _validation_pass(
     max_nesting: "int | None",
     curate: bool,
     text_col: str,
-    lang_engine: str,
 ) -> DataFrame:
     """The one validation stage behind :func:`validate_df` and
     :func:`validate_multi`: prune the input (with ``curate``, behind the
@@ -253,7 +252,6 @@ def _validation_pass(
         df = _curation_riders(
             df, text_col=text_col, content_col=content_col,
             k0=key_cols[0], rest=tuple(key_cols[1:]),
-            lang_engine=lang_engine,
             extra_carry=(route_col,) if route_col is not None else (),
         )
         key_cols = tuple(key_cols) + ("quality", "lang_id", "n_secrets", "license")
@@ -324,7 +322,6 @@ def _curation_riders(
     content_col: str,
     k0: str,
     rest: tuple[str, ...],
-    lang_engine: str,
     extra_carry: tuple[str, ...] = (),
 ) -> DataFrame:
     """The map-only scorer chain (secret scan → quality score →
@@ -334,22 +331,9 @@ def _curation_riders(
     a fused copy of a scorer to drift. ``extra_carry`` columns (e.g. the
     registry route column) survive to the final projection."""
     from jsl_engine.code_ops import license_scan
+    from jsl_engine.lang_arrow import language_id_arrow
     from jsl_engine.redaction import secret_scan
-    from jsl_engine.text_ops import language_id, quality_score
-
-    if lang_engine == "arrow":
-        # balance=False: the fused pass's contract is ONE scan with zero
-        # Exchanges (plan-gated) — input conditioning for small inputs
-        # is the CALLER's concern here, not the rider's
-        import functools
-
-        from jsl_engine.lang_arrow import language_id_arrow
-
-        language_id = functools.partial(  # noqa: F811
-            language_id_arrow, balance=False
-        )
-    elif lang_engine != "jvm":
-        raise ValueError(f"lang_engine must be 'jvm' or 'arrow', got {lang_engine!r}")
+    from jsl_engine.text_ops import quality_score
 
     def dedup(cols: tuple[str, ...]) -> tuple[str, ...]:
         seen: list[str] = []
@@ -365,8 +349,12 @@ def _curation_riders(
     cur = quality_score(
         cur, text_col, k0, keep_cols=dedup(("n_secrets",) + carry)
     )
-    cur = language_id(
-        cur, text_col, k0, keep_cols=dedup(("quality", "n_secrets") + carry)
+    # balance=False: the fused pass's contract is ONE scan with zero
+    # Exchanges (plan-gated) — input conditioning for small inputs is
+    # the CALLER's concern here, not the rider's
+    cur = language_id_arrow(
+        cur, text_col, k0, keep_cols=dedup(("quality", "n_secrets") + carry),
+        balance=False,
     )
     return license_scan(
         cur, text_col=text_col, id_col=k0,
@@ -389,7 +377,6 @@ def validate_df(
     max_nesting: int | None = None,
     curate: bool = False,
     text_col: str = "text",
-    lang_engine: str = "jvm",
 ) -> DataFrame:
     """Validate every row's ``content_col`` against a compiled root schema.
 
@@ -427,34 +414,31 @@ def validate_df(
     At 10^12 files the corpus scan dominates every map-only operator, so
     quality scoring, language ID, secret counting and license
     classification ride along with the validation pass instead of each
-    re-reading 100 TB: the curation columns are computed in the JVM
-    projection *before* the mapInArrow validation stage and pass through
-    the Arrow exchange as zero-copy key columns. The whole job is a
-    single stage — one scan, zero joins, zero shuffles (plan-gated in
-    ``tests/test_spark_validate.py``). The riders are scored on
-    ``text_col``, which may equal ``content_col`` (source-code corpora:
-    the code IS the validated content); ``key_cols[0]`` is their id.
+    re-reading 100 TB: the curation columns are computed *before* the
+    mapInArrow validation stage and pass through it as zero-copy key
+    columns. The whole job is a single stage — one scan, zero joins,
+    zero shuffles (plan-gated in ``tests/test_spark_validate.py``). The
+    riders are scored on ``text_col``, which may equal ``content_col``
+    (source-code corpora: the code IS the validated content);
+    ``key_cols[0]`` is their id.
 
     Each rider column is the exact output of its standalone operator
-    (:func:`jsl_engine.text_ops.quality_score` /
-    :func:`~jsl_engine.text_ops.language_id`,
+    (:func:`jsl_engine.text_ops.quality_score`,
+    :func:`jsl_engine.lang_arrow.language_id_arrow`,
     :func:`jsl_engine.redaction.secret_scan`,
     :func:`jsl_engine.code_ops.license_scan`) — the fusion chains them
     through their ``keep_cols`` passthroughs, so there is one
-    implementation of every scorer, not a fused copy.
-
-    ``lang_engine="arrow"`` swaps the language stage for the numpy
-    kernel (:func:`jsl_engine.lang_arrow.language_id_arrow` — ~2.5× the
-    JVM rate, BENCH/ANALYSIS.md round 4, parity-pinned in
-    tests/test_lang_arrow.py): the dominant rider becomes a second
-    Arrow stage in the same single-scan plan — still zero joins, zero
-    shuffles."""
+    implementation of every scorer, not a fused copy. Language ID is
+    the numpy kernel (~2.5× the rate of the JVM
+    :func:`~jsl_engine.text_ops.language_id`, parity-pinned against it
+    in tests/test_lang_arrow.py), a second Arrow stage in the same
+    single-scan plan."""
     return _validation_pass(
         df, {}, schema, None,
         content_col=content_col, key_cols=key_cols,
         strict_instance_semantics=strict_instance_semantics,
         max_errors=max_errors, max_depth=max_depth, max_nesting=max_nesting,
-        curate=curate, text_col=text_col, lang_engine=lang_engine,
+        curate=curate, text_col=text_col,
     )
 
 
@@ -472,7 +456,6 @@ def validate_multi(
     max_nesting: int | None = None,
     curate: bool = False,
     text_col: str = "text",
-    lang_engine: str = "jvm",
 ) -> DataFrame:
     """Schema-registry validation: each row validates against the schema
     selected by its ``route_col`` value (per-language/per-dataset
@@ -491,7 +474,7 @@ def validate_multi(
     per-schema scans, no join against a registry table, and adding a
     schema is a broadcast refresh, not a plan change.
 
-    ``curate``, ``text_col`` and ``lang_engine`` fuse the curation
+    ``curate`` and ``text_col`` fuse the curation
     riders into the same scan exactly as in :func:`validate_df`; the
     rider columns come before ``schema_key``."""
     return _validation_pass(
@@ -499,7 +482,7 @@ def validate_multi(
         content_col=content_col, key_cols=key_cols,
         strict_instance_semantics=strict_instance_semantics,
         max_errors=max_errors, max_depth=max_depth, max_nesting=max_nesting,
-        curate=curate, text_col=text_col, lang_engine=lang_engine,
+        curate=curate, text_col=text_col,
     )
 
 

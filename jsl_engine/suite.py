@@ -37,7 +37,6 @@ def run_quality_suite(
     part_prefix_len: int = 4,
     strict_instance_semantics: bool = False,
     curate: bool = False,
-    lang_engine: str = "jvm",
 ) -> dict:
     """Run validation + uniqueness + RI + stats + drift; returns a dict of
     result DataFrames plus a scalar ``summary``.
@@ -50,9 +49,7 @@ def run_quality_suite(
     ``validated`` (and hence ``verdicts``) then also carries
     ``quality, lang_id, n_secrets, license`` per
     document at zero extra scans, and the summary gains
-    ``avg_quality``/``docs_with_secret``. ``lang_engine="arrow"``
-    forwards to the fused pass's numpy language kernel (same verdicts,
-    ~2.5× the rate — see :mod:`jsl_engine.lang_arrow`).
+    ``avg_quality``/``docs_with_secret``.
     """
     keyed = source.withColumn(
         "part_key", F.substring(F.col(key_cols[0]), 1, part_prefix_len)
@@ -66,7 +63,6 @@ def run_quality_suite(
         strict_instance_semantics=strict_instance_semantics,
         curate=curate,
         text_col=content_col,
-        lang_engine=lang_engine,
     ).cache()
 
     report: dict = {
@@ -79,11 +75,11 @@ def run_quality_suite(
             source.withColumn("content_len", F.length(content_col)), ["content_len"]
         ),
         "lang_drift_chi2": tc.chi_square_drift(keyed, "lang", "part_key"),
-        "size_drift_ks": tc.ks_drift_binned(
+        "size_drift_ks": tc.drift_report(
             keyed.withColumn("content_len", F.length(content_col)),
             "content_len",
             "part_key",
-        ),
+        ).select("part", "ks_d"),
     }
     if commits is not None:
         report["ri_violations"] = tc.ri_violations(

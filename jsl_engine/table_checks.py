@@ -12,17 +12,18 @@ Scale notes per operator:
 * **column stats** — single ``groupBy().agg`` pass with map-side partial
   aggregation; cardinality uses HLL++ (``approx_count_distinct``) on the
   scale path, exact ``count_distinct`` only for oracle-checked tests;
-* **uniqueness** — shuffle on the key columns; skewed keys are the caller's
-  concern (salt first via :mod:`jsl_engine.partitioning` if the key itself
-  is skewed — not needed for (repo,path,commit) whose cardinality ~ rows);
+* **uniqueness** — shuffle on the key columns; a skewed key is the
+  caller's concern (not a risk for (repo,path,commit), whose cardinality
+  ~ rows);
 * **referential integrity** — ``left_anti`` join with an explicit
   ``broadcast`` of the dimension when it fits (commits-per-repo dims are
   small relative to facts); falls back to shuffle join otherwise;
 * **drift** — the exact KS statistic needs a value-ordered cumulative
   distribution: expressed with window functions (one shuffle + sort);
-  at 10^12-row scale use :func:`ks_drift_binned` (fixed-width histogram →
-  one aggregation, error bounded by bin width); chi-square is a plain
-  two-level aggregation either way.
+  at 10^12-row scale use :func:`drift_report` (fixed-width histogram →
+  one aggregation, KS error bounded by bin mass; PSI and Wasserstein-1
+  from the same pass); chi-square is a plain two-level aggregation
+  either way.
 """
 
 from __future__ import annotations
@@ -214,7 +215,7 @@ def ks_drift(df: DataFrame, value_col: str, part_col: str) -> DataFrame:
 
     Exact formulation: with values ordered, D = max over observed values of
     |ECDF_part(v) − ECDF_rest(v)|. Implemented with cumulative window sums
-    — one global sort. Use :func:`ks_drift_binned` beyond sort-able scale.
+    — one global sort. Use :func:`drift_report` beyond sort-able scale.
     """
     base = df.select(
         F.col(part_col).alias("part"), F.col(value_col).alias("v")
@@ -268,7 +269,7 @@ def _binned_part_counts(
     lo: float | None,
     hi: float | None,
 ):
-    """Shared scaffolding for binned drift statistics (KS, PSI): ONE
+    """Scaffolding of :func:`drift_report`'s binned statistics: ONE
     full-data scan into fixed-width-bin counts, densified over the
     part×bin grid.
 
@@ -280,7 +281,7 @@ def _binned_part_counts(
     0.0)`` when the domain is empty/degenerate, where ``degenerate`` is
     the distinct-parts frame for the caller's zero-statistic fallback.
 
-    Domain handling (documented on :func:`ks_drift_binned`): fixed
+    Domain handling (documented on :func:`drift_report`): fixed
     ``lo``/``hi`` → action-free plan with edge-bin clamping; missing
     bounds derived from data in one combined driver action."""
     base = df.select(
@@ -329,179 +330,6 @@ def _binned_part_counts(
     return j, parts, width
 
 
-def ks_drift_binned(
-    df: DataFrame,
-    value_col: str,
-    part_col: str,
-    *,
-    bins: int = 1024,
-    lo: float | None = None,
-    hi: float | None = None,
-) -> DataFrame:
-    """Approximate one-vs-rest KS over fixed-width bins — the 10^12-row
-    path: no global sort; D error ≤ max bin mass.
-
-    Pass a fixed ``lo``/``hi`` domain to make the plan fully
-    **action-free and single-scan** — production drift monitors have
-    fixed domains, which also keeps bin edges stable across runs (a
-    property the run-over-run comparison wants anyway). Out-of-domain
-    values clamp into the edge bins (bin 0 below ``lo``, bin ``bins-1``
-    above ``hi``), so outliers cannot inflate the dense part×bin grid
-    past ``bins`` cells. A partially specified domain derives only the
-    missing bound from data (the given one is honored — bin edges on
-    that side stay stable). When both are omitted, min/max come from ONE
-    combined driver action (they were two — min/max agg + a full count —
-    before; the total row count now comes from a window over the tiny
-    per-partition aggregate instead of a rescan)."""
-    j, parts, _ = _binned_part_counts(
-        df, value_col, part_col, bins=bins, lo=lo, hi=hi
-    )
-    if j is None:
-        return parts.select("part", F.lit(0.0).alias("ks_d"))
-    w = Window.partitionBy("part").orderBy("bin").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    cum = j.select(
-        "part",
-        "bin",
-        F.sum("c_part").over(w).alias("cum_part"),
-        F.sum("c_tot").over(w).alias("cum_tot"),
-    )
-    return (
-        cum.join(parts, "part")
-        .withColumn(
-            "d",
-            F.abs(
-                F.col("cum_part") / F.col("n_part")
-                - (F.col("cum_tot") - F.col("cum_part")) / F.col("n_rest")
-            ),
-        )
-        .groupBy("part")
-        .agg(F.round(F.max("d"), ROUND).alias("ks_d"))
-    )
-
-
-def psi_drift_binned(
-    df: DataFrame,
-    value_col: str,
-    part_col: str,
-    *,
-    bins: int = 1024,
-    lo: float | None = None,
-    hi: float | None = None,
-    eps: float = 1e-6,
-) -> DataFrame:
-    """One-vs-rest Population Stability Index over fixed-width bins::
-
-        part, psi
-
-    ``psi = Σ_bins (p_part - p_rest) * ln(p_part / p_rest)`` with both
-    probabilities clamped to at least ``eps`` (the standard smoothing for
-    empty bins — without it a single bin observed in only one side sends
-    the statistic to ±inf). Conventional read: <0.1 stable, 0.1–0.25
-    moderate shift, >0.25 major shift.
-
-    Same scan discipline as :func:`ks_drift_binned` (shared
-    ``_binned_part_counts`` scaffolding): ONE full-data pass with
-    map-side combine into ≤ parts×bins cells, edge-bin clamping for a
-    fixed domain, action-free when ``lo``/``hi`` are given. Unlike KS,
-    PSI needs no cumulative window — it is a straight per-bin sum, so
-    the tail is one tiny aggregation over the dense grid.
-
-    North-rule context: third drift check next to KS (numeric shape) and
-    chi-square (categorical independence); PSI is what production
-    monitors actually alarm on because it is additive per bin and stable
-    under fixed domains. The reference has no drift checks (engine-level
-    addition; reference scope is src/lib.rs:114-118)."""
-    j, parts, _ = _binned_part_counts(
-        df, value_col, part_col, bins=bins, lo=lo, hi=hi
-    )
-    if j is None:
-        return parts.select("part", F.lit(0.0).alias("psi"))
-    p_part = F.greatest(
-        F.col("c_part") / F.col("n_part"), F.lit(float(eps))
-    )
-    p_rest = F.greatest(
-        (F.col("c_tot") - F.col("c_part")) / F.col("n_rest"), F.lit(float(eps))
-    )
-    return (
-        j.join(parts, "part")
-        .withColumn("term", (p_part - p_rest) * F.log(p_part / p_rest))
-        .groupBy("part")
-        .agg(F.round(F.sum("term"), ROUND).alias("psi"))
-    )
-
-
-def wasserstein_drift_binned(
-    df: DataFrame,
-    value_col: str,
-    part_col: str,
-    *,
-    bins: int = 1024,
-    lo: float | None = None,
-    hi: float | None = None,
-) -> DataFrame:
-    """One-vs-rest Wasserstein-1 (earth mover's) distance over
-    fixed-width bins::
-
-        part, w1
-
-    ``W1 = Σ_bins |ECDF_part - ECDF_rest| * bin_width`` — the discrete
-    form of ``∫|F−G|``. Complements the other drift checks: KS reports
-    the worst single gap (location-sensitive, scale-free), PSI the
-    log-weighted mass reallocation, W1 *how far* mass moved in value
-    units — a mean shift of δ gives W1 ≈ δ regardless of variance, which
-    is the number a "did the distribution move materially?" alarm wants.
-
-    Same single-scan scaffolding and cumulative window as
-    :func:`ks_drift_binned` (identical plan shape — only the final
-    aggregate differs: sum×width instead of max); action-free with a
-    fixed ``lo``/``hi`` domain. Discretization error ≤ width per bin of
-    moved mass, same trade as the binned KS.
-
-    The dense grid holds only bins observed in the total histogram, but
-    a CDF gap *persists* across unobserved bins (both CDFs are flat
-    there, at unequal heights) — so each occupied bin's gap is weighted
-    by the span to the next occupied bin (``lead(bin) - bin``; the last
-    occupied bin has gap 0, both CDFs having reached 1). KS needs no
-    such correction (a flat stretch cannot raise a maximum); for PSI
-    empty-total bins contribute eps-vs-eps = 0."""
-    j, parts, width = _binned_part_counts(
-        df, value_col, part_col, bins=bins, lo=lo, hi=hi
-    )
-    if j is None:
-        return parts.select("part", F.lit(0.0).alias("w1"))
-    w = Window.partitionBy("part").orderBy("bin").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    lead_w = Window.partitionBy("part").orderBy("bin")
-    cum = j.select(
-        "part",
-        "bin",
-        F.sum("c_part").over(w).alias("cum_part"),
-        F.sum("c_tot").over(w).alias("cum_tot"),
-    ).withColumn(
-        "span",
-        F.coalesce(F.lead("bin").over(lead_w) - F.col("bin"), F.lit(1)),
-    )
-    return (
-        cum.join(parts, "part")
-        .withColumn(
-            "gap",
-            F.abs(
-                F.col("cum_part") / F.col("n_part")
-                - (F.col("cum_tot") - F.col("cum_part")) / F.col("n_rest")
-            ),
-        )
-        .groupBy("part")
-        .agg(
-            F.round(
-                F.sum(F.col("gap") * F.col("span")) * F.lit(width), ROUND
-            ).alias("w1")
-        )
-    )
-
-
 def drift_report(
     df: DataFrame,
     value_col: str,
@@ -512,17 +340,43 @@ def drift_report(
     hi: float | None = None,
     eps: float = 1e-6,
 ) -> DataFrame:
-    """All three numeric drift statistics from ONE histogram pass::
+    """One-vs-rest binned drift — KS, PSI and Wasserstein-1 from ONE
+    histogram pass, the 10^12-row path (no global sort)::
 
         part, ks_d, psi, w1
 
-    The payoff of the shared ``_binned_part_counts`` scaffolding: the
-    monitor a production job actually runs computes KS (worst gap), PSI
+    The monitor a production job runs computes KS (worst gap), PSI
     (log-weighted reallocation) and W1 (mass moved, value units)
     together — one full-data scan into the dense part×bin grid, one
     cumulative window (KS and W1 share it; PSI needs none), one final
-    aggregate. Semantics identical to the standalone operators
-    (pytest-pinned); action-free with a fixed ``lo``/``hi``."""
+    aggregate. A caller that wants one statistic selects its column.
+
+    * ``ks_d`` — max over bins of ``|ECDF_part - ECDF_rest|``; error ≤
+      max bin mass against the exact :func:`ks_drift`.
+    * ``psi`` — ``Σ_bins (p_part - p_rest) * ln(p_part / p_rest)`` with
+      both probabilities clamped to at least ``eps`` (without it a bin
+      observed on only one side sends the statistic to ±inf).
+      Conventional read: <0.1 stable, 0.1–0.25 moderate, >0.25 major.
+    * ``w1`` — ``Σ_bins |ECDF_part - ECDF_rest| * bin_width``, the
+      discrete ``∫|F−G|``: a mean shift of δ gives W1 ≈ δ regardless of
+      variance. The grid holds only bins observed in the total
+      histogram, but a CDF gap persists across unobserved bins, so each
+      occupied bin's gap is weighted by the span to the next occupied
+      bin (``lead(bin) - bin``; the last one has gap 0).
+
+    Domain handling: pass a fixed ``lo``/``hi`` domain to make the plan
+    fully **action-free and single-scan** — production drift monitors
+    have fixed domains, which also keeps bin edges stable across runs.
+    Out-of-domain values clamp into the edge bins (bin 0 below ``lo``,
+    bin ``bins-1`` above ``hi``), so outliers cannot inflate the dense
+    part×bin grid past ``bins`` cells. A partially specified domain
+    derives only the missing bound from data (the given one is honored —
+    bin edges on that side stay stable). When both are omitted, min/max
+    come from ONE combined driver action; the total row count comes
+    from a window over the tiny per-partition aggregate, not a rescan.
+    An inverted caller domain (``lo >= hi``) raises; a degenerate data
+    domain (one distinct value, or no non-NULL values) reports 0.0 for
+    every statistic."""
     j, parts, width = _binned_part_counts(
         df, value_col, part_col, bins=bins, lo=lo, hi=hi
     )

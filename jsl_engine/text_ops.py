@@ -9,10 +9,10 @@ source, n_chars)`` table and are built Spark-first:
 * everything cheap stays in JVM expressions (``F.sha2``, ``F.xxhash64``,
   ``regexp_count``, ``transform``/``aggregate`` over arrays) — no Python
   in the hot path;
-* MinHash signatures use ``F.transform`` over a literal array of hash
-  seeds applied to shingle hashes — a few JVM expression evaluations per
-  row, then banding turns near-dup detection into an equi-join
-  (shuffle on band keys) instead of an O(n²) comparison;
+* MinHash signatures come from the Arrow kernel
+  (:func:`jsl_engine.text_ops_arrow.minhash_signatures_arrow`); banding
+  here turns near-dup detection into an equi-join (shuffle on band
+  keys) instead of an O(n²) comparison;
 * SimHash signatures come from the Arrow kernel
   (:func:`jsl_engine.text_ops_arrow.simhash_arrow`); the Hamming tail
   here is ``bit_count(a XOR b)`` — again a plain join + expression.
@@ -56,63 +56,6 @@ def shingles(col, n: int = 5):
 # exact dedup
 # ---------------------------------------------------------------------------
 
-def exact_duplicates(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    max_ids: int = 100, cache: bool = True,
-) -> DataFrame:
-    """Groups of byte-identical documents: ``content_hash, n_docs, doc_ids``.
-
-    EAGER by default: ``cache=True`` runs a Spark job at *construction*
-    (eager ``.cache()+count()`` of the ``(id, hash)`` projection, so
-    sha256 is computed once across the plan branches); pass
-    ``cache=False`` for action-free plan composition.
-
-    Scale shape — partial aggregation for the common case, bounded
-    buffers for the pathological one:
-
-    1. ``groupBy(hash).count()`` first: unique hashes (the vast majority
-       of a real corpus) are combined **map-side** and never ship full
-       rows — an earlier all-window formulation shuffled every input row
-       just to discover most groups had one member;
-    2. only rows in duplicate groups survive the join back (AQE picks a
-       broadcast join while the dup-group table is small, so unique rows
-       are dropped map-side too; the SMJ fallback at extreme dup rates
-       equals the old shape);
-    3. the ``max_ids`` cap is applied with a windowed rank over the
-       *duplicate rows only*, **before** the collect, so no aggregation
-       buffer ever holds a pathological group (the empty document,
-       license boilerplate — millions of ids at corpus scale) in full;
-       ``n_docs`` stays exact from step 1.
-
-    For scale dedup itself use :func:`dedup_exact`, which never
-    materializes id lists.
-
-    ``cache=True`` (default) eagerly caches the narrow ``(id, hash)``
-    projection: both plan branches (count aggregate + join probe) consume
-    it, and sha256 over every document is the dominant CPU cost — without
-    the cache it is computed twice. At 10^12 rows the projection is
-    ~70 B/doc; pass ``cache=False`` and write it to a table instead (the
-    manifest pattern) when that exceeds cluster cache capacity.
-    """
-    h = df.select(
-        F.col(id_col), content_hash_expr(text_col).alias("content_hash")
-    )
-    if cache:
-        h = h.cache()
-        h.count()
-    counts = h.groupBy("content_hash").agg(F.count(F.lit(1)).alias("n_docs"))
-    dup_counts = counts.where(F.col("n_docs") > 1)
-    dup_rows = h.join(dup_counts, "content_hash")
-    wo = Window.partitionBy("content_hash").orderBy(id_col)
-    return (
-        dup_rows.withColumn("__rn", F.row_number().over(wo))
-        .where(F.col("__rn") <= max_ids)
-        .groupBy("content_hash", "n_docs")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("doc_ids"))
-        .select("content_hash", "n_docs", "doc_ids")
-    )
-
-
 def content_hash_expr(text_col: str = "text"):
     """The exact-dup identity: sha256 with NULL text mapped to a
     sentinel group key. A bare ``sha2`` would give NULL docs a NULL
@@ -121,7 +64,7 @@ def content_hash_expr(text_col: str = "text"):
     :func:`dedup_exact`, and the dedup job's retained-state sha check
     would silently re-admit them across batches. The sentinel is not
     valid hex, so it cannot collide with a real digest. Shared by
-    :func:`exact_duplicates`, :func:`dedup_exact` and
+    :func:`dedup_exact`, the ``exact_dup_documents`` query and
     ``jobs/dedup_job.py``'s state rows — the identity MUST be the same
     expression everywhere or cross-batch exact checks drift."""
     return F.coalesce(F.sha2(F.col(text_col), 256), F.lit("__null__"))
@@ -140,51 +83,6 @@ def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 # ---------------------------------------------------------------------------
 # MinHash + LSH near-dup
 # ---------------------------------------------------------------------------
-
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 64,
-    shingle_n: int = 5,
-) -> DataFrame:
-    """``id, sig: array<bigint>`` — minimum of seed-perturbed xxhash64 over
-    shingles (no UDF).
-
-    Execution shape: posexplode the shingle hashes (a generator evaluates
-    the shingling exactly once per document), then ``num_hashes`` cheap
-    ``min(xxhash64(h, seed))`` aggregates per document. Hashing once and
-    re-hashing the base hash with each seed preserves MinHash semantics
-    (any pairwise-independent family works) at 1/num_hashes of the string
-    work.
-
-    The shingle hashes are materialized in a separate projection before
-    the per-seed mins; CollapseProject's alias-inlining is blocked here
-    (64 references from the array elements — measured working: this
-    formulation benches faster than both the explode+groupBy and the
-    single-tree fold alternatives). The collapse behavior is
-    formulation-specific, so re-measure when touching this.
-
-    NULL-text docs emit NO signature row (see the Arrow twin's
-    docstring for the full rationale — parity-pinned).
-    """
-    base = df.where(F.col(text_col).isNotNull()).select(
-        F.col(id_col),
-        F.transform(shingles(F.col(text_col), shingle_n), lambda x: F.xxhash64(x)).alias(
-            "__sh_hashes"
-        ),
-    )
-    sh = F.col("__sh_hashes")
-
-    def min_for(seed: int):
-        # closure factory, NOT a default argument: PySpark dispatches on
-        # lambda arity, so a 2-arg lambda would become an (element, index)
-        # lambda and silently bind the array index instead of the seed
-        return F.array_min(F.transform(sh, lambda h: F.xxhash64(h, F.lit(seed))))
-
-    mins = [min_for(i * 0x9E3779B97F4A7C15 % 2**31) for i in range(num_hashes)]
-    return base.select(F.col(id_col), F.array(*mins).alias("sig"))
-
 
 def band_rows(
     signatures: DataFrame, id_col: str, bands: int, num_hashes: int
@@ -283,42 +181,6 @@ def lsh_candidate_pairs(
         )
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_bands"))
-    )
-
-
-def minhash_near_duplicates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.8,
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_n: int = 5,
-    cache: bool = True,
-) -> DataFrame:
-    """End-to-end MinHash near-dup (EAGER by default: ``cache=True`` runs
-    a signature-materialization job at construction; ``cache=False``
-    keeps composition action-free): signatures → LSH candidates → verify
-    with estimated Jaccard (fraction of equal signature components) ≥
-    threshold. Returns ``id_a, id_b, est_jaccard``.
-
-    ``cache=True`` (default) caches the signature table because three
-    plan branches consume it (banding + both verify joins). Single-job
-    convenience: at 10^12 docs the signatures are ~0.5 KB/doc — there,
-    write them to a table once (the manifest pattern), run banding/verify
-    against the stored table, and pass ``cache=False``. The cache stays
-    pinned for the session (unpersisting before the returned frame is
-    consumed would defeat it)."""
-    sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n)
-    if cache:
-        # eager: within one action the join build sides start before
-        # the probe side has populated a lazy cache, so the signature
-        # plan would still run twice (measured on simhash at sf0.1:
-        # 10.7 s lazy vs ~7 s eager)
-        sigs = sigs.cache()
-        sigs.count()
-    return near_duplicates_from_signatures(
-        sigs, id_col, threshold, bands, num_hashes
     )
 
 
@@ -624,7 +486,7 @@ def verified_jaccard_pairs(
     # no gram row, so the inner joins drop any candidate pair touching a
     # NULL doc, for every generator that shares this tail (minhash,
     # winnowing, fuzzy contamination, component edges); NULL docs are
-    # exact-dup territory (sha256(NULL) groups them in exact_duplicates).
+    # exact-dup territory (content_hash_expr groups them in dedup_exact).
     sub = (
         df.join(F.broadcast(ids), id_col, "left_semi")
         .where(F.col(text_col).isNotNull())
@@ -1246,14 +1108,19 @@ def language_id(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     break deterministically (max hits, then lexicographically larger lang
     code via struct ordering). The token array and script counts are
     materialized in their own projection so the ~20 downstream references
-    don't re-run the split/regexp per language (the CollapseProject trap,
-    see :func:`minhash_signatures`).
+    don't re-run the split/regexp per language (the CollapseProject
+    trap: Catalyst re-inlines an aliased expression into every
+    reference).
 
     Heuristic by design (a ~100-language production model would be a
     broadcast fastText scorer behind the same column contract); fully
     oracled in the driver gate (SQL generated from the same
     marker/script tables) and gated by the per-language fixture pytest.
     ``keep_cols`` pass through untouched (see :func:`text_profile`).
+
+    The jobs and the fused curation pass run the numpy kernel
+    :func:`jsl_engine.lang_arrow.language_id_arrow`; this operator is
+    its independent reference in the parity tests.
     """
     t = F.col(text_col)
     cleaned = F.trim(
@@ -2265,13 +2132,17 @@ def lsh_recall_report(
     verification the banding forces downstream). Banding analysis gives
     the recall formula under uniform hashing — this report measures it
     under the corpus's actual similarity distribution, which is what a
-    production run tunes (num_hashes, bands, threshold) against.
+    production run tunes (num_hashes, bands, threshold) against. The
+    signatures are :func:`jsl_engine.text_ops_arrow.minhash_signatures_arrow`,
+    the family ``jobs/dedup_job.py`` bands, so the report measures the
+    job's own banding.
 
     The sample is the ``sample_docs`` lowest salted content hashes
     (engine-portable, stable under repartition/growth — the sampling
     module's contract), so successive tuning runs score the same
     sample."""
     from jsl_engine.sampling import SALT_RECALL_EVAL, order_hash
+    from jsl_engine.text_ops_arrow import minhash_signatures_arrow
 
     pruned = df.select(id_col, text_col)
     sampled = (
@@ -2285,7 +2156,9 @@ def lsh_recall_report(
         sampled, threshold=threshold, n=shingle_n,
         text_col=text_col, id_col=id_col, max_docs=sample_docs,
     )
-    sigs = minhash_signatures(sampled, text_col, id_col, num_hashes, shingle_n)
+    sigs = minhash_signatures_arrow(
+        sampled, text_col, id_col, num_hashes, shingle_n
+    )
     cands = lsh_candidate_pairs(
         sigs, id_col, bands, max_bucket=max_bucket, num_hashes=num_hashes
     )

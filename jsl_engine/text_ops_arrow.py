@@ -1,17 +1,16 @@
 """Arrow-batched (numpy) MinHash / SimHash signature kernels.
 
-The JVM variants in :mod:`jsl_engine.text_ops` evaluate their
-``transform``/``aggregate`` lambdas in Spark's expression interpreter —
-higher-order functions do not participate in whole-stage codegen — which
-sets a ~1 ms/doc/core floor for 64-hash signatures over ~300 shingles
-(docs/DESIGN.md "Higher-order functions are interpreted"). At 10^12
-documents that floor is ~35 executor-hours per signature pass, so these
-Arrow variants are the scale path: one numpy matrix per Arrow batch,
-~10-20× the JVM rate, same distributed shape (a narrow signature table
-feeding the identical LSH banding / Hamming blocking joins).
+A JVM signature built from ``transform``/``aggregate`` lambdas runs in
+Spark's expression interpreter — higher-order functions do not
+participate in whole-stage codegen — which sets a ~1 ms/doc/core floor
+for 64-hash signatures over ~300 shingles (docs/DESIGN.md "Higher-order
+functions are interpreted"). At 10^12 documents that floor is ~35
+executor-hours per signature pass, so the signatures are computed here:
+one numpy matrix per Arrow batch, ~10-20× the interpreted rate, feeding
+the LSH banding / Hamming blocking joins of :mod:`jsl_engine.text_ops`.
 
-SimHash and winnowing have only these Arrow kernels; MinHash keeps its
-JVM twin in :mod:`jsl_engine.text_ops` as well.
+MinHash, SimHash and winnowing have only these Arrow kernels; the
+MinHash signatures below are the engine's one MinHash hash family.
 
 Hash family: a genuinely 64-bit shingle fingerprint — each word is
 hashed to 64 bits (forward crc32 in the high half, byte-reversed crc32
@@ -27,10 +26,8 @@ thousands of docs), so the max_bucket guard would prune essentially all
 buckets and unrelated docs would share >= min_shared fingerprints by
 collision. Hashing per word instead of per shingle also removes the
 per-shingle string join, so the fix is *faster* than the scheme it
-replaces. Values differ from the JVM xxhash64 family; MinHash
-semantics are identical (any well-mixed family works; equivalence is
-pinned by the same planted-dup and estimate-tracking tests as the JVM
-variant).
+replaces. MinHash semantics need only a well-mixed family; the
+planted-dup and estimate-tracking tests pin them on this one.
 """
 
 from __future__ import annotations
@@ -231,10 +228,11 @@ def minhash_signatures_arrow(
 
     Per batch: shingle+crc32 per document (C-speed string work), then one
     vectorized ``splitmix64(shingles ⊕ seeds).min(axis=0)`` per document.
-    Output shape matches :func:`jsl_engine.text_ops.minhash_signatures`,
-    so LSH banding and verification compose unchanged.
+    The signature table is the interface LSH banding
+    (:func:`jsl_engine.text_ops.lsh_candidate_pairs`) and verification
+    compose on.
 
-    NULL-text docs emit NO signature row (pinned with the JVM twin):
+    NULL-text docs emit NO signature row (pinned in tests):
     they have no shingles, so they can never satisfy the near-dup
     contract — and without the exclusion their sentinel signatures
     collide in every band, flooding candidate buckets (and, on the
@@ -414,15 +412,20 @@ def minhash_near_duplicates_arrow(
     ``cache=False`` keeps composition action-free): the shared LSH
     banding + estimated-Jaccard tail
     (:func:`jsl_engine.text_ops.near_duplicates_from_signatures`) — the
-    signature table is the interface. Cache note as on the JVM variant:
-    the signature cache stays pinned for the session; long-lived drivers
-    pass ``cache=False`` and materialize to a table instead."""
+    signature table is the interface. ``cache=True`` caches the
+    signature table because three plan branches consume it (banding +
+    both verify joins); the cache stays pinned for the session, so
+    long-lived drivers pass ``cache=False`` and materialize to a table
+    instead."""
     from jsl_engine.text_ops import near_duplicates_from_signatures
 
     sigs = minhash_signatures_arrow(df, text_col, id_col, num_hashes, shingle_n)
     if cache:
         sigs = sigs.cache()
-        sigs.count()  # eager: see the JVM variant
+        # eager: within one action the join build sides start before
+        # the probe side has populated a lazy cache, so the signature
+        # plan would still run twice
+        sigs.count()
     return near_duplicates_from_signatures(sigs, id_col, threshold, bands, num_hashes)
 
 
@@ -445,7 +448,7 @@ def minhash_near_duplicates_exact_arrow(
     candidates surviving the ``max_bucket`` oversized-bucket guard**: a
     duplicate cluster larger than ``max_bucket`` collides in EVERY band
     and is pruned whole (that pathology is exact-dup territory — run
-    :func:`jsl_engine.text_ops.exact_duplicates` first, or lift
+    :func:`jsl_engine.text_ops.dedup_exact` first, or lift
     ``max_bucket`` for the unqualified contract, as the oracled driver
     query does). With 16 bands × 4 rows the per-pair miss odds at
     Jaccard 0.8 are (1-0.8⁴)¹⁶ ≈ 2·10⁻⁴ and fall super-exponentially

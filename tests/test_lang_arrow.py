@@ -130,9 +130,11 @@ def test_null_text_is_und(spark):
 
 
 def test_fused_curate_pass_arrow_engine_parity(spark):
-    """validate_df(curate=True, lang_engine='arrow') must equal the JVM-engine
-    fused pass row-for-row on a generated corpus (the composed-job
-    surface of the kernel), and stay single-scan / zero-shuffle."""
+    """The fused pass (``validate_df(curate=True)``) runs the Arrow
+    language kernel: its ``lang_id`` equals the JVM
+    :func:`~jsl_engine.text_ops.language_id` row for row on a generated
+    corpus (the composed-job surface of the kernel), and the pass stays
+    single-scan / zero-shuffle."""
     from jsl_engine.corpus import CODE_FILE_SCHEMA, generate_corpus
     from jsl_engine.schema import compile_schema
     from jsl_engine.spark_validate import validate_df
@@ -140,22 +142,18 @@ def test_fused_curate_pass_arrow_engine_parity(spark):
     schema = compile_schema(CODE_FILE_SCHEMA)
     src = generate_corpus(spark, 2000, seed=5).cache()
     try:
-        def rows(engine):
-            out = validate_df(
-                src, schema, content_col="content", text_col="content",
-                key_cols=("repo", "path", "commit"), curate=True,
-                lang_engine=engine,
-            )
-            return sorted(map(tuple, out.drop("violations").collect()))
-
-        assert rows("arrow") == rows("jvm")
-        plan = (
-            validate_df(
-                src, schema, content_col="content", text_col="content",
-                key_cols=("repo", "path", "commit"), curate=True,
-                lang_engine="arrow",
-            )._jdf.queryExecution().executedPlan().toString()
+        fused = validate_df(
+            src, schema, content_col="content", text_col="content",
+            key_cols=("repo", "path", "commit"), curate=True,
         )
+        got = sorted(map(tuple, fused.select(
+            "repo", "path", "commit", "lang_id").collect()))
+        jvm = T.language_id(src, "content", "repo", keep_cols=("path", "commit"))
+        want = sorted(map(tuple, jvm.select(
+            "repo", "path", "commit", "lang_id").collect()))
+        assert len(got) == 2000
+        assert got == want
+        plan = fused._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan
     finally:
         src.unpersist()

@@ -385,25 +385,23 @@ def test_curate_flag_is_part_of_resume_identity(spark, corpus, tmp_path):
 
 
 def test_lang_engine_is_part_of_curate_resume_identity(spark, corpus, tmp_path):
-    """The curate riders' lang_id column is engine-dependent (jvm vs
-    arrow diverge on exotic case mappings), so resuming a curate run
-    under the OTHER engine must re-validate every partition — never
-    leave one sink mixing the two engines' semantics. Without curate
-    the engine never reaches the sink, so plain runs stay resumable
-    across the flag."""
-    root = str(tmp_path / "lang_engine_resume")
+    """The curate riders' lang_id comes from the Arrow language kernel,
+    and the resume fingerprint keeps the ``+curate|le=arrow`` tag it
+    had when the engine was selectable: sinks written under the Arrow
+    engine still resume, and sinks whose lang_id came from the retired
+    JVM rider (``le=jvm``) re-validate instead of mixing semantics."""
+    root = str(tmp_path / "curate_engine_tag")
     schema = compile_schema(CODE_FILE_SCHEMA)
-    r1 = run_validation_job(spark, corpus, schema, output_root=root,
-                            curate=True, lang_engine="jvm")
+    r1 = run_validation_job(spark, corpus, schema, output_root=root, curate=True)
     assert r1["partitions_pending"] > 0
-    r2 = run_validation_job(spark, corpus, schema, output_root=root,
-                            curate=True, lang_engine="arrow")
-    assert r2["partitions_pending"] == r1["partitions_pending"]
-    assert r2["partitions_committed"] == 0
-    # same engine resumes against itself
-    r3 = run_validation_job(spark, corpus, schema, output_root=root,
-                            curate=True, lang_engine="arrow")
-    assert r3["partitions_pending"] == 0
+    fps = {r.schema_fingerprint
+           for r in read_manifest(spark, f"{root}/manifest").collect()}
+    assert fps == {
+        schema.fingerprint()
+        + "+curate|le=arrow|k=repo,path,commit|c=content|p=4|s=0"
+    }
+    r2 = run_validation_job(spark, corpus, schema, output_root=root, curate=True)
+    assert r2["partitions_pending"] == 0
 
 
 def test_content_sig_multiplicity_sensitive(spark):

@@ -52,20 +52,6 @@ def test_media_stats_prunes_payload(spark, tmp_path):
     assert {r.kind for r in stats.collect()} == {"image", "audio", "video"}
 
 
-def test_exact_duplicates_id_cap(spark):
-    """The doc_ids cap must bound the list while n_docs stays exact."""
-    from pyspark.sql import Row
-    from jsl_engine import text_ops as T
-
-    df = spark.createDataFrame(
-        [Row(doc_id=i, text="same text") for i in range(50)]
-        + [Row(doc_id=99, text="unique")]
-    )
-    [row] = T.exact_duplicates(df, max_ids=5).collect()
-    assert row.n_docs == 50
-    assert row.doc_ids == [0, 1, 2, 3, 4]
-
-
 def test_synth_media_deterministic(spark):
     a = M.synth_media(spark, 40, seed=1, partitions=2).collect()
     b = M.synth_media(spark, 40, seed=1, partitions=4).collect()

@@ -145,14 +145,15 @@ def test_band_exchange_keeps_shuffle_partitions(spark):
     from pyspark.sql import Row
 
     from jsl_engine.similarity import embedding_near_duplicates
-    from jsl_engine.text_ops import lsh_candidate_pairs, minhash_signatures
+    from jsl_engine.text_ops import lsh_candidate_pairs
+    from jsl_engine.text_ops_arrow import minhash_signatures_arrow
 
     n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     docs = spark.createDataFrame(
         [Row(doc_id=i, text=f"alpha beta gamma delta {i % 40} epsilon {i % 7} eta")
          for i in range(400)]
     )
-    sigs = minhash_signatures(docs, "text", "doc_id", 32, 3).cache()
+    sigs = minhash_signatures_arrow(docs, "text", "doc_id", 32, 3).cache()
     sigs.count()
     rng = random.Random(7)
     vecs = spark.createDataFrame(

@@ -40,13 +40,7 @@ ALLOWED_UNREACHED = {
     "streaming.windowed_verdict_counts": "streaming feature surface (library API)",
     "suite.run_quality_suite": "one-call quality-suite feature surface (library API)",
     "text_ops.ngram_jaccard": "reference of the verified-Jaccard parity test",
-    # twins of a reached path, kept until the next census decides them
-    # (ROADMAP item 3)
-    "table_checks.psi_drift_binned": "census round 3: twin of drift_report's psi column",
-    "table_checks.wasserstein_drift_binned": "census round 3: twin of drift_report's w1 column",
-    "text_ops.duplicate_spans": "census round 3: JVM twin of duplicate_spans_arrow",
-    "text_ops.exact_duplicates": "census round 3: group report beside the reached dedup_exact",
-    "text_ops.minhash_near_duplicates": "census round 3: JVM twin of the Arrow MinHash pipeline",
+    "text_ops.duplicate_spans": "exact-string reference the span parity test holds duplicate_spans_arrow's hashed kernel against",
 }
 
 

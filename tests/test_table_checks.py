@@ -86,13 +86,14 @@ def test_ks_drift_exact(spark):
 
 
 def test_ks_drift_binned_close(spark):
+    """drift_report's binned ks_d stays within 0.02 of the exact ks_drift."""
     rng = np.random.default_rng(1)
     a = rng.normal(0, 1, 500)
     b = rng.normal(1.0, 1.0, 500)
     rows = [Row(p="a", v=float(x)) for x in a] + [Row(p="b", v=float(x)) for x in b]
     df = spark.createDataFrame(rows)
     exact = {r.part: r.ks_d for r in tc.ks_drift(df, "v", "p").collect()}
-    approx = {r.part: r.ks_d for r in tc.ks_drift_binned(df, "v", "p", bins=512).collect()}
+    approx = {r.part: r.ks_d for r in tc.drift_report(df, "v", "p", bins=512).collect()}
     for p in ("a", "b"):
         assert abs(exact[p] - approx[p]) < 0.02
 
@@ -203,14 +204,14 @@ def test_binned_ks_and_chi2_scan_discipline(spark):
         return out, len(tracker.getJobIdsForGroup(group))
 
     _, n_fixed = jobs_during(
-        lambda: tc.ks_drift_binned(df, "v", "part", lo=0.0, hi=16.0)
+        lambda: tc.drift_report(df, "v", "part", lo=0.0, hi=16.0)
     )
     assert n_fixed == 0
 
     # one ACTION (combined min/max agg; AQE materializes its shuffle as a
     # separate job, so <= 2 jobs) — the old shape ran a second full-count
     # action on top, i.e. >= 3 jobs here
-    _, n_derived = jobs_during(lambda: tc.ks_drift_binned(df, "v", "part"))
+    _, n_derived = jobs_during(lambda: tc.drift_report(df, "v", "part"))
     assert 1 <= n_derived <= 2
 
     chi, n_chi = jobs_during(lambda: tc.chi_square_drift(df, "cat", "part"))
@@ -228,8 +229,8 @@ def test_binned_ks_and_chi2_scan_discipline(spark):
 
     # fixed-domain result equals derived-domain result when lo/hi match
     a = {r.part: r.ks_d for r in
-         tc.ks_drift_binned(df, "v", "part", lo=0.0, hi=16.0).collect()}
-    b = {r.part: r.ks_d for r in tc.ks_drift_binned(df, "v", "part").collect()}
+         tc.drift_report(df, "v", "part", lo=0.0, hi=16.0).collect()}
+    b = {r.part: r.ks_d for r in tc.drift_report(df, "v", "part").collect()}
     assert a == b
 
 
@@ -242,15 +243,15 @@ def test_binned_ks_fixed_domain_clamps_and_partial_bounds(spark):
     rows = [Row(part="a" if i % 2 else "b", v=float(i % 10)) for i in range(200)]
     rows += [Row(part="a", v=-1e6), Row(part="b", v=1e6)]  # wild outliers
     df = spark.createDataFrame(rows)
-    out = tc.ks_drift_binned(df, "v", "part", bins=64, lo=0.0, hi=9.0).collect()
+    out = tc.drift_report(df, "v", "part", bins=64, lo=0.0, hi=9.0).collect()
     assert len(out) == 2
     assert all(0.0 <= r.ks_d <= 1.0 for r in out)
 
     # partial spec: lo honored, hi derived — equals the fully-specified call
     a = {r.part: r.ks_d
-         for r in tc.ks_drift_binned(df, "v", "part", bins=64, lo=0.0).collect()}
+         for r in tc.drift_report(df, "v", "part", bins=64, lo=0.0).collect()}
     b = {r.part: r.ks_d
-         for r in tc.ks_drift_binned(df, "v", "part", bins=64, lo=0.0, hi=1e6).collect()}
+         for r in tc.drift_report(df, "v", "part", bins=64, lo=0.0, hi=1e6).collect()}
     assert a == b
 
 
@@ -280,7 +281,7 @@ def _psi_numpy(values_by_part, bins, lo, hi, eps=1e-6):
 
 
 def test_psi_drift_binned(spark):
-    """PSI matches an independent numpy implementation; identical
+    """drift_report's PSI matches an independent numpy implementation; identical
     distributions score ~0, a shifted partition scores past the 0.25
     'major shift' alarm threshold."""
     rng = np.random.default_rng(7)
@@ -295,7 +296,7 @@ def test_psi_drift_binned(spark):
     df = spark.createDataFrame(rows)
     got = {
         r.part: r.psi
-        for r in tc.psi_drift_binned(
+        for r in tc.drift_report(
             df, "v", "part", bins=64, lo=-5.0, hi=5.0
         ).collect()
     }
@@ -313,7 +314,7 @@ def test_psi_drift_binned(spark):
     )
     stable = {
         r.part: r.psi
-        for r in tc.psi_drift_binned(
+        for r in tc.drift_report(
             iid, "v", "part", bins=64, lo=-5.0, hi=5.0
         ).collect()
     }
@@ -322,8 +323,8 @@ def test_psi_drift_binned(spark):
 
 def test_psi_drift_binned_scan_discipline_and_degenerate(spark):
     """Fixed-domain PSI is action-free at plan-construction time (the
-    ks_drift_binned scale gate, inherited via the shared scaffolding);
-    a degenerate domain yields psi=0 rows instead of a divide-by-zero."""
+    binned-KS scale gate: one scaffolding serves every column); a
+    degenerate domain yields psi=0 rows instead of a divide-by-zero."""
     import uuid
 
     df = spark.createDataFrame(
@@ -334,13 +335,13 @@ def test_psi_drift_binned_scan_discipline_and_degenerate(spark):
     group = f"psi-probe-{uuid.uuid4()}"
     sc.setJobGroup(group, "psi scan-discipline probe")
     try:
-        tc.psi_drift_binned(df, "v", "part", lo=0.0, hi=16.0)
+        tc.drift_report(df, "v", "part", lo=0.0, hi=16.0)
     finally:
         sc.setJobGroup(None, None)
     assert len(tracker.getJobIdsForGroup(group)) == 0
 
     const = spark.createDataFrame([Row(part="a", v=3.0), Row(part="b", v=3.0)])
-    out = {r.part: r.psi for r in tc.psi_drift_binned(const, "v", "part").collect()}
+    out = {r.part: r.psi for r in tc.drift_report(const, "v", "part").collect()}
     assert out == {"a": 0.0, "b": 0.0}
 
 
@@ -366,7 +367,7 @@ def _w1_numpy(values_by_part, bins, lo, hi):
 
 
 def test_wasserstein_drift_binned(spark):
-    """W1 matches a fully-densified numpy reference (exercising the
+    """drift_report's W1 matches a fully-densified numpy reference (exercising the
     span weighting across empty interior bins), and a pure mean shift
     of delta reports W1 ~ delta in value units."""
     rng = np.random.default_rng(11)
@@ -379,7 +380,7 @@ def test_wasserstein_drift_binned(spark):
     )
     got = {
         r.part: r.w1
-        for r in tc.wasserstein_drift_binned(
+        for r in tc.drift_report(
             df, "v", "part", bins=512, lo=-6.0, hi=7.0
         ).collect()
     }
@@ -403,7 +404,7 @@ def test_wasserstein_drift_binned(spark):
     )
     got_s = {
         r.part: r.w1
-        for r in tc.wasserstein_drift_binned(
+        for r in tc.drift_report(
             sparse, "v", "part", bins=1000, lo=0.0, hi=100.0
         ).collect()
     }
@@ -465,24 +466,46 @@ def test_snapshot_diff(spark):
     assert sorted(r.path for r in todo.collect()) == ["b.py", "d.py"]
 
 
+def _ks_binned_numpy(values_by_part, bins, lo, hi):
+    """Independent numpy reference of the binned one-vs-rest KS: the
+    largest ECDF gap over fixed-width bins (same binning)."""
+    width = (hi - lo) / bins
+    counts = {
+        p: np.bincount(
+            np.clip(np.floor((np.asarray(v) - lo) / width).astype(int), 0, bins - 1),
+            minlength=bins,
+        )
+        for p, v in values_by_part.items()
+    }
+    total = sum(counts.values())
+    out = {}
+    for p, c in counts.items():
+        rest = total - c
+        cdf_p = np.cumsum(c) / c.sum()
+        cdf_r = np.cumsum(rest) / rest.sum()
+        out[p] = float(np.abs(cdf_p - cdf_r).max())
+    return out
+
+
 def test_drift_report_equals_standalone_ops(spark):
-    """The one-pass combined report must produce exactly the standalone
-    operators' statistics, and stay action-free with a fixed domain."""
+    """The one-pass report's three columns each equal their standalone
+    numpy reference, and the report stays action-free with a fixed
+    domain."""
     import uuid
 
     rng = np.random.default_rng(23)
-    rows = ([Row(part="a", v=float(x)) for x in rng.normal(0, 1, 2000)]
-            + [Row(part="b", v=float(x)) for x in rng.normal(0.7, 1.3, 2500)])
+    vals = {"a": rng.normal(0, 1, 2000), "b": rng.normal(0.7, 1.3, 2500)}
+    rows = [Row(part=p, v=float(x)) for p, arr in vals.items() for x in arr]
     df = spark.createDataFrame(rows)
     kw = dict(bins=256, lo=-6.0, hi=7.0)
     rep = {r.part: r for r in tc.drift_report(df, "v", "part", **kw).collect()}
-    ks = {r.part: r.ks_d for r in tc.ks_drift_binned(df, "v", "part", **kw).collect()}
-    psi = {r.part: r.psi for r in tc.psi_drift_binned(df, "v", "part", **kw).collect()}
-    w1 = {r.part: r.w1 for r in tc.wasserstein_drift_binned(df, "v", "part", **kw).collect()}
+    ks = _ks_binned_numpy(vals, 256, -6.0, 7.0)
+    psi = _psi_numpy(vals, 256, -6.0, 7.0)
+    w1 = _w1_numpy(vals, 256, -6.0, 7.0)
     for p in ("a", "b"):
-        assert rep[p].ks_d == ks[p]
-        assert rep[p].psi == psi[p]
-        assert rep[p].w1 == w1[p]
+        assert rep[p].ks_d == pytest.approx(ks[p], abs=2e-6)
+        assert rep[p].psi == pytest.approx(psi[p], abs=2e-6)
+        assert rep[p].w1 == pytest.approx(w1[p], abs=2e-6)
 
     sc = spark.sparkContext
     tracker = sc.statusTracker()
@@ -505,14 +528,13 @@ def test_drift_inverted_explicit_domain_raises(spark):
         [Row(part="a", v=float(i)) for i in range(10)]
         + [Row(part="b", v=float(i)) for i in range(10)]
     )
-    for fn in (tc.ks_drift_binned, tc.psi_drift_binned,
-               tc.wasserstein_drift_binned, tc.drift_report):
-        with pytest.raises(ValueError, match="inverted drift domain"):
-            fn(df, "v", "part", lo=7.0, hi=1.0)
+    with pytest.raises(ValueError, match="inverted drift domain"):
+        tc.drift_report(df, "v", "part", lo=7.0, hi=1.0)
     # constant column (data-derived degenerate domain): still the 0.0 fallback
     const = spark.createDataFrame([Row(part="a", v=1.0), Row(part="b", v=1.0)])
-    out = {r.part: r.ks_d for r in tc.ks_drift_binned(const, "v", "part").collect()}
-    assert out == {"a": 0.0, "b": 0.0}
+    out = {r.part: (r.ks_d, r.psi, r.w1)
+           for r in tc.drift_report(const, "v", "part").collect()}
+    assert out == {"a": (0.0, 0.0, 0.0), "b": (0.0, 0.0, 0.0)}
 
 
 def test_exact_quantiles_percentile_parity(spark):

@@ -30,37 +30,9 @@ def docs(spark):
 
 
 def test_exact_duplicates(spark, docs):
-    out = T.exact_duplicates(docs).collect()
-    assert len(out) == 1
-    assert out[0].n_docs == 2
-    assert out[0].doc_ids == [1, 2]
-
     kept = T.dedup_exact(docs)
     assert kept.count() == len(DOCS) - 1
     assert kept.where("doc_id = 2").count() == 0  # min id kept
-
-
-def test_minhash_near_duplicates(spark, docs):
-    # threshold 0.3 with bands=32 (2 rows/band → LSH s* ≈ 0.18): docs 1/3
-    # have true Jaccard ≈ 0.64 and est ≈ 0.56, below the default
-    # bands=16/r=4 operating point (s* = 0.5) where a miss has ~20%
-    # probability — banding must match the target threshold
-    pairs = {(r.id_a, r.id_b): r.est_jaccard
-             for r in T.minhash_near_duplicates(docs, threshold=0.3, bands=32).collect()}
-    assert (1, 2) in pairs and pairs[(1, 2)] == 1.0  # identical docs
-    assert (1, 3) in pairs or (2, 3) in pairs  # near-dup found
-    assert all(a < b for a, b in pairs)
-    assert not any({4, 5} & {a, b} for a, b in pairs)  # unrelated docs clean
-
-
-def test_minhash_estimate_tracks_exact_jaccard(spark, docs):
-    cands = T.lsh_candidate_pairs(T.minhash_signatures(docs))
-    exact = {(r.id_a, r.id_b): r.jaccard for r in T.ngram_jaccard(docs, cands, n=5).collect()}
-    est = {(r.id_a, r.id_b): r.est_jaccard
-           for r in T.minhash_near_duplicates(docs, threshold=0.0).collect()}
-    for k, e in est.items():
-        if k in exact:
-            assert abs(e - exact[k]) < 0.35, (k, e, exact[k])  # 64 hashes → coarse
 
 
 def test_lsh_oversized_bucket_bounds_pairs(spark):
@@ -68,6 +40,8 @@ def test_lsh_oversized_bucket_bounds_pairs(spark):
     candidate pairs (the guard runs before the self-join — without it,
     150 identical docs alone would materialize 150·149/2 ≈ 11k pairs per
     band), while distinct near-dups in small buckets still pair."""
+    from jsl_engine.text_ops_arrow import minhash_signatures_arrow
+
     boiler = [(i, "This file is auto-generated do not edit. " * 6) for i in range(150)]
     near = [
         (1000, "alpha beta gamma delta epsilon zeta eta theta " * 5),
@@ -75,7 +49,7 @@ def test_lsh_oversized_bucket_bounds_pairs(spark):
                + "alpha beta gamma delta epsilon zeta eta iota "),
     ]
     df = spark.createDataFrame([Row(doc_id=i, text=t) for i, t in boiler + near])
-    sigs = T.minhash_signatures(df)
+    sigs = minhash_signatures_arrow(df)
     pairs = T.lsh_candidate_pairs(sigs, max_bucket=64, num_hashes=64).collect()
     ids_in_pairs = {r.id_a for r in pairs} | {r.id_b for r in pairs}
     assert not (ids_in_pairs & set(range(150)))  # boilerplate never pairs
@@ -268,18 +242,27 @@ def test_fingerprint_whitespace_invariant(spark):
     assert out[1] == out[2]  # case+whitespace-normalized
 
 
-def test_arrow_minhash_matches_jvm_semantics(spark, docs):
-    """The Arrow signature kernel (different hash family, same MinHash
-    semantics) must find the same planted duplicates/near-dups and track
-    exact Jaccard as well as the JVM variant."""
+def test_arrow_minhash_matches_semantics(spark, docs):
+    """The Arrow signature kernel finds the planted duplicates/near-dups."""
     from jsl_engine import text_ops_arrow as TA
 
+    # threshold 0.3 with bands=32 (2 rows/band → LSH s* ≈ 0.18): docs 1/3
+    # have true Jaccard ≈ 0.64, near the default bands=16/r=4 operating
+    # point (s* = 0.5) where a miss has ~20% probability — banding must
+    # match the target threshold
     pairs = {(r.id_a, r.id_b): r.est_jaccard
              for r in TA.minhash_near_duplicates_arrow(
                  docs, threshold=0.3, bands=32).collect()}
-    assert pairs[(1, 2)] == 1.0
-    assert (1, 3) in pairs or (2, 3) in pairs
-    assert not any({4, 5} & {a, b} for a, b in pairs)
+    assert pairs[(1, 2)] == 1.0  # identical docs
+    assert (1, 3) in pairs or (2, 3) in pairs  # near-dup found
+    assert all(a < b for a, b in pairs)
+    assert not any({4, 5} & {a, b} for a, b in pairs)  # unrelated docs clean
+
+
+def test_minhash_estimate_tracks_exact_jaccard(spark, docs):
+    """The Arrow MinHash estimate of every candidate pair stays within
+    the coarse bound of 64 hashes of its exact 5-gram Jaccard."""
+    from jsl_engine import text_ops_arrow as TA
 
     cands = {(r.id_a, r.id_b) for r in TA.minhash_near_duplicates_arrow(
         docs, threshold=0.0).collect()}
@@ -290,7 +273,7 @@ def test_arrow_minhash_matches_jvm_semantics(spark, docs):
     est = {(r.id_a, r.id_b): r.est_jaccard
            for r in TA.minhash_near_duplicates_arrow(docs, threshold=0.0).collect()}
     for k, e in est.items():
-        assert abs(e - exact[k]) < 0.35, (k, e, exact[k])
+        assert abs(e - exact[k]) < 0.35, (k, e, exact[k])  # 64 hashes → coarse
 
 
 def test_arrow_simhash_near_dup_behavior(spark, docs):
@@ -404,7 +387,9 @@ def test_winnowing_shared_passage_guarantee(spark):
 
     # the containment case MinHash misses: full-doc Jaccard of 1 vs 2 is
     # low (different intros/tails), so near-dup at 0.5 finds nothing
-    mh = T.minhash_near_duplicates(df.where("doc_id in (1,2)"), threshold=0.5)
+    mh = TA.minhash_near_duplicates_arrow(
+        df.where("doc_id in (1,2)"), threshold=0.5
+    )
     assert not [r for r in mh.collect() if (r.id_a, r.id_b) == (1, 2)]
 
 
@@ -1299,6 +1284,34 @@ def test_fuzzy_contamination_guard_and_broadcast_plan(spark):
     assert "CartesianProduct" not in plan
 
 
+def test_cross_corpus_tail_broadcasts_only_by_hint(spark):
+    """The two broadcasts of the fuzzy-decontamination tail (benchmark
+    banded rows, benchmark signatures) come from its hints: with
+    automatic broadcasting off, the tail alone plans exactly two
+    BroadcastHashJoins and no SortMergeJoin."""
+    from jsl_engine.text_ops_arrow import minhash_signatures_arrow
+
+    corpus = spark.createDataFrame(
+        [Row(doc_id=i, text=f"alpha beta gamma delta {i} epsilon zeta eta")
+         for i in range(20)]
+    )
+    bench = spark.createDataFrame(
+        [Row(doc_id=900, text="alpha beta gamma delta 3 epsilon zeta eta")]
+    )
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        q = T.cross_corpus_near_dups_from_signatures(
+            minhash_signatures_arrow(corpus), minhash_signatures_arrow(bench),
+            threshold=0.5,
+        )
+        plan = q._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("BroadcastHashJoin") == 2, plan
+        assert "SortMergeJoin" not in plan, plan
+        assert (3, 900) in {(r.doc_id, r.bench_id) for r in q.collect()}
+    finally:
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+
+
 def test_vocabulary_topk_scalable_equals_exact(spark):
     """With the sketch guarantee satisfied, the bounded-memory variant
     returns exactly the exact operator's rows; with a tiny sketch the MG
@@ -2186,9 +2199,6 @@ def test_dedup_exact_keeps_one_null_representative(spark):
     )
     kept = sorted(r.doc_id for r in T.dedup_exact(df).collect())
     assert kept == [1, 3, 5]
-    groups = {r.content_hash: (r.n_docs, list(r.doc_ids))
-              for r in T.exact_duplicates(df).collect()}
-    assert groups["__null__"] == (2, [1, 2])
 
 
 def test_chunk_documents_reconstruction(spark):
@@ -2338,12 +2348,10 @@ def test_exact_jaccard_pairs_is_the_truth(spark):
         T.exact_jaccard_pairs(df, threshold=0.3, max_docs=2)
 
 
-def test_lsh_recall_report_measures_banding(spark):
-    """On a corpus of planted near-dup pairs, the default banding scores
-    recall 1.0 with measured candidate precision; a deliberately starved
-    config (one band = single 64-bit bucket) measurably loses recall on
-    borderline pairs — the report detects bad tunings, which is its
-    job."""
+def _planted_pair_corpus(spark):
+    """40 documents, each with a near-dup partner at moderate Jaccard:
+    3 swapped words kill at most 15 of the 56 5-grams -> exact jaccard
+    >= 41/71 ~ 0.58."""
     import random
 
     rng = random.Random(7)
@@ -2351,12 +2359,19 @@ def test_lsh_recall_report_measures_banding(spark):
     for i in range(40):
         words = [f"w{i}_{j}" for j in range(60)]
         rows.append(Row(doc_id=i, text=" ".join(words)))
-        # near-dup partner at moderate jaccard: 3 swapped words kill at
-        # most 15 of the 56 5-grams -> exact jaccard >= 41/71 ~ 0.58
         for j in rng.sample(range(60), 3):
             words[j] = f"alt{i}_{j}"
         rows.append(Row(doc_id=1000 + i, text=" ".join(words)))
-    df = spark.createDataFrame(rows)
+    return spark.createDataFrame(rows)
+
+
+def test_lsh_recall_report_measures_banding(spark):
+    """On a corpus of planted near-dup pairs, the default banding scores
+    recall 1.0 with measured candidate precision; a deliberately starved
+    config (one band = single 64-bit bucket) measurably loses recall on
+    borderline pairs — the report detects bad tunings, which is its
+    job."""
+    df = _planted_pair_corpus(spark)
 
     # 16 bands x 4 hashes at pair jaccard ~0.58: banding theory gives
     # 1-(1-p^4)^16 ~ 0.85 — the report must MEASURE that, not the
@@ -2385,6 +2400,37 @@ def test_lsh_recall_report_measures_banding(spark):
     assert bad.true_pairs == mid.true_pairs
     assert (bad.recall or 0.0) < 0.2
     assert bad.recall < mid.recall and mid.recall < good.recall
+
+
+def test_lsh_recall_report_measures_the_job_hash_family(spark):
+    """The report bands the Arrow MinHash signatures, the family
+    ``jobs/dedup_job.py`` bands: its candidate and verified counts equal
+    those of the Arrow pipeline on the same salted sample. The sample
+    (60 of 80 documents) cuts some planted pairs, and at 16 bands x 4
+    rows the banding of the rest is borderline, so another hash family
+    proposes a different candidate set."""
+    from jsl_engine.sampling import SALT_RECALL_EVAL, order_hash
+    from jsl_engine.text_ops_arrow import minhash_signatures_arrow
+
+    df = _planted_pair_corpus(spark)
+    [rep] = T.lsh_recall_report(
+        df, threshold=0.5, sample_docs=60, num_hashes=64, bands=16
+    ).collect()
+    sample = (
+        df.withColumn("__h", order_hash("doc_id", SALT_RECALL_EVAL))
+        .orderBy("__h", "doc_id")
+        .limit(60)
+        .drop("__h")
+        .localCheckpoint()
+    )
+    cands = T.lsh_candidate_pairs(
+        minhash_signatures_arrow(sample), "doc_id", 16, max_bucket=64,
+        num_hashes=64,
+    ).localCheckpoint()
+    verified = T.verified_jaccard_pairs(sample, cands, n=5, threshold=0.5)
+    assert rep.n_docs == 60
+    assert rep.candidate_pairs == cands.count()
+    assert rep.verified_pairs == verified.count()
 
 
 def test_verified_jaccard_matches_ngram_jaccard(spark):

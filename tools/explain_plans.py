@@ -101,9 +101,10 @@ def main(sf_dir: str) -> int:
     #    the guard column is dropped pre-join, so its appearance in a
     #    Filter proves pruning happens before any pair is materialized;
     #    and no CartesianProduct anywhere
-    from jsl_engine.text_ops import lsh_candidate_pairs, minhash_signatures
+    from jsl_engine.text_ops import lsh_candidate_pairs
+    from jsl_engine.text_ops_arrow import minhash_signatures_arrow
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    pairs = lsh_candidate_pairs(minhash_signatures(docs), num_hashes=64)
+    pairs = lsh_candidate_pairs(minhash_signatures_arrow(docs), num_hashes=64)
     ok &= check("LSH guard before self-join", pairs,
                 must_contain=["__bucket_n", "Window"],
                 must_not=["CartesianProduct"])
