@@ -251,29 +251,21 @@ def q_quantiles_lineitem_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_top_orders_per_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group top-k (window row_number): the 3 largest orders per
-    order priority, deterministic tiebreak on the key. Since r8 a
-    batch-local lossless cut (:func:`jsl_engine.table_checks.group_topk_prune`
-    — the ``_local_topk_prune`` argument applied per group) runs before
-    the window, so the rank shuffle carries O(batches × groups × k)
-    rows instead of every order."""
-    from pyspark.sql import Window
+    """Per-group top-k: the 3 largest orders per order priority,
+    deterministic tiebreak on the key, through
+    :func:`jsl_engine.partitioning.topk_per_group` — its batch-local
+    lossless cut runs before the rank window, so the rank shuffle
+    carries O(batches × groups × k) rows instead of every order."""
+    from jsl_engine.partitioning import topk_per_group
 
-    pruned = tc.group_topk_prune(
+    return topk_per_group(
         _t(spark, sf_dir, "orders").select(
             "o_orderpriority", "o_orderkey", "o_totalprice"
         ),
-        "o_orderpriority", "o_totalprice", "o_orderkey", 3,
-    )
-    w = Window.partitionBy("o_orderpriority").orderBy(
-        F.desc("o_totalprice"), F.asc("o_orderkey")
-    )
-    return (
-        pruned
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 3)
-        .select("o_orderpriority", "rank", "o_orderkey", "o_totalprice")
-    )
+        ["o_orderpriority"],
+        [("o_totalprice", "desc"), ("o_orderkey", "asc")],
+        3,
+    ).select("o_orderpriority", "rank", "o_orderkey", "o_totalprice")
 
 
 def q_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2879,8 +2871,9 @@ def oracle_sql() -> dict[str, str]:
                   AND len(list_filter(e.embedding, x -> x IS NULL)) = 0
             ),
             -- NULL/NaN scores never rank (engine pin: cosine maps both
-            -- degenerate cases to NULL and _ranked_topk filters them) —
-            -- after this WHERE, raw is always a plain finite double
+            -- degenerate cases to NULL, and _ranked_topk drops NULL
+            -- scores before topk_per_group ranks) — after this WHERE,
+            -- raw is always a plain finite double
             s AS (
                 SELECT query_id, vec_id, ROUND(raw, 6) AS cos_sim
                 FROM s0

@@ -14,6 +14,9 @@ cluster; the sandbox runs local[N]):
   measured the skew it would treat;
 * AQE (adaptive.enabled) coalesces small shuffle partitions and splits
   skewed ones at runtime, which covers the join/agg stages;
+* a per-group top-k (:func:`topk_per_group`) cuts each Arrow batch to
+  k rows per group before the rank window's exchange, so one large
+  group never funnels all its rows into one reducer;
 * Arrow batch size is capped so pandas batches stay cache-friendly inside
   mapInPandas regardless of row width.
 """
@@ -108,6 +111,113 @@ def hash_spread(df: DataFrame, *cols: str) -> DataFrame:
     exchange count."""
     n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return df.repartition(n, *cols)
+
+
+def _topk_cut(
+    df: DataFrame, group_cols: list[str], order: list[tuple[str, str]], k: int
+) -> DataFrame:
+    """The map side of :func:`topk_per_group`: each Arrow batch keeps
+    only its own first ``k`` rows per group under ``order``.
+
+    Every order column sorts behind explicit flag keys, so the batch
+    order is Spark's total order for any mix of NULL and NaN: ``asc``
+    puts NULLs first and NaN above every number, ``desc`` puts NaN first
+    and NULLs last. Arrow's ``null_placement`` applies to all keys at
+    once and places NaN beside NULL, so it cannot express this.
+
+    Group runs are cut where any group column changes elementwise
+    (``!=``) in sorted order: NULL group keys form one run, as in
+    Spark's window partition, while a NaN group key splits into
+    singleton runs — a superset survives, and the window trims it."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    schema = df.schema
+    names = schema.fieldNames()
+    keys = [(c, "ascending") for c in group_cols]
+
+    def prune(batches):
+        for batch in batches:
+            n = batch.num_rows
+            if n == 0:
+                continue
+            if n <= k:
+                yield batch
+                continue
+            tbl = pa.Table.from_batches([batch])
+            sort_tbl, sort_keys = tbl, list(keys)
+            for i, (c, d) in enumerate(order):
+                col = tbl.column(c)
+                asc = d == "asc"
+                # int8, not bool: Arrow sorts an int8 key faster
+                if col.null_count:
+                    null = pc.cast(pc.is_null(col), pa.int8())
+                    sort_tbl = sort_tbl.append_column(f"__null{i}", null)
+                    sort_keys.append(
+                        (f"__null{i}", "descending" if asc else "ascending")
+                    )
+                if pa.types.is_floating(col.type):
+                    nan = pc.cast(pc.fill_null(pc.is_nan(col), False), pa.int8())
+                    sort_tbl = sort_tbl.append_column(f"__nan{i}", nan)
+                    sort_keys.append(
+                        (f"__nan{i}", "ascending" if asc else "descending")
+                    )
+                sort_keys.append((c, "ascending" if asc else "descending"))
+            idx = pc.sort_indices(sort_tbl, sort_keys=sort_keys).to_numpy(
+                zero_copy_only=False
+            )
+            changed = np.zeros(n, dtype=bool)
+            changed[0] = True
+            for c in group_cols:
+                g = tbl.column(c).to_numpy(zero_copy_only=False)[idx]
+                changed[1:] |= g[1:] != g[:-1]
+            starts = np.flatnonzero(changed)
+            ends = np.r_[starts[1:], n]
+            keep = np.concatenate(
+                [idx[s : min(s + k, e)] for s, e in zip(starts, ends)]
+            )
+            yield from tbl.take(pa.array(np.sort(keep))).to_batches()
+
+    return df.mapInArrow(prune, schema).select(*names)
+
+
+def topk_per_group(
+    df: DataFrame,
+    group_cols: list[str],
+    order: list[tuple[str, str]],
+    k: int,
+    rank_col: str = "rank",
+) -> DataFrame:
+    """The first ``k`` rows of every group of ``group_cols`` under
+    ``order`` (``[(col, "asc" | "desc"), ...]``), numbered 1..k in
+    ``rank_col`` by ``row_number`` over
+    ``Window.partitionBy(*group_cols).orderBy(*order)``. ``order``
+    should make the rank total (end it with a unique id); ties are
+    otherwise broken by input layout.
+
+    One ``mapInArrow`` cut (:func:`_topk_cut`) runs before the window's
+    exchange and keeps ≤ k rows per (group, Arrow batch), so the window
+    sees O(batches × groups × k) rows instead of every row: without it a
+    group with 10^11 rows shuffles into one reducer. The cut is lossless
+    because it sorts by the window's own total order, which is derived
+    from the same ``order`` list, and a row among the first k of its
+    group is among the first k of every subset that contains it. Rows
+    are only selected, never recomputed, so the output equals the plain
+    window's bit for bit under any partitioning."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    if any(d not in ("asc", "desc") for _, d in order):
+        raise ValueError(f"order directions must be 'asc' or 'desc': {order}")
+    w = Window.partitionBy(*group_cols).orderBy(
+        *[F.asc(c) if d == "asc" else F.desc(c) for c, d in order]
+    )
+    return (
+        _topk_cut(df, group_cols, order, k)
+        .withColumn(rank_col, F.row_number().over(w))
+        .where(F.col(rank_col) <= k)
+    )
 
 
 def get_spark(

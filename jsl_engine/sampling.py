@@ -13,9 +13,9 @@ retry, or engine.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 from pyspark.sql import DataFrame, Window, functions as F
+
+from jsl_engine.partitioning import topk_per_group
 
 #: Knuth multiplicative constant (2^32 / phi, odd) — portable BIGINT math.
 _KNUTH = 2654435761
@@ -69,84 +69,12 @@ def order_hash(id_col, salt: int = 0):
     return F.pmod(g * F.lit(_KNUTH2), F.lit(_MOD))
 
 
-def _local_stratum_topn(
-    narrow: DataFrame, strata_cols: list[str], n: int, id_col: str
-) -> DataFrame:
-    """Batch-local exact top-``n``-per-stratum cut applied BEFORE the
-    global per-stratum ranking window — the piece that makes
-    :func:`stratified_sample` survive scale. Without it, every row of a
-    stratum shuffles into ONE reducer for the rank window (5 sources ×
-    10^12 docs = 5 reducers × 2·10^11 rows each — the classic
-    skewed-key scale-killer); with it the map side keeps only ≤ n rows
-    per (stratum, Arrow batch), so the window's shuffle input is
-    O(batches × strata × n) — independent of corpus row count. Same
-    lossless-by-total-order argument as ``_local_topk_prune``
-    (jsl_engine/similarity.py): the cut sorts each batch by the
-    IDENTICAL total order the downstream window uses — ``__h`` asc,
-    ``id_col`` asc within each stratum — and a row in the global top-n
-    of its stratum is in the top-n of every subset containing it. No
-    arithmetic happens here (``__h`` was computed JVM-side upstream);
-    this pass only *selects* rows, so the result is bit-for-bit the
-    unpruned window's output under any repartitioning (pinned in
-    tests/test_text_ops.py).
-
-    Grouping corner cases are lossless by construction: run boundaries
-    come from elementwise ``!=`` over the sorted strata columns, so
-    NULL strata group together (``None != None`` is False — matching
-    Spark's window, which puts all NULLs in one partition) while a NaN
-    stratum value splits into singleton runs (``NaN != NaN`` is True —
-    a SUPERSET of Spark's NaN-normalized group survives the cut, which
-    the exact window then trims identically)."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    schema = narrow.schema
-    names = schema.fieldNames()
-
-    def prune(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            if batch.num_rows <= n:
-                yield batch
-                continue
-            tbl = pa.Table.from_batches([batch])
-            keys = [(c, "ascending") for c in strata_cols] + [
-                ("__h", "ascending"),
-                (id_col, "ascending"),
-            ]
-            # at_start: Spark's ascending order is NULLS FIRST — a
-            # NULL-id row (order_hash(NULL) is NULL) ranks FIRST in the
-            # window, so the cut must keep it first too (Arrow's default
-            # at_end would cut the row Spark ranks #1; the placement
-            # also applies to the strata keys, where grouping only needs
-            # contiguity, so it is free there)
-            order = pc.sort_indices(
-                tbl, sort_keys=keys, null_placement="at_start"
-            ).to_numpy(zero_copy_only=False)
-            changed = np.zeros(order.size, dtype=bool)
-            changed[0] = True
-            for c in strata_cols:
-                col = tbl.column(c).to_numpy(zero_copy_only=False)[order]
-                changed[1:] |= col[1:] != col[:-1]
-            starts = np.flatnonzero(changed)
-            ends = np.r_[starts[1:], order.size]
-            keep = np.concatenate(
-                [order[s : min(s + n, e)] for s, e in zip(starts, ends)]
-            )
-            yield from tbl.take(pa.array(np.sort(keep))).to_batches()
-
-    return narrow.mapInArrow(prune, schema).select(*names)
-
-
 def stratified_sample(
     df: DataFrame,
     strata_cols: list[str],
     n_per_stratum: int,
     *,
     id_col: str = "doc_id",
-    broadcast_winners: bool = True,
 ) -> DataFrame:
     """At most ``n_per_stratum`` rows per stratum, chosen by the
     content-derived hash order (ties broken by id) — class-balanced
@@ -156,38 +84,29 @@ def stratified_sample(
 
     Execution shape (the two-phase trim, made *deterministic*): the
     hash is computed JVM-side on a column-pruned ``(strata, id)``
-    projection; a batch-local lossless top-n cut
-    (:func:`_local_stratum_topn`) shrinks the rank window's shuffle
-    input to O(batches × strata × n) regardless of corpus size; the
-    exact window then ranks the tiny survivor set, and the ≤
-    strata × n winning ids broadcast back onto the full rows as a
-    null-safe semi-join — the corpus itself is never shuffled. This
-    supersedes the probabilistic count-aggregation trim (pre-filter
-    ``order_hash < t`` sized ~2× the target): that trim can
-    adversarially under-select (fewer than n survivors in a stratum
-    whose ids happen to hash high), while the batch-local cut is
-    bit-for-bit lossless by total order with no extra count pass.
-
-    ``broadcast_winners=False`` for pathological strata cardinality
-    (winners = strata × n rows no longer driver-collectable): the
-    semi-join then shuffles, which is one un-skewed corpus shuffle —
-    still never a one-reducer-per-stratum window."""
+    projection; :func:`jsl_engine.partitioning.topk_per_group` ranks it
+    per stratum by (hash asc, id asc), its batch-local lossless cut
+    shrinking the rank window's shuffle input to O(batches × strata × n)
+    regardless of corpus size; and the ≤ strata × n winning ids
+    broadcast back onto the full rows as a null-safe semi-join — the
+    corpus itself is never shuffled. This supersedes the probabilistic
+    count-aggregation trim (pre-filter ``order_hash < t`` sized ~2× the
+    target): that trim can adversarially under-select (fewer than n
+    survivors in a stratum whose ids happen to hash high), while the
+    batch-local cut is bit-for-bit lossless by total order with no extra
+    count pass. The winners are assumed driver-broadcastable
+    (strata × n rows)."""
     strata_cols = list(strata_cols)
     narrow_cols = list(dict.fromkeys([*strata_cols, id_col]))
     narrow = df.select(*narrow_cols).withColumn(
         "__h", order_hash(id_col, SALT_STRATIFIED)
     )
-    pruned = _local_stratum_topn(narrow, strata_cols, n_per_stratum, id_col)
-    w = Window.partitionBy(*strata_cols).orderBy(F.col("__h"), F.col(id_col))
-    winners = (
-        pruned.withColumn("__rk", F.row_number().over(w))
-        .where(F.col("__rk") <= n_per_stratum)
-        .select(*narrow_cols)
-    )
-    if broadcast_winners:
-        winners = F.broadcast(winners)
+    winners = topk_per_group(
+        narrow, strata_cols, [("__h", "asc"), (id_col, "asc")],
+        n_per_stratum, rank_col="__rk",
+    ).select(*narrow_cols)
     left = df.alias("__ss_l")
-    right = winners.alias("__ss_r")
+    right = F.broadcast(winners).alias("__ss_r")
     # null-safe equality on EVERY key: a NULL-stratum winner must still
     # match its source rows, and a NULL-id row — which the reference
     # window ranks FIRST (NULLS FIRST hash order) — must survive the

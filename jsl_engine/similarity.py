@@ -8,10 +8,11 @@ Spark-first design:
 
 * dot products / norms are ``F.aggregate``/``F.zip_with`` array expressions
   — JVM-evaluated, no Python in the row loop;
-* brute-force top-k broadcasts the (small) query set, scores in one
-  codegen pass, and cuts to ≤ k rows per (query, Arrow batch) map-side
-  (:func:`_local_topk_prune` — lossless by total order) before the tiny
-  per-query ranking window, so the shuffle never carries the corpus;
+* brute-force top-k broadcasts the (small) query set, scores each
+  Arrow batch in one fold kernel, and ranks per query with
+  :func:`jsl_engine.partitioning.topk_per_group`, whose lossless
+  batch-local cut keeps ≤ k rows per (query, Arrow batch) before the
+  ranking window, so the shuffle never carries the corpus;
 * IVF assigns every vector to its k-means coarse cell (one numpy matmul
   per Arrow batch): candidate generation is an equi-join on the cell,
   exact cosine re-ranks within the probed cells;
@@ -30,7 +31,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from jsl_engine.partitioning import fan_out, hash_spread
+from jsl_engine.partitioning import fan_out, hash_spread, topk_per_group
 from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
 
@@ -187,79 +188,10 @@ def cosine_scores_arrow(
     return pruned.mapInArrow(run, out_schema)
 
 
-def _local_topk_prune(
-    scored: DataFrame, k: int, id_col: str, score_col: str = "cos_sim"
-) -> DataFrame:
-    """Batch-local exact top-``k``-per-query cut applied BEFORE the
-    global per-query ranking window — the piece that makes the exact
-    top-k arms survive scale. Without it, every scored ``(query, id,
-    score)`` row shuffles into ONE reducer per query (at 10^12 vectors ×
-    20 queries: 20 reducers × 10^12 rows each); with it the map side
-    keeps only ≤ k rows per (query, Arrow batch), so the window's
-    shuffle input is O(batches × queries × k) — independent of corpus
-    row count. Same idea as ``pq_topk``'s batch-local ADC cut
-    (jsl_engine/pq.py), but with NO rounding band needed:
-
-    **Lossless by total order.** The cut sorts each batch by the
-    IDENTICAL total order the downstream window uses — (``score_col``
-    desc, ``id_col`` asc) within each query, on the ALREADY-ROUNDED
-    score column — and a row in the global top-k is in the top-k of
-    every subset containing it (at most k−1 rows precede it anywhere).
-    No arithmetic is performed here: scores were computed and rounded
-    JVM-side upstream, this pass only *selects* rows, so the result is
-    bit-for-bit the unpruned window's output, stable under any
-    repartitioning (pinned in tests/test_similarity.py).
-
-    Ordering corner cases match Spark by construction: Spark's
-    descending double order places NaN FIRST and NULL last, while
-    Arrow's descending sort places NaN after every number (verified:
-    ``[0.5, NaN, 0.9, NULL]`` desc-sorts to ``0.9, 0.5, NaN, NULL``) —
-    so the cut sorts on an explicit ``is_nan`` flag key ahead of the
-    score, reproducing Spark's NaN-first total order; NaN-vs-NaN ties
-    fall through to ``id_col`` asc exactly as Spark's ordering (which
-    treats NaN = NaN) does. Pinned in tests/test_similarity.py with a
-    NaN-scored corpus row."""
-    import numpy as np
-    import pyarrow.compute as pc
-
-    schema = scored.schema
-    names = schema.fieldNames()
-
-    def prune(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            if n <= k:
-                yield batch
-                continue
-            tbl = pa.Table.from_batches([batch])
-            nan_flag = pc.cast(
-                pc.fill_null(pc.is_nan(tbl.column(score_col)), False), pa.int8()
-            )
-            order = pc.sort_indices(
-                tbl.append_column("__nan", nan_flag),
-                sort_keys=[
-                    ("query_id", "ascending"),
-                    ("__nan", "descending"),
-                    (score_col, "descending"),
-                    (id_col, "ascending"),
-                ],
-            ).to_numpy(zero_copy_only=False)
-            q = tbl.column("query_id").to_numpy(zero_copy_only=False)[order]
-            starts = np.flatnonzero(np.r_[True, q[1:] != q[:-1]])
-            ends = np.r_[starts[1:], q.size]
-            keep = np.concatenate(
-                [order[s : min(s + k, e)] for s, e in zip(starts, ends)]
-            )
-            yield from tbl.take(pa.array(np.sort(keep))).to_batches()
-
-    return scored.mapInArrow(prune, schema).select(*names)
-
-
 def _ranked_topk(scored: DataFrame, k: int, id_col: str) -> DataFrame:
-    """Shared tail of the exact top-k arms: batch-local lossless cut,
-    then the (now tiny) global per-query ranking window.
+    """Shared tail of the exact top-k arms: the per-query top ``k`` by
+    (``cos_sim`` desc, ``id_col`` asc) through
+    :func:`jsl_engine.partitioning.topk_per_group`.
 
     NULL scores never rank: a NULL ``cos_sim`` means a degenerate
     (zero-norm / NaN-component) vector, and padding the tail of a
@@ -268,10 +200,8 @@ def _ranked_topk(scored: DataFrame, k: int, id_col: str) -> DataFrame:
     return FEWER than ``k`` rows. Mirrored by ``WHERE cos_sim IS NOT
     NULL`` in the DuckDB oracle."""
     scored = scored.where(F.col("cos_sim").isNotNull())
-    pruned = _local_topk_prune(scored, k, id_col)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc(id_col))
-    return pruned.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= k
+    return topk_per_group(
+        scored, ["query_id"], [("cos_sim", "desc"), (id_col, "asc")], k
     )
 
 
@@ -337,10 +267,10 @@ def brute_force_topk(
     The query set is broadcast (small side); the corpus is scanned once
     and scored by the Arrow fold kernel (:func:`cosine_scores_arrow` —
     bit-identical to the JVM :func:`cosine`, ~10× cheaper than its
-    interpreted HOF fold; r8). A batch-local lossless top-k cut
-    (:func:`_local_topk_prune`) runs map-side, so the per-query ranking
-    window's shuffle input is O(batches × queries × k), never O(rows) —
-    the corpus is never shuffled into per-query reducers.
+    interpreted HOF fold; r8). The ranking goes through
+    :func:`jsl_engine.partitioning.topk_per_group`, whose map-side cut
+    makes the per-query window's shuffle input O(batches × queries × k),
+    never O(rows) — the corpus is never shuffled into per-query reducers.
     """
     q = F.broadcast(
         _indexable(queries, vec_col).select(
@@ -601,7 +531,6 @@ def ivf_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     seed: int = 42,
-    train: str = "driver",
 ) -> DataFrame:
     """IVF approximate top-k: assign every vector to its best coarse cell
     (the corpus is scanned once), probe each query's best ``n_probe``
@@ -617,29 +546,14 @@ def ivf_topk(
 
     Same output shape as :func:`brute_force_topk`. Recall follows
     ``n_probe``/``n_cells`` as in an IVF-Flat index.
-
-    ``train="distributed"`` trains the quantizer with the executor-side
-    Lloyd iterations (:func:`train_ivf_centroids_distributed` — training
-    scales with the corpus instead of a fixed driver sample); the default
-    keeps the bounded driver-sample trainer.
     """
-    if train not in ("driver", "distributed"):
-        raise ValueError(
-            f"train must be 'driver' or 'distributed', got {train!r}"
-        )
     vectors = _indexable(vectors, vec_col)
     queries = _indexable(queries, vec_col)
     if centroids is None:
-        if train == "distributed":
-            centroids = train_ivf_centroids_distributed(
-                vectors, n_cells=n_cells, vec_col=vec_col, id_col=id_col,
-                seed=seed,
-            )
-        else:
-            centroids = train_ivf_centroids(
-                vectors, n_cells=n_cells, vec_col=vec_col, id_col=id_col,
-                seed=seed,
-            )
+        centroids = train_ivf_centroids(
+            vectors, n_cells=n_cells, vec_col=vec_col, id_col=id_col,
+            seed=seed,
+        )
     v = assign_cells_arrow(
         vectors.select(F.col(id_col), F.col(vec_col)), centroids,
         vec_col=vec_col, n_probe=1,

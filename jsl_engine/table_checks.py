@@ -708,65 +708,6 @@ def exact_quantiles(
 # ordering / set ops
 # ---------------------------------------------------------------------------
 
-def group_topk_prune(
-    df: DataFrame,
-    group_col: str,
-    order_col: str,
-    id_col: str,
-    k: int,
-) -> DataFrame:
-    """Batch-local LOSSLESS per-group top-``k`` cut applied before a
-    per-group ranking window (r8) — the grouped twin of
-    :func:`jsl_engine.similarity._local_topk_prune`: each Arrow batch
-    keeps only its own top ``k`` rows per group under the IDENTICAL
-    total order the downstream window uses (``order_col`` desc with
-    Spark's NaN-first/NULL-last placement, ties broken ``id_col`` asc —
-    a unique id makes the order total, so a row in the global top-k is
-    in the top-k of every subset containing it). The window's shuffle
-    input becomes O(batches × groups × k) instead of O(rows): at sf1.0
-    the 1.5M-row orders table funnels ~2k rows into the rank window
-    instead of 1.5M (measured 1.8 s → 0.9 s). No arithmetic happens
-    here — rows are only selected — so the result is bit-for-bit the
-    unpruned window's output (pinned in tests)."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    schema = df.schema
-    names = schema.fieldNames()
-
-    def prune(batches):
-        for batch in batches:
-            if batch.num_rows <= k:
-                yield batch
-                continue
-            tbl = pa.Table.from_batches([batch])
-            keys = [(group_col, "ascending")]
-            col = tbl.column(order_col)
-            sort_tbl = tbl
-            if pa.types.is_floating(col.type):
-                # Spark's desc double order is NaN FIRST; Arrow sorts
-                # NaN after every number — same fix as _local_topk_prune
-                nan_flag = pc.cast(
-                    pc.fill_null(pc.is_nan(col), False), pa.int8()
-                )
-                sort_tbl = tbl.append_column("__nan", nan_flag)
-                keys.append(("__nan", "descending"))
-            keys += [(order_col, "descending"), (id_col, "ascending")]
-            order = pc.sort_indices(sort_tbl, sort_keys=keys).to_numpy(
-                zero_copy_only=False
-            )
-            g = tbl.column(group_col).to_numpy(zero_copy_only=False)[order]
-            starts = np.flatnonzero(np.r_[True, g[1:] != g[:-1]])
-            ends = np.r_[starts[1:], g.size]
-            keep = np.concatenate(
-                [order[s : min(s + k, e)] for s, e in zip(starts, ends)]
-            )
-            yield from tbl.take(pa.array(np.sort(keep))).to_batches()
-
-    return df.mapInArrow(prune, schema).select(*names)
-
-
 def pending_partitions(all_parts: DataFrame, committed: DataFrame, key: str = "part_key") -> DataFrame:
     """Resume set: partitions not yet committed (anti-join on the manifest)."""
     return all_parts.select(key).distinct().join(

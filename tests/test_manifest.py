@@ -384,7 +384,7 @@ def test_curate_flag_is_part_of_resume_identity(spark, corpus, tmp_path):
     assert r3["partitions_pending"] == 0
 
 
-def test_lang_engine_is_part_of_curate_resume_identity(spark, corpus, tmp_path):
+def test_curate_resume_fingerprint_keeps_arrow_tag(spark, corpus, tmp_path):
     """The curate riders' lang_id comes from the Arrow language kernel,
     and the resume fingerprint keeps the ``+curate|le=arrow`` tag it
     had when the engine was selectable: sinks written under the Arrow

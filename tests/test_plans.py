@@ -286,3 +286,34 @@ def test_chunk_documents_bpe_plan_no_shuffle(spark):
     )._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan[:2000]
     assert plan.count("Generate") == 1, plan[:2000]
+
+
+def _plan_nodes(df) -> list[str]:
+    """Operator names of ``df``'s physical plan, one per tree line."""
+    import re
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [m.group(1) for m in re.finditer(r"^[\s:|+-]*(\w+)", plan, re.M)]
+
+
+def test_topk_queries_keep_their_python_and_exchange_counts(spark):
+    """The three registry queries ranked by ``topk_per_group`` plan one
+    Python node per cut (the cosine kernels, the cell assignments and
+    the cuts in topk_cosine) and the exchanges they had when each wrote
+    its own cut and rank window: the operator adds no Python stage and
+    no shuffle."""
+    import __spark_entry__ as em
+
+    expected = {
+        "top_orders_per_priority": (1, 1),
+        "topk_cosine_embeddings": (6, 4),
+        "stratified_sample_documents": (1, 4),
+    }
+    reg = em.queries()
+    for name, (n_python, n_exchange) in expected.items():
+        nodes = _plan_nodes(reg[name](spark, f"{TESTDATA}/sf0.001"))
+        python = [n for n in nodes if "InArrow" in n or "Python" in n
+                  or "InPandas" in n]
+        exchanges = [n for n in nodes if n.endswith("Exchange")]
+        assert (len(python), len(exchanges)) == (n_python, n_exchange), (
+            name, nodes)

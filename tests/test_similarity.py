@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import Row
 
 from jsl_engine import similarity as S
+from jsl_engine.partitioning import _topk_cut, topk_per_group
 
 
 def _np_cosine(a, b):
@@ -257,8 +258,10 @@ def test_distributed_trainer_recall_on_clustered_corpus(spark):
         bf = {(r.query_id, r.vec_id)
               for r in S.brute_force_topk(df, queries, k=10).collect()}
         ivf = {(r.query_id, r.vec_id)
-               for r in S.ivf_topk(df, queries, k=10, n_cells=8, n_probe=2,
-                                   train="distributed").collect()}
+               for r in S.ivf_topk(
+                   df, queries, k=10, n_cells=8, n_probe=2,
+                   centroids=S.train_ivf_centroids_distributed(df, n_cells=8),
+               ).collect()}
         assert len(bf & ivf) / len(bf) >= 0.9
         # deterministic hash-sampled training (10% of the corpus)
         cents = S.train_ivf_centroids_distributed(
@@ -270,13 +273,6 @@ def test_distributed_trainer_recall_on_clustered_corpus(spark):
         assert np.allclose(np.array(cents), np.array(again), atol=1e-6)
     finally:
         df.unpersist()
-
-
-def test_ivf_topk_rejects_unknown_trainer(spark, vectors):
-    df, _ = vectors
-    queries = df.where("vec_id = 0").selectExpr("vec_id as query_id", "embedding")
-    with pytest.raises(ValueError, match="train must be"):
-        S.ivf_topk(df, queries, k=3, train="distrbuted")
 
 
 def test_embedding_near_dup_banded_recall(spark):
@@ -304,8 +300,12 @@ def test_embedding_near_dup_banded_recall(spark):
 
 
 # ---------------------------------------------------------------------------
-# batch-local lossless top-k prune (the scale path of the exact arms)
+# the exact arms' ranking: topk_per_group's lossless batch-local cut
 # ---------------------------------------------------------------------------
+
+#: The exact arms' rank order, as :func:`S._ranked_topk` states it.
+_COS_ORDER = [("cos_sim", "desc"), ("vec_id", "asc")]
+
 
 def _windowed_reference_topk(scored, k, id_col="vec_id"):
     """The pre-prune implementation: global per-query window straight
@@ -380,7 +380,7 @@ def test_prune_window_input_is_o_partitions_not_o_rows(spark, vectors):
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", None)
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "1000000")
     try:
-        pruned_rows = S._local_topk_prune(scored, k, "vec_id").count()
+        pruned_rows = _topk_cut(scored, ["query_id"], _COS_ORDER, k).count()
     finally:
         # conf.get(key, None) returns None for an UNSET key (it does not
         # surface the ConfigEntry default), so restore means unset here —
@@ -414,11 +414,7 @@ def test_prune_nan_scores_match_window_nan_first_order(spark):
         map(tuple, _windowed_reference_topk(scored, k).collect())
     )
     got = sorted(
-        map(
-            tuple,
-            _windowed_reference_topk(S._local_topk_prune(scored, k, "vec_id"), k)
-            .collect(),
-        )
+        map(tuple, topk_per_group(scored, ["query_id"], _COS_ORDER, k).collect())
     )
 
     def norm(t):
@@ -437,7 +433,7 @@ def test_prune_handles_small_batches_and_duplicate_scores(spark):
 
     rows = [Row(query_id=1, vec_id=i, cos_sim=1.0) for i in range(6)]
     scored = spark.createDataFrame(rows).repartition(4)
-    out = _windowed_reference_topk(S._local_topk_prune(scored, 3, "vec_id"), 3)
+    out = topk_per_group(scored, ["query_id"], _COS_ORDER, 3)
     got = sorted((r.rank, r.vec_id) for r in out.collect())
     assert got == [(1, 0), (2, 1), (3, 2)]
 

@@ -85,7 +85,7 @@ def test_ks_drift_exact(spark):
     assert out["a"].n_part == 400 and out["a"].n_rest == 300
 
 
-def test_ks_drift_binned_close(spark):
+def test_drift_report_ks_close_to_exact(spark):
     """drift_report's binned ks_d stays within 0.02 of the exact ks_drift."""
     rng = np.random.default_rng(1)
     a = rng.normal(0, 1, 500)
@@ -280,7 +280,7 @@ def _psi_numpy(values_by_part, bins, lo, hi, eps=1e-6):
     return out
 
 
-def test_psi_drift_binned(spark):
+def test_drift_report_psi(spark):
     """drift_report's PSI matches an independent numpy implementation; identical
     distributions score ~0, a shifted partition scores past the 0.25
     'major shift' alarm threshold."""
@@ -321,7 +321,7 @@ def test_psi_drift_binned(spark):
     assert stable["a"] < 0.1 and stable["b"] < 0.1
 
 
-def test_psi_drift_binned_scan_discipline_and_degenerate(spark):
+def test_drift_report_psi_scan_discipline_and_degenerate(spark):
     """Fixed-domain PSI is action-free at plan-construction time (the
     binned-KS scale gate: one scaffolding serves every column); a
     degenerate domain yields psi=0 rows instead of a divide-by-zero."""
@@ -366,7 +366,7 @@ def _w1_numpy(values_by_part, bins, lo, hi):
     return out
 
 
-def test_wasserstein_drift_binned(spark):
+def test_drift_report_wasserstein(spark):
     """drift_report's W1 matches a fully-densified numpy reference (exercising the
     span weighting across empty interior bins), and a pure mean shift
     of delta reports W1 ~ delta in value units."""
@@ -487,7 +487,7 @@ def _ks_binned_numpy(values_by_part, bins, lo, hi):
     return out
 
 
-def test_drift_report_equals_standalone_ops(spark):
+def test_drift_report_equals_numpy_references(spark):
     """The one-pass report's three columns each equal their standalone
     numpy reference, and the report stays action-free with a fixed
     domain."""
@@ -581,8 +581,8 @@ def test_exact_quantiles_degenerate_inputs(spark):
     assert tc.exact_quantiles(one, "v", (0.0, 0.5, 1.0)) == [-7.5] * 3
 
 
-def test_group_topk_prune_is_lossless(spark):
-    """The r8 batch-local per-group cut must be a pure row SELECTION
+def test_topk_per_group_is_lossless(spark):
+    """The batch-local per-group cut must be a pure row SELECTION
     that reproduces the unpruned window bit-for-bit — including ties
     broken by id, NaN (Spark desc = NaN first), NULL order values
     (desc = NULLs last), and groups smaller than k."""
@@ -591,6 +591,8 @@ def test_group_topk_prune_is_lossless(spark):
 
     from pyspark.sql import Window
     from pyspark.sql import functions as F
+
+    from jsl_engine.partitioning import topk_per_group
 
     rng = random.Random(5)
     rows = [
@@ -609,8 +611,61 @@ def test_group_topk_prune_is_lossless(spark):
         return sorted(
             (r.g, r.rank, r.id, None if r.v is None else (
                 "nan" if math.isnan(r.v) else r.v))
-            for r in frame.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= 3).collect()
+            for r in frame.collect()
         )
 
-    assert ranked(tc.group_topk_prune(df, "g", "v", "id", 3)) == ranked(df)
+    got = topk_per_group(df, ["g"], [("v", "desc"), ("id", "asc")], 3)
+    want = df.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= 3)
+    assert ranked(got) == ranked(want)
+    # Arrow's spelling of a direction is not silently read as "desc"
+    with pytest.raises(ValueError, match="'asc' or 'desc'"):
+        topk_per_group(df, ["g"], [("v", "descending"), ("id", "asc")], 3)
+
+
+def test_topk_per_group_asc_nan_null_two_group_cols(spark):
+    """An ascending float order key holding NaN and NULL, under two group
+    columns (one a double with NaN and NULL group keys), equals the plain
+    ``row_number`` window row for row. Spark's ascending order puts NULL
+    first and NaN above every number, so each batch's cut must keep the
+    NULL-valued rows (Arrow alone would sort them last) and may drop
+    NaN-valued rows only behind k numbers. Spark groups all NaN keys
+    together; the cut splits them into singleton runs and the window
+    trims that superset."""
+    import math
+    import random
+
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from jsl_engine.partitioning import topk_per_group
+
+    nan = float("nan")
+    rng = random.Random(12)
+    rows = []
+    for i in range(3000):
+        g1 = rng.choice(["a", "b", None])
+        g2 = rng.choice([1.0, 2.0, nan, None])
+        v = rng.choice([0.5, 1.5, 2.5, -0.0, 0.0, nan, None, rng.random()])
+        rows.append((g1, g2, i, v))
+    df = spark.createDataFrame(
+        rows, "g1 string, g2 double, id long, v double"
+    ).repartition(3)
+    k = 4
+    w = Window.partitionBy("g1", "g2").orderBy(F.asc("v"), F.asc("id"))
+
+    def rows_of(frame):
+        return sorted(
+            (tuple("nan" if isinstance(x, float) and math.isnan(x) else x
+                   for x in r)
+             for r in frame.select("g1", "g2", "rank", "id", "v").collect()),
+            key=repr,
+        )
+
+    want = rows_of(
+        df.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    )
+    got = rows_of(topk_per_group(df, ["g1", "g2"], [("v", "asc"), ("id", "asc")], k))
+    assert got == want
+    # all 12 groups are ranked, each led by a NULL value
+    assert sum(1 for r in want if r[2] == 1) == 12
+    assert all(r[4] is None for r in want if r[2] == 1)
