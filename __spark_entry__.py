@@ -53,14 +53,18 @@ EVENTS_PROPS_SCHEMA = {"properties": {"k": {"type": "uint32"}}}
 _FAN_OUT_TABLES = frozenset({"documents"})
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+def _scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # the schema comes from the file footer, read on the driver: an
     # unpinned read launches a schema-inference job (~0.1 s) per table.
     # prefer_timestamp_ntz maps naive timestamps to timestamp_ntz, as
     # Spark's own inference does (orders, lineitem, events)
     path = f"{sf_dir}/{name}.parquet"
     schema = from_arrow_schema(pq.read_schema(path), prefer_timestamp_ntz=True)
-    df = spark.read.schema(schema).parquet(path)
+    return spark.read.schema(schema).parquet(path)
+
+
+def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    df = _scan(spark, sf_dir, name)
     if name in _FAN_OUT_TABLES:
         from jsl_engine.partitioning import fan_out
 
@@ -856,10 +860,14 @@ def q_stratified_sample_documents(spark: SparkSession, sf_dir: str) -> DataFrame
     """Deterministic class-balanced sampling: at most 5 documents per
     lang, chosen by the content-derived Knuth hash order — identical
     BIGINT arithmetic in DuckDB, so the exact sample is oracled (the
-    reproducibility contract partition-dependent df.sample cannot give)."""
+    reproducibility contract partition-dependent df.sample cannot give).
+
+    Reads the bare scan: the operator fans out its own narrow ranking
+    input, and a fan-out under the scan would end up above the
+    broadcast semi-join, shuffling the result instead of the input."""
     from jsl_engine.sampling import stratified_sample
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
+    docs = _scan(spark, sf_dir, "documents").select("doc_id", "lang")
     return stratified_sample(docs, ["lang"], 5)
 
 

@@ -63,7 +63,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
 from jsl_engine.partitioning import fan_out
-from jsl_engine.text_ops_arrow import _shingle_hashes, _splitmix64
+from jsl_engine.text_ops_arrow import (
+    _distinct_per_doc,
+    _shingle_hash_batch,
+    _splitmix64,
+)
 
 #: Domain-separation constant for the second hash of the double-hashing
 #: probe sequence (distinct from every seed used by the minhash family).
@@ -126,7 +130,13 @@ def _shard_mask(g: np.ndarray, n_shards: int, shard: int) -> np.ndarray:
     shards with no overlap and no gap."""
     if n_shards == 1:
         return g
-    return g[g % np.uint64(n_shards) == np.uint64(shard)]
+    return g[_in_shard(g, n_shards, shard)]
+
+
+def _in_shard(g: np.ndarray, n_shards: int, shard: int) -> np.ndarray:
+    """Boolean mask of the gram hashes in shard ``shard`` of
+    ``n_shards`` (the slice :func:`_shard_mask` keeps)."""
+    return g % np.uint64(n_shards) == np.uint64(shard)
 
 
 def build_gram_bloom(
@@ -187,11 +197,8 @@ def build_gram_bloom(
         def count_part(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             seen: list[np.ndarray] = []
             for batch in batches:
-                for t in batch.column(0).to_pylist():
-                    if t is not None:
-                        seen.append(
-                            _shard_mask(_shingle_hashes(t, n), n_shards, shard)
-                        )
+                vals, _ = _shingle_hash_batch(batch.column(0).to_pylist(), n)
+                seen.append(_shard_mask(vals, n_shards, shard))
             c = int(np.unique(np.concatenate(seen)).size) if seen else 0
             yield pa.RecordBatch.from_arrays(
                 [pa.array([c], type=pa.int64())], names=["c"]
@@ -210,14 +217,12 @@ def build_gram_bloom(
         local = np.zeros(n_words, dtype=np.uint64)
         got = False
         for batch in batches:
-            for t in batch.column(0).to_pylist():
-                if t is not None:
-                    g = np.unique(
-                        _shard_mask(_shingle_hashes(t, n), n_shards, shard)
-                    )
-                    if g.size:
-                        _set_bits(local, _probe_matrix(g, k, m))
-                    got = True
+            vals, counts = _shingle_hash_batch(batch.column(0).to_pylist(), n)
+            # the bits are an OR: one probe per distinct gram of the batch
+            g = np.unique(_shard_mask(vals, n_shards, shard))
+            if g.size:
+                _set_bits(local, _probe_matrix(g, k, m))
+            got = got or bool(counts.any())
         if got:
             yield pa.RecordBatch.from_arrays(
                 [pa.array([local.tobytes()], type=pa.binary())], names=["b"]
@@ -329,28 +334,23 @@ def bloom_contamination(
                 rows = batch.num_rows
                 if rows == 0:
                     continue
-                texts = batch.column(1).to_pylist()
-                n_grams = np.empty(rows, dtype=np.int64)
-                hits = np.empty(rows, dtype=np.int64)
-                for i, t in enumerate(texts):
-                    # NULL text: zero grams, zero hits, never a candidate
-                    # (`t or ""` would give it the EMPTY doc's shingle and
-                    # a spurious bloom candidacy whenever the benchmark
-                    # holds a whitespace-only doc) — pinned with
-                    # contamination()/contamination_arrow and the oracle
-                    if t is None:
-                        n_grams[i] = 0
-                        hits[i] = 0
-                        continue
-                    g = np.unique(
-                        _shard_mask(_shingle_hashes(t, n), n_shards, shard)
-                    )
-                    n_grams[i] = g.size
-                    hits[i] = (
-                        int(_test_all_k(bits, _probe_matrix(g, k, m)).sum())
-                        if g.size
-                        else 0
-                    )
+                # NULL text: zero grams, zero hits, never a candidate
+                # (`t or ""` would give it the EMPTY doc's shingle and a
+                # spurious bloom candidacy whenever the benchmark holds a
+                # whitespace-only doc) — pinned with
+                # contamination()/contamination_arrow and the oracle
+                g, lens, _ = _distinct_per_doc(
+                    *_shingle_hash_batch(batch.column(1).to_pylist(), n)
+                )
+                doc = np.repeat(np.arange(rows), lens)
+                if n_shards > 1:
+                    keep = _in_shard(g, n_shards, shard)
+                    g, doc = g[keep], doc[keep]
+                n_grams = np.bincount(doc, minlength=rows)
+                hits = np.bincount(
+                    doc[_test_all_k(bits, _probe_matrix(g, k, m))],
+                    minlength=rows,
+                )
                 cand_text = pc.if_else(
                     pa.array(hits >= 1),
                     batch.column(1),

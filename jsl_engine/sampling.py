@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from jsl_engine.partitioning import topk_per_group
+from jsl_engine.partitioning import fan_out, topk_per_group
 
 #: Knuth multiplicative constant (2^32 / phi, odd) — portable BIGINT math.
 _KNUTH = 2654435761
@@ -84,7 +84,9 @@ def stratified_sample(
 
     Execution shape (the two-phase trim, made *deterministic*): the
     hash is computed JVM-side on a column-pruned ``(strata, id)``
-    projection; :func:`jsl_engine.partitioning.topk_per_group` ranks it
+    projection (spread by :func:`jsl_engine.partitioning.fan_out` when
+    the input under-splits);
+    :func:`jsl_engine.partitioning.topk_per_group` ranks it
     per stratum by (hash asc, id asc), its batch-local lossless cut
     shrinking the rank window's shuffle input to O(batches × strata × n)
     regardless of corpus size; and the ≤ strata × n winning ids
@@ -98,7 +100,10 @@ def stratified_sample(
     (strata × n rows)."""
     strata_cols = list(strata_cols)
     narrow_cols = list(dict.fromkeys([*strata_cols, id_col]))
-    narrow = df.select(*narrow_cols).withColumn(
+    # the fan-out spreads the narrow ranking input only; the semi-join
+    # below reads ``df`` as given (a repartition of ``df`` itself would
+    # be planned above the join and shuffle its result)
+    narrow = fan_out(df.select(*narrow_cols)).withColumn(
         "__h", order_hash(id_col, SALT_STRATIFIED)
     )
     winners = topk_per_group(

@@ -438,13 +438,16 @@ def verified_jaccard_pairs(
     ``contamination_arrow`` oracle already accepts). The hashed gram
     table (~8 B/gram vs ~40-char shingle strings — ~25× fewer verify
     bytes) is broadcast-joined to the pair list, so the candidate pairs
-    are never shuffled wide, and the exact intersection per pair is one
-    numpy sorted-merge
-    (:func:`jsl_engine.text_ops_arrow.pair_intersection_counts`)
-    instead of a per-pair JVM string-set build — measured r8 at sf1.0:
-    the winnow verify tail over 1.1M candidate pairs dropped 13.6 s →
-    ~2 s. The final Jaccard division runs in-plan on the counts, so
-    float semantics match ``size(intersect)/size(union)`` exactly.
+    are never shuffled wide (measured r8 at sf1.0: the winnow verify
+    tail over 1.1M candidate pairs dropped 13.6 s → ~2 s against string
+    shingle arrays). The exact counts are in-plan JVM expressions on
+    the two distinct gram arrays each pair row carries —
+    ``n_inter = size(array_intersect(g_a, g_b))``,
+    ``n_union = n_a + n_b - n_inter`` — so the gram kernel is the
+    tail's only Python stage (each Python stage costs ~0.2-0.3 s per
+    action on local[4] before it does any work; docs/DESIGN.md "Fixed
+    costs per action at sandbox scale"), and the Jaccard division
+    matches ``size(intersect)/size(union)`` exactly.
 
     The gram-table broadcast is bounded by the CANDIDATE set (the same
     boundedness assumption as the id-set broadcast semi-join); for a
@@ -465,7 +468,7 @@ def verified_jaccard_pairs(
     than paying a materialization job first (r8: 5.4 s → 4.2 s at 1.1M
     candidate pairs, 3.6 s → 2.4 s at 2.5k — same lesson as round 4's
     rejected shingle-table cache)."""
-    from jsl_engine.text_ops_arrow import gram_hash_table, pair_intersection_counts
+    from jsl_engine.text_ops_arrow import gram_hash_table
 
     p = pairs.select("id_a", "id_b").localCheckpoint(eager=True)
     ids = (
@@ -497,23 +500,16 @@ def verified_jaccard_pairs(
     # and the second branch reads it back as a ReusedExchange
     grams = F.broadcast(gram_hash_table(sub, text_col, id_col, n))
     ga, gb = grams.alias("ga"), grams.alias("gb")
-    counted = pair_intersection_counts(
+    n_inter = F.size(F.array_intersect("ga.grams", "gb.grams"))
+    n_union = F.col("ga.n_grams") + F.col("gb.n_grams") - n_inter
+    return (
         p.alias("p")
         .join(ga, F.col("p.id_a") == F.col(f"ga.{id_col}"))
         .join(gb, F.col("p.id_b") == F.col(f"gb.{id_col}"))
         .select(
-            "p.id_a", "p.id_b",
-            F.col("ga.grams").alias("g_a"), F.col("ga.n_grams").alias("n_a"),
-            F.col("gb.grams").alias("g_b"), F.col("gb.n_grams").alias("n_b"),
-        )
-    )
-    return (
-        counted.select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.col("n_inter").cast("double") / F.col("n_union"), 6
-            ).alias("jaccard"),
+            "p.id_a",
+            "p.id_b",
+            F.round(n_inter.cast("double") / n_union, 6).alias("jaccard"),
         )
         .where(F.col("jaccard") >= threshold)
     )

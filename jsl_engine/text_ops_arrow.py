@@ -12,6 +12,14 @@ the LSH banding / Hamming blocking joins of :mod:`jsl_engine.text_ops`.
 MinHash, SimHash and winnowing have only these Arrow kernels; the
 MinHash signatures below are the engine's one MinHash hash family.
 
+Every kernel hashes a whole Arrow batch in one call
+(:func:`_shingle_hash_batch`) and folds the result per document with
+``reduceat``/one sort, so its Python work per document is the string
+normalization alone. The exact-verify tail
+(:func:`jsl_engine.text_ops.verified_jaccard_pairs`) takes only its gram
+table from here (:func:`gram_hash_table`); its per-pair counts are JVM
+expressions, so the tail pays one Python stage.
+
 Hash family: a genuinely 64-bit shingle fingerprint — each word is
 hashed to 64 bits (forward crc32 in the high half, byte-reversed crc32
 in the low half: two distinct GF(2)-linear maps of the word bytes, so a
@@ -66,43 +74,151 @@ def _splitmix64(x: np.ndarray) -> np.ndarray:
 #: position's contribution collapses); supports shingles up to 64 words.
 _POS = _splitmix64(np.arange(1, 65, dtype=np.uint64)) | np.uint64(1)
 
-_SWV = np.lib.stride_tricks.sliding_window_view
+#: Shingle cap of one block of :func:`minhash_signatures_arrow` and
+#: :func:`simhash_arrow`, whose per-shingle rows are 64 wide.
+_SIG_SHINGLES = 1 << 10
+
+#: Word cap of one hashing chunk in :func:`_shingle_hash_batch`: every
+#: temporary array is at most this many uint64s (2 MB), however long the
+#: batch's documents are.
+_CHUNK_WORDS = 1 << 18
 
 
-def _shingle_hashes(text: str, n: int) -> np.ndarray:
-    """uint64 (full 64-bit) hashes of the word n-gram shingles of one
-    document, WITH multiplicity (same normalization as
+def _shingle_hash_batch(
+    texts: "list[str | None]", n: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """``(values, counts)``: the uint64 (full 64-bit) hashes of the word
+    ``n``-gram shingles of a batch of documents, WITH multiplicity and
+    in word order, concatenated document after document, and each
+    document's shingle count (same normalization as
     :func:`jsl_engine.text_ops.normalized`; SimHash weights repeated
-    shingles — matching the JVM variant — and MinHash's min is unaffected
-    by repeats, so one kernel serves both).
+    shingles and MinHash's min is unaffected by repeats, so one hash
+    serves every kernel).
 
     Scheme: 64-bit word hash = (crc32(w) << 32) | crc32(reversed w) —
     two distinct linear maps of the word bytes, jointly 64-bit (see the
     module docstring) — splitmix64-mixed, then per shingle the
     position-weighted XOR of its word hashes (odd-constant multiply per
-    offset, vectorized over a sliding window) through a final
-    splitmix64. Docs shorter than ``n`` words form their single
-    all-words shingle, matching the JVM ``shingles()`` clipping."""
-    if n > len(_POS):
+    offset) through a final splitmix64. A document of ``k >= n`` words
+    has ``k - n + 1`` shingles; a shorter one keeps its single
+    all-words shingle, matching the JVM ``shingles()`` clipping (the
+    empty document is one empty word); a NULL document has none.
+
+    The crc32, mixing and window passes run over all the words of a
+    chunk of documents at once — windows that would cross a document
+    boundary are dropped — so the per-document cost is the string
+    normalization alone. Chunks end at :data:`_CHUNK_WORDS` words (a
+    longer document is a chunk of its own)."""
+    if not 1 <= n <= len(_POS):
         raise ValueError(
-            f"shingle width n={n} exceeds the {len(_POS)} position "
-            "constants — widen _POS if >64-word shingles are ever needed"
+            f"shingle width n={n} is outside 1..{len(_POS)} (the position "
+            "constants) — widen _POS if >64-word shingles are ever needed"
         )
-    # strip(' ') not strip(): after the ASCII-\s collapse the edges are
-    # plain spaces, and Python's bare strip() would also remove Unicode
-    # whitespace that the JVM's F.trim (space-only) keeps
-    words = _WS.sub(" ", text.lower()).strip(" ").split(" ")
-    bl = [w.encode("utf-8") for w in words]
-    k = len(bl)
+    # bytes.split() splits on exactly the ASCII whitespace of _WS and
+    # drops edge runs (the JVM's trim); UTF-8 whitespace bytes never
+    # occur inside a multi-byte character, so splitting the encoded text
+    # is splitting the text. A blank document is one empty word.
+    norm = [
+        None if t is None else b" ".join(t.lower().encode("utf-8").split())
+        for t in texts
+    ]
+    k = np.fromiter(
+        (0 if s is None else s.count(b" ") + 1 for s in norm),
+        dtype=np.int64, count=len(norm),
+    )
+    bounds = np.concatenate(([0], np.cumsum(k)))
+    parts = [
+        _hash_chunk([s for s in norm[d0:d1] if s is not None], k[d0:d1], n)
+        for d0, d1 in _doc_blocks(bounds, _CHUNK_WORDS)
+        if bounds[d1] > bounds[d0]
+    ]
+    values = np.concatenate(parts) if parts else np.empty(0, np.uint64)
+    return values, _n_windows(k, n)
+
+
+def _hash_chunk(norm: "list[bytes]", k: np.ndarray, n: int) -> np.ndarray:
+    """Shingle hashes of one chunk of :func:`_shingle_hash_batch`:
+    ``norm`` are its non-NULL documents as space-joined UTF-8 words,
+    ``k`` the word count of every document in it (0 for NULL)."""
+    joined = b" ".join(norm)
+    words = joined.split(b" ")
+    nw = len(words)
     crc = zlib.crc32
-    hi = np.fromiter((crc(b) for b in bl), dtype=np.uint32, count=k).astype(np.uint64)
-    lo = np.fromiter((crc(b[::-1]) for b in bl), dtype=np.uint32, count=k).astype(np.uint64)
-    wm = _splitmix64((hi << np.uint64(32)) | lo)
-    if k >= n:
-        acc = np.bitwise_xor.reduce(_SWV(wm, n) * _POS[None, :n], axis=1)
-    else:
-        acc = np.atleast_1d(np.bitwise_xor.reduce(wm * _POS[:k]))
-    return _splitmix64(acc)
+    hi = np.fromiter(map(crc, words), dtype=np.uint32, count=nw)
+    # the reversed join's words are the reversed words, last word first
+    lo = np.fromiter(
+        map(crc, joined[::-1].split(b" ")), dtype=np.uint32, count=nw
+    )[::-1]
+    wm = _splitmix64((hi.astype(np.uint64) << np.uint64(32)) | lo)
+    return _splitmix64(_window_fold(np.bitwise_xor, wm, k, n, _POS))
+
+
+def _window_fold(
+    ufunc: np.ufunc,
+    x: np.ndarray,
+    k: np.ndarray,
+    w: int,
+    weights: "np.ndarray | None" = None,
+) -> np.ndarray:
+    """Fold every ``w``-wide window of ``x`` that lies inside one
+    document with ``ufunc`` (each offset ``o`` weighted by
+    ``weights[o]`` when given), in order; ``k`` counts each document's
+    values. A document with ``0 < k < w`` values folds whole, once
+    (:func:`_n_windows` counts the results per document)."""
+    nx = len(x)
+    kx = np.repeat(k, k)
+    pos = np.arange(nx) - np.repeat(np.cumsum(k) - k, k)
+    # the zero padding past the last value only feeds windows that run
+    # out of their document, which the keep mask below drops
+    padded = np.concatenate((x, np.zeros(w - 1, x.dtype)))
+    acc = x.copy() if weights is None else x * weights[0]
+    for o in range(1, w):
+        term = padded[o:o + nx]
+        ufunc(acc, term if weights is None else term * weights[o], out=acc)
+    short = kx < w
+    if short.any():
+        sk = k[(k > 0) & (k < w)]
+        xs = x[short] if weights is None else x[short] * weights[pos[short]]
+        acc[short & (pos == 0)] = ufunc.reduceat(xs, np.cumsum(sk) - sk)
+    return acc[np.where(short, pos == 0, pos <= kx - w)]
+
+
+def _n_windows(k: np.ndarray, w: int) -> np.ndarray:
+    """Per document, the number of values :func:`_window_fold` yields:
+    ``k - w + 1``, or 1 for a shorter document, or 0 for an empty one."""
+    return np.where(k >= w, k - w + 1, np.minimum(k, 1))
+
+
+def _doc_blocks(bounds: np.ndarray, cap: int) -> "Iterator[tuple[int, int]]":
+    """Consecutive document ranges ``[d0, d1)`` holding at most ``cap``
+    values each (a longer document is a range of its own), from the
+    documents' value offsets ``bounds`` (``len(docs) + 1`` of them)."""
+    d0, nd = 0, len(bounds) - 1
+    while d0 < nd:
+        d1 = max(
+            int(np.searchsorted(bounds, bounds[d0] + cap, "right")) - 1, d0 + 1
+        )
+        yield d0, d1
+        d0 = d1
+
+
+def _distinct_per_doc(
+    values: np.ndarray, counts: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """``(distinct, lens, runs)`` for values grouped by document
+    (``counts`` per document, in order): each document's distinct values
+    in ascending uint64 order, concatenated document after document; how
+    many each document has; and each distinct value's multiplicity in
+    its document — ``np.unique(..., return_counts=True)`` per document,
+    in one sort."""
+    doc = np.repeat(np.arange(len(counts)), counts)
+    order = np.lexsort((values, doc))
+    v, d = values[order], doc[order]
+    first = np.ones(len(v), dtype=bool)
+    first[1:] = (v[1:] != v[:-1]) | (d[1:] != d[:-1])
+    starts = np.flatnonzero(first)
+    lens = np.bincount(d[starts], minlength=len(counts))
+    return v[starts], lens, np.diff(np.append(starts, len(v)))
 
 
 def gram_hash_table(
@@ -113,16 +229,17 @@ def gram_hash_table(
 ) -> DataFrame:
     """``id, grams: array<bigint> (sorted distinct), n_grams`` — each
     document's distinct word-``n``-gram 64-bit hashes
-    (:func:`_shingle_hashes`, the same gram identity every Arrow
+    (:func:`_shingle_hash_batch`, the same gram identity every Arrow
     signature kernel uses), computed in one map-only Arrow pass.
 
     This is the exact-verify tail's document representation (r8): a
     hashed gram set is ~25× smaller than the ``array<string>`` shingle
     arrays the verify joins used to ship (8 B/gram vs ~40-char grams),
-    and set intersection over two sorted int64 arrays is one numpy merge
-    instead of a JVM string-set build per pair. Counts over hashed grams
-    equal counts over string grams absent a ~2⁻⁶⁴-probability collision
-    — the argument :func:`contamination_arrow`'s oracle already accepts.
+    and the tail intersects two of them per pair in-plan
+    (``array_intersect`` over int64 arrays, no string-set build). Counts
+    over hashed grams equal counts over string grams absent a
+    ~2⁻⁶⁴-probability collision — the argument
+    :func:`contamination_arrow`'s oracle already accepts.
 
     NULL-text docs emit NO row (parity with the JVM shingle pin — they
     have no word n-grams)."""
@@ -140,16 +257,10 @@ def gram_hash_table(
             nrows = batch.num_rows
             if nrows == 0:
                 continue
-            texts = batch.column(1).to_pylist()
-            per_doc = [
-                np.unique(_shingle_hashes(t, n)).view(np.int64) for t in texts
-            ]
-            lens = np.fromiter((len(g) for g in per_doc), dtype=np.int64,
-                               count=nrows)
-            values = pa.array(
-                np.concatenate(per_doc) if per_doc else np.empty(0, np.int64),
-                pa.int64(),
+            grams, lens, _ = _distinct_per_doc(
+                *_shingle_hash_batch(batch.column(1).to_pylist(), n)
             )
+            values = pa.array(grams.view(np.int64), pa.int64())
             offsets = pa.array(
                 np.concatenate(([0], np.cumsum(lens))).astype(np.int32)
             )
@@ -165,57 +276,6 @@ def gram_hash_table(
     return pruned.mapInArrow(run, out_schema)
 
 
-def pair_intersection_counts(joined: DataFrame) -> DataFrame:
-    """``id_a, id_b, n_inter, n_union`` from a frame carrying two sorted
-    distinct int64 gram arrays per candidate pair (``g_a``/``g_b`` with
-    their ``n_a``/``n_b`` sizes) — one numpy sorted-merge intersection
-    per row, no JVM per-pair string-set ops. The caller derives exact
-    Jaccard as ``n_inter / n_union`` in-plan (JVM double division, so
-    the float semantics of ``size(array_intersect)/size(array_union)``
-    are reproduced exactly)."""
-    pruned = joined.select("id_a", "id_b", "n_a", "n_b", "g_a", "g_b")
-    out_schema = StructType(
-        [
-            pruned.schema["id_a"],
-            pruned.schema["id_b"],
-            StructField("n_inter", LongType(), False),
-            StructField("n_union", LongType(), False),
-        ]
-    )
-
-    def run(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
-        for batch in batches:
-            nrows = batch.num_rows
-            if nrows == 0:
-                continue
-            na = batch.column(2).to_numpy(zero_copy_only=False)
-            nb = batch.column(3).to_numpy(zero_copy_only=False)
-            ga = batch.column(4)
-            gb = batch.column(5)
-            va = ga.flatten().to_numpy(zero_copy_only=False)
-            vb = gb.flatten().to_numpy(zero_copy_only=False)
-            oa = np.concatenate(([0], np.cumsum(na)))
-            ob = np.concatenate(([0], np.cumsum(nb)))
-            inter = np.empty(nrows, dtype=np.int64)
-            for i in range(nrows):
-                inter[i] = np.intersect1d(
-                    va[oa[i]:oa[i + 1]], vb[ob[i]:ob[i + 1]],
-                    assume_unique=True,
-                ).size
-            union = na + nb - inter
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column(0),
-                    batch.column(1),
-                    pa.array(inter, pa.int64()),
-                    pa.array(union.astype(np.int64), pa.int64()),
-                ],
-                ["id_a", "id_b", "n_inter", "n_union"],
-            )
-
-    return pruned.mapInArrow(run, out_schema)
-
-
 def minhash_signatures_arrow(
     df: DataFrame,
     text_col: str = "text",
@@ -226,8 +286,10 @@ def minhash_signatures_arrow(
 ) -> DataFrame:
     """``id, sig: array<bigint>`` — numpy MinHash over Arrow batches.
 
-    Per batch: shingle+crc32 per document (C-speed string work), then one
-    vectorized ``splitmix64(shingles ⊕ seeds).min(axis=0)`` per document.
+    Per batch: the shingle hashes of all its documents in one
+    :func:`_shingle_hash_batch` call, then
+    ``splitmix64(shingles ⊕ seeds)`` folded per document by one
+    ``np.minimum.reduceat`` over each block of a few documents.
     The signature table is the interface LSH banding
     (:func:`jsl_engine.text_ops.lsh_candidate_pairs`) and verification
     compose on.
@@ -260,11 +322,18 @@ def minhash_signatures_arrow(
             n = batch.num_rows
             if n == 0:
                 continue
-            texts = batch.column(1).to_pylist()
+            vals, counts = _shingle_hash_batch(
+                batch.column(1).to_pylist(), shingle_n
+            )
+            bounds = np.concatenate(([0], np.cumsum(counts)))
             sigs = np.empty((n, width), dtype=np.uint64)
-            for i, t in enumerate(texts):
-                base = _shingle_hashes(t, shingle_n)
-                sigs[i] = _splitmix64(base[:, None] ^ s[None, :]).min(axis=0)
+            # a few documents at a time: the (shingles x hashes) matrix
+            # stays cache-sized however long the documents are
+            for d0, d1 in _doc_blocks(bounds, _SIG_SHINGLES):
+                block = vals[bounds[d0]:bounds[d1], None] ^ s[None, :]
+                sigs[d0:d1] = np.minimum.reduceat(
+                    _splitmix64(block), bounds[d0:d1] - bounds[d0], axis=0
+                )
             values = pa.array(sigs.reshape(-1).view(np.int64), pa.int64())
             offsets = pa.array(
                 np.arange(0, (n + 1) * width, width, dtype=np.int32)
@@ -286,9 +355,9 @@ def simhash_arrow(
 ) -> DataFrame:
     """``id, simhash: bigint`` — numpy SimHash over Arrow batches.
 
-    Per document: unpack the shingle hashes to a (shingles × 64) sign
-    matrix with one broadcasted shift-and-mask, column-sum, pack the sign
-    bits. The output feeds
+    Per block of a few documents: unpack the mixed shingle hashes to a
+    (shingles × 64) bit matrix, sum it per document with
+    ``np.add.reduceat``, pack the majority bits. The output feeds
     :func:`jsl_engine.text_ops.simhash_pairs_from_hashes`.
 
     NULL-text docs emit NO simhash row: a ``t or ""`` fallback would give
@@ -301,23 +370,31 @@ def simhash_arrow(
     out_schema = StructType(
         [pruned.schema[id_col], StructField("simhash", LongType(), False)]
     )
-    bit_idx = np.arange(64, dtype=np.uint64)
 
     def run(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
         for batch in batches:
             n = batch.num_rows
             if n == 0:
                 continue
-            texts = batch.column(1).to_pylist()
+            vals, counts = _shingle_hash_batch(
+                batch.column(1).to_pylist(), shingle_n
+            )
+            mixed = _splitmix64(vals).astype("<u8")
+            bounds = np.concatenate(([0], np.cumsum(counts)))
             out = np.empty(n, dtype=np.uint64)
-            for i, t in enumerate(texts):
-                base = _shingle_hashes(t, shingle_n)
-                mixed = _splitmix64(base)
-                bits = (mixed[:, None] >> bit_idx[None, :]) & np.uint64(1)
-                counts = bits.sum(axis=0, dtype=np.int64) * 2 - len(mixed)
-                out[i] = np.bitwise_or.reduce(
-                    np.where(counts > 0, np.uint64(1) << bit_idx, np.uint64(0))
+            for d0, d1 in _doc_blocks(bounds, _SIG_SHINGLES):
+                # bit b of a little-endian uint64 is bit b % 8 of byte b // 8
+                bits = np.unpackbits(
+                    mixed[bounds[d0]:bounds[d1]].view(np.uint8).reshape(-1, 8),
+                    axis=1, bitorder="little",
                 )
+                ones = np.add.reduceat(
+                    bits, bounds[d0:d1] - bounds[d0], axis=0, dtype=np.int64
+                )
+                major = ones * 2 - counts[d0:d1, None] > 0
+                out[d0:d1] = np.packbits(
+                    major, axis=1, bitorder="little"
+                ).view("<u8")[:, 0]
             yield pa.RecordBatch.from_arrays(
                 [batch.column(0), pa.array(out.view(np.int64), pa.int64())],
                 [id_col, "simhash"],
@@ -335,10 +412,11 @@ def winnow_flat_arrow(
     balance: bool = True,
 ) -> DataFrame:
     """``(id, fp)`` rows of winnowing-selected k-gram hashes, computed
-    entirely in the map: numpy ``sliding_window_view(...).min(axis=1)``
-    per document. A JVM window-frame formulation needs a per-document
-    window shuffle; here the only shuffle in an overlap-detection
-    pipeline is the fingerprint equi-join itself.
+    entirely in the map: the minimum of every ``window``-wide run of a
+    document's shingle hashes, over the whole batch at once
+    (:func:`_window_fold`). A JVM window-frame formulation needs a
+    per-document window shuffle; here the only shuffle in an
+    overlap-detection pipeline is the fingerprint equi-join itself.
 
     NULL-text docs emit NO fingerprint rows (the same rule as the
     minhash and simhash kernels)."""
@@ -348,7 +426,6 @@ def winnow_flat_arrow(
     out_schema = StructType(
         [pruned.schema[id_col], StructField("fp", LongType(), False)]
     )
-    swv = np.lib.stride_tricks.sliding_window_view
 
     def run(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
         for batch in batches:
@@ -356,21 +433,14 @@ def winnow_flat_arrow(
             if n == 0:
                 continue
             ids = batch.column(0).to_numpy(zero_copy_only=False)
-            texts = batch.column(1).to_pylist()
-            out_ids: list[np.ndarray] = []
-            out_fps: list[np.ndarray] = []
-            for i, t in enumerate(texts):
-                h = _splitmix64(_shingle_hashes(t, k))
-                if len(h) >= window:
-                    fps = np.unique(swv(h, window).min(axis=1))
-                else:
-                    fps = np.asarray([h.min()], dtype=np.uint64)
-                out_fps.append(fps)
-                out_ids.append(np.full(len(fps), ids[i]))
+            vals, counts = _shingle_hash_batch(batch.column(1).to_pylist(), k)
+            # a doc with fewer than `window` shingles keeps its minimum
+            mins = _window_fold(np.minimum, _splitmix64(vals), counts, window)
+            fps, lens, _ = _distinct_per_doc(mins, _n_windows(counts, window))
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(np.concatenate(out_ids)),
-                    pa.array(np.concatenate(out_fps).view(np.int64), pa.int64()),
+                    pa.array(np.repeat(ids, lens)),
+                    pa.array(fps.view(np.int64), pa.int64()),
                 ],
                 [id_col, "fp"],
             )
@@ -595,12 +665,7 @@ def contamination_arrow(
     bench_texts = [
         r[0] for r in benchmark.select(text_col).collect() if r[0] is not None
     ]
-    if bench_texts:
-        bench_hashes = np.unique(
-            np.concatenate([_shingle_hashes(t, n) for t in bench_texts])
-        )
-    else:
-        bench_hashes = np.empty(0, dtype=np.uint64)
+    bench_hashes = np.unique(_shingle_hash_batch(bench_texts, n)[0])
     bc = spark.sparkContext.broadcast(bench_hashes)
 
     pruned = df.select(id_col, text_col)
@@ -623,26 +688,20 @@ def contamination_arrow(
             rows = batch.num_rows
             if rows == 0:
                 continue
-            texts = batch.column(1).to_pylist()
-            n_grams = np.empty(rows, dtype=np.int64)
-            n_hits = np.empty(rows, dtype=np.int64)
-            for i, t in enumerate(texts):
-                # NULL text has NO grams (n_grams=0, hit_rate NULL,
-                # not contaminated) — pinned with the JVM twin and the
-                # DuckDB oracle; the EMPTY doc keeps its one
-                # empty-word shingle in all three engines
-                if t is None:
-                    n_grams[i] = 0
-                    n_hits[i] = 0
-                    continue
-                g = np.unique(_shingle_hashes(t, n))
-                n_grams[i] = g.size
-                if bs.size:
-                    idx = np.searchsorted(bs, g)
-                    idx[idx == bs.size] = 0
-                    n_hits[i] = int((bs[idx] == g).sum())
-                else:
-                    n_hits[i] = 0
+            # NULL text has NO grams (n_grams=0, hit_rate NULL, not
+            # contaminated) — pinned with the JVM twin and the DuckDB
+            # oracle; the EMPTY doc keeps its one empty-word shingle in
+            # all three engines
+            g, n_grams, _ = _distinct_per_doc(
+                *_shingle_hash_batch(batch.column(1).to_pylist(), n)
+            )
+            if bs.size:
+                hit = bs[np.minimum(np.searchsorted(bs, g), bs.size - 1)] == g
+            else:
+                hit = np.zeros(g.size, dtype=bool)
+            n_hits = np.bincount(
+                np.repeat(np.arange(rows), n_grams)[hit], minlength=rows
+            )
             yield pa.RecordBatch.from_arrays(
                 [
                     batch.column(0),
@@ -677,8 +736,8 @@ def contamination_arrow(
 #: ``greatest`` skips the NULL size, and ``array_join`` of a NULL slice
 #: is NULL) — NULL documents group with each other and with nothing
 #: else. A fixed 64-bit constant reproduces exactly that equivalence
-#: class; it cannot collide with ``_shingle_hashes("")`` (the empty
-#: document's single empty-word shingle) or any real span except by the
+#: class; it cannot collide with the empty document's hash (its
+#: single empty-word shingle) or any real span except by the
 #: same 2^-64 chance every distinct span pair already carries.
 _NULL_SPAN = _splitmix64(np.asarray([0x6E756C6C], dtype=np.uint64))
 
@@ -691,16 +750,16 @@ def span_hash_counts_arrow(
     balance: bool = True,
 ) -> DataFrame:
     """``(id, span_h, __cd)`` — per-document span-hash multiplicities,
-    computed entirely in the map: one :func:`_shingle_hashes` call per
-    document (stride-1 word ``span_tokens``-grams, 64-bit fingerprints)
-    folded by ``np.unique(return_counts=True)``. This is the Arrow twin
+    computed entirely in the map: one :func:`_shingle_hash_batch` call
+    per batch (stride-1 word ``span_tokens``-grams, 64-bit fingerprints)
+    folded per document by :func:`_distinct_per_doc`. This is the Arrow twin
     of the ``explode(shingles) → groupBy(id, span)`` head of
     :func:`jsl_engine.text_ops.duplicate_spans`: identical counts (span
     equality ↔ hash equality up to 2^-64 collisions), but no span
     *instances* ever reach a shuffle — the per-(doc, span) fold happens
     before the first exchange, and the rows it emits carry an 8-byte
     hash instead of a ~100-byte string. Short docs collapse to their
-    single all-words shingle (the ``_shingle_hashes`` k<n clip), empty
+    single all-words shingle (the ``_shingle_hash_batch`` k<n clip), empty
     docs to the empty-word shingle, NULL docs to :data:`_NULL_SPAN`."""
     pruned = df.select(id_col, text_col)
     if balance:
@@ -720,28 +779,19 @@ def span_hash_counts_arrow(
                 continue
             ids = batch.column(0).to_numpy(zero_copy_only=False)
             texts = batch.column(1).to_pylist()
-            out_ids: list[np.ndarray] = []
-            out_hs: list[np.ndarray] = []
-            out_cs: list[np.ndarray] = []
-            for i, t in enumerate(texts):
-                if t is None:
-                    uniq, cnt = _NULL_SPAN, np.asarray([1], dtype=np.int64)
-                else:
-                    uniq, cnt = np.unique(
-                        _shingle_hashes(t, span_tokens), return_counts=True
-                    )
-                out_hs.append(uniq)
-                out_cs.append(cnt)
-                out_ids.append(np.full(len(uniq), ids[i]))
+            vals, counts = _shingle_hash_batch(texts, span_tokens)
+            null = np.flatnonzero([t is None for t in texts])
+            if null.size:
+                # a NULL doc has no shingles; it gets the one NULL span
+                vals = np.insert(vals, (np.cumsum(counts) - counts)[null],
+                                 _NULL_SPAN[0])
+                counts[null] = 1
+            uniq, lens, cnt = _distinct_per_doc(vals, counts)
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(np.concatenate(out_ids)),
-                    pa.array(
-                        np.concatenate(out_hs).view(np.int64), pa.int64()
-                    ),
-                    pa.array(
-                        np.concatenate(out_cs).astype(np.int64), pa.int64()
-                    ),
+                    pa.array(np.repeat(ids, lens)),
+                    pa.array(uniq.view(np.int64), pa.int64()),
+                    pa.array(cnt, pa.int64()),
                 ],
                 [id_col, "span_h", "__cd"],
             )

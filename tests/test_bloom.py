@@ -143,13 +143,13 @@ def test_bloom_matches_exact_random_corpus(spark):
 
 def test_build_gram_bloom_no_false_negatives(spark):
     """Every benchmark gram probes positive against the built filter."""
-    from jsl_engine.text_ops_arrow import _shingle_hashes
+    from jsl_engine.text_ops_arrow import _shingle_hash_batch
 
     texts = [f"alpha beta gamma delta epsilon {i}" for i in range(20)]
     bench = spark.createDataFrame([Row(text=t) for t in texts]).repartition(4)
     bitmap, m, k = build_gram_bloom(bench, n=3, fp_rate=1e-3)
     for t in texts:
-        g = np.unique(_shingle_hashes(t, 3))
+        g = np.unique(_shingle_hash_batch([t], 3)[0])
         assert _test_all_k(bitmap, _probe_matrix(g, k, m)).all()
 
 
@@ -288,13 +288,11 @@ def test_bloom_sharded_build_is_smaller_and_complete(spark, planted):
     """Each shard's filter is sized for its slice (smaller than the
     monolithic filter) and has no false negatives for its own grams."""
     from jsl_engine.bloom import _shard_mask
-    from jsl_engine.text_ops_arrow import _shingle_hashes
+    from jsl_engine.text_ops_arrow import _shingle_hash_batch
 
     _, bench = planted
     texts = [r.text for r in bench.collect()]
-    all_grams = np.unique(
-        np.concatenate([_shingle_hashes(t, 3) for t in texts])
-    )
+    all_grams = np.unique(_shingle_hash_batch(texts, 3)[0])
     mono, m_mono, _ = build_gram_bloom(bench, n=3)
     for shard in range(2):
         bm, m, k = build_gram_bloom(bench, n=3, n_shards=2, shard=shard)

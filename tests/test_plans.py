@@ -101,9 +101,36 @@ def test_verified_jaccard_tail_plan_shape(spark):
     tree = final.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
     assert tree.count("BroadcastExchange") == 2, final[:4000]
     assert tree.count("ReusedExchange") == 1, final[:4000]
+    # the gram kernel is the tail's only Python stage: the pair counts
+    # are JVM expressions
+    python = [n for n in _tree_nodes(tree)
+              if "InArrow" in n or "Python" in n or "InPandas" in n]
+    assert python == ["MapInArrow"], final[:4000]
 
     empty = pairs.where(F.lit(False))
     assert verified_jaccard_pairs(docs, empty, threshold=0.0).count() == 0
+
+
+def _final_tree(final_plan: str) -> list[tuple[int, str]]:
+    """(depth, text) of every line of an executed adaptive plan's final
+    tree, in tree order."""
+    tree = final_plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    nodes = []
+    for line in tree.splitlines():
+        body = line.lstrip(" :+-")
+        if body:
+            nodes.append((len(line) - len(body), body))
+    return nodes
+
+
+def _ancestors(nodes: list[tuple[int, str]], i: int) -> list[str]:
+    """The texts of node ``i``'s ancestors, parent first."""
+    out, depth = [], nodes[i][0]
+    for d, text in reversed(nodes[:i]):
+        if d < depth:
+            out.append(text)
+            depth = d
+    return out
 
 
 def _band_exchange_reads(final_plan: str) -> list[tuple[str, str]]:
@@ -111,24 +138,14 @@ def _band_exchange_reads(final_plan: str) -> list[tuple[str, str]]:
     exchange in an executed adaptive plan's final tree: the grandparent
     is what reads the exchange's query stage (an ``AQEShuffleRead``
     when AQE coalesced it)."""
-    tree = final_plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
-    nodes = []  # (depth, text) in tree order
-    for line in tree.splitlines():
-        body = line.lstrip(" :+-")
-        if body:
-            nodes.append((len(line) - len(body), body))
+    nodes = _final_tree(final_plan)
     out = []
-    for i, (depth, text) in enumerate(nodes):
+    for i, (_, text) in enumerate(nodes):
         if "hashpartitioning(band" not in text:
             continue
-        ancestors = []
-        for d, t in reversed(nodes[:i]):
-            if d < (ancestors[-1][0] if ancestors else depth):
-                ancestors.append((d, t))
-                if len(ancestors) == 2:
-                    break
-        assert len(ancestors) == 2, tree[:4000]
-        out.append((text, ancestors[1][1]))
+        ancestors = _ancestors(nodes, i)
+        assert len(ancestors) >= 2, final_plan[:4000]
+        out.append((text, ancestors[1]))
     return out
 
 
@@ -288,12 +305,16 @@ def test_chunk_documents_bpe_plan_no_shuffle(spark):
     assert plan.count("Generate") == 1, plan[:2000]
 
 
-def _plan_nodes(df) -> list[str]:
-    """Operator names of ``df``'s physical plan, one per tree line."""
+def _tree_nodes(tree: str) -> list[str]:
+    """Operator names of a plan tree's text, one per tree line."""
     import re
 
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return [m.group(1) for m in re.finditer(r"^[\s:|+-]*(\w+)", plan, re.M)]
+    return [m.group(1) for m in re.finditer(r"^[\s:|+-]*(\w+)", tree, re.M)]
+
+
+def _plan_nodes(df) -> list[str]:
+    """Operator names of ``df``'s physical plan, one per tree line."""
+    return _tree_nodes(df._jdf.queryExecution().executedPlan().toString())
 
 
 def test_topk_queries_keep_their_python_and_exchange_counts(spark):
@@ -307,7 +328,7 @@ def test_topk_queries_keep_their_python_and_exchange_counts(spark):
     expected = {
         "top_orders_per_priority": (1, 1),
         "topk_cosine_embeddings": (6, 4),
-        "stratified_sample_documents": (1, 4),
+        "stratified_sample_documents": (1, 3),
     }
     reg = em.queries()
     for name, (n_python, n_exchange) in expected.items():
@@ -317,3 +338,22 @@ def test_topk_queries_keep_their_python_and_exchange_counts(spark):
         exchanges = [n for n in nodes if n.endswith("Exchange")]
         assert (len(python), len(exchanges)) == (n_python, n_exchange), (
             name, nodes)
+
+
+def test_stratified_sample_fans_out_its_ranking_input_not_its_result(spark):
+    """``stratified_sample_documents`` spreads the narrow ranking input
+    (a round-robin exchange under the rank) and its broadcast semi-join
+    reads the scan: no ``RoundRobinPartitioning`` exchange sits above
+    the ``LeftSemi`` join of the executed plan, where it would shuffle
+    the 25-row result."""
+    import __spark_entry__ as em
+
+    df = em.queries()["stratified_sample_documents"](spark, f"{TESTDATA}/sf0.001")
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    nodes = _final_tree(plan)
+    [join] = [i for i, (_, text) in enumerate(nodes) if "LeftSemi" in text]
+    ancestors = _ancestors(nodes, join)
+    assert ancestors, plan
+    assert not any("RoundRobinPartitioning" in a for a in ancestors), plan
+    assert any("RoundRobinPartitioning" in t for _, t in nodes[join:]), plan

@@ -303,13 +303,10 @@ def test_arrow_shingle_hashes_are_64_bit():
     birthday bound makes ~5 collisions likely; a full 64-bit image makes
     any collision a 1-in-10^9 event."""
     import numpy as np
-    from jsl_engine.text_ops_arrow import _shingle_hashes
+    from jsl_engine.text_ops_arrow import _shingle_hash_batch
 
-    hs = []
-    for d in range(2000):
-        text = " ".join(f"w{d}x{i}" for i in range(104))
-        hs.append(_shingle_hashes(text, 5))
-    allh = np.concatenate(hs)
+    texts = [" ".join(f"w{d}x{i}" for i in range(104)) for d in range(2000)]
+    allh, _ = _shingle_hash_batch(texts, 5)
     assert len(allh) == 200_000
     assert len(np.unique(allh)) == 200_000
     # the high and low 32-bit halves must both carry entropy
@@ -322,7 +319,10 @@ def test_arrow_shingle_hashes_content_identity():
     multiplicity is preserved; short docs yield their single clipped
     shingle."""
     import numpy as np
-    from jsl_engine.text_ops_arrow import _shingle_hashes
+    from jsl_engine.text_ops_arrow import _shingle_hash_batch
+
+    def _shingle_hashes(text, n):
+        return _shingle_hash_batch([text], n)[0]
 
     a = _shingle_hashes("one two three four five six", 5)   # 2 shingles
     b = _shingle_hashes("zero one two three four five", 5)  # shifted window
@@ -331,6 +331,76 @@ def test_arrow_shingle_hashes_content_identity():
     assert len(rep) == 6 and len(np.unique(rep)) == 2  # multiplicity kept
     short = _shingle_hashes("just three words", 5)
     assert len(short) == 1
+
+
+def _reference_shingle_hashes(text, n):
+    """One document's shingle hashes, as the kernels computed them one
+    document at a time before the batch helper: the reference the
+    batch helper is held to element for element."""
+    import zlib
+
+    import numpy as np
+    from jsl_engine.text_ops_arrow import _POS, _WS, _splitmix64
+
+    words = _WS.sub(" ", text.lower()).strip(" ").split(" ")
+    bl = [w.encode("utf-8") for w in words]
+    k = len(bl)
+    hi = np.fromiter((zlib.crc32(b) for b in bl), np.uint32, k).astype(np.uint64)
+    lo = np.fromiter((zlib.crc32(b[::-1]) for b in bl), np.uint32, k).astype(np.uint64)
+    wm = _splitmix64((hi << np.uint64(32)) | lo)
+    if k >= n:
+        windows = np.lib.stride_tricks.sliding_window_view(wm, n)
+        acc = np.bitwise_xor.reduce(windows * _POS[None, :n], axis=1)
+    else:
+        acc = np.atleast_1d(np.bitwise_xor.reduce(wm * _POS[:k]))
+    return _splitmix64(acc)
+
+
+def test_shingle_hash_batch_matches_per_doc_reference(monkeypatch):
+    """The batch helper gives each document exactly the hashes, in
+    order, of the per-document reference: blank, one-word and
+    shorter-than-n documents (one all-words shingle), whitespace that is
+    not ASCII (NBSP, U+2028, U+0085 and the U+001C-U+001F separators stay
+    inside words), mixed case, NULL documents (no shingles), and batches
+    that cross the word-count chunk cap, at the real cap and a tiny one;
+    widths 1 and 64 work and 65 raises."""
+    import random
+
+    import numpy as np
+    import jsl_engine.text_ops_arrow as TA
+
+    edge = [
+        "", " ", "\t\n", "one", "two words", "only four words here",
+        "A\u00a0B c\u2028d E\u0085f g h i", "Mixed CASE Words mixed case words",
+        "sep\x1cinside words\x1fstay\x0bsplit\x0con vt ff", None,
+        "  leading and trailing  ", "ΣΟΦΟΣ λόγος Straße İstanbul 東京 大阪",
+    ]
+    rng = random.Random(7)
+    vocab = ["alpha", "Beta", "GAMMA", "δέλτα", "x", "y\u00a0z"]
+    random_docs = [
+        " ".join(rng.choice(vocab) for _ in range(rng.randrange(0, 90)))
+        for _ in range(300)
+    ]
+    # ~300k words: more than one chunk at the real cap
+    long_docs = [" ".join(f"w{d % 97}x{i % 13}" for i in range(2500))
+                 for d in range(110)]
+    assert sum(len(t.split()) for t in long_docs) > TA._CHUNK_WORDS
+
+    def check(texts, n):
+        values, counts = TA._shingle_hash_batch(texts, n)
+        ref = [_reference_shingle_hashes(t, n) if t is not None
+               else np.empty(0, np.uint64) for t in texts]
+        assert counts.tolist() == [len(r) for r in ref]
+        assert np.array_equal(values, np.concatenate(ref))
+
+    for n in (1, 3, 5, 13, 64):
+        check(edge + random_docs, n)
+    check(long_docs + edge, 5)
+    monkeypatch.setattr(TA, "_CHUNK_WORDS", 7)
+    for n in (1, 5, 64):
+        check(edge + random_docs, n)
+    with pytest.raises(ValueError, match="shingle width"):
+        TA._shingle_hash_batch(["some words here"], 65)
 
 
 _WINNOW_SHARED = "the quick brown fox jumps over the lazy dog near the river bank today"
@@ -663,10 +733,10 @@ def test_connected_components_driver_and_distributed_agree(spark, monkeypatch):
 
 
 def test_arrow_shingle_width_validated():
-    from jsl_engine.text_ops_arrow import _shingle_hashes
+    from jsl_engine.text_ops_arrow import _shingle_hash_batch
 
     with pytest.raises(ValueError, match="shingle width"):
-        _shingle_hashes("some words here", 65)
+        _shingle_hash_batch(["some words here"], 65)
 
 
 def test_sampling_huge_ids_no_overflow(spark):
@@ -2160,6 +2230,41 @@ def test_verified_jaccard_pairs_exclude_null_docs(spark):
     )
     out = T.verified_jaccard_pairs(docs, pairs, threshold=0.0).collect()
     assert {(r.id_a, r.id_b) for r in out} == {(3, 4)}
+
+
+def test_verified_jaccard_counts_distinct_repeated_grams(spark):
+    """Documents that repeat their word 5-grams verify at the Jaccard of
+    their 5-gram SETS: ``len(A & B) / len(A | B)`` over Python sets,
+    rounded to 6 places — repeats count once on both sides of the
+    in-plan intersection and union."""
+    def grams(text):
+        w = text.lower().split()
+        return {tuple(w[i:i + 5]) for i in range(len(w) - 4)}
+
+    loop = "a b c d e f "
+    texts = {
+        1: loop * 6,
+        2: loop * 3 + "a b c d e x y " * 4,
+        3: "a b c d e " * 5 + "z " * 9,
+        4: "p q r s t u v " * 4 + loop * 2,
+        5: loop * 9 + "f e d c b a " * 2,
+    }
+    docs = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    ids = sorted(texts)
+    pairs = [(a, b) for a in ids for b in ids if a < b]
+    got = {
+        (r.id_a, r.id_b): r.jaccard
+        for r in T.verified_jaccard_pairs(
+            docs, spark.createDataFrame(pairs, "id_a long, id_b long"),
+            threshold=0.0,
+        ).collect()
+    }
+    want = {}
+    for a, b in pairs:
+        ga, gb = grams(texts[a]), grams(texts[b])
+        want[(a, b)] = round(len(ga & gb) / len(ga | gb), 6)
+    assert got == want
+    assert sum(0 < j < 1 for j in want.values()) >= 4
 
 
 def test_dedup_exact_keeps_one_null_representative(spark):

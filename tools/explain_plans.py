@@ -8,11 +8,20 @@ the plan properties that matter at scale:
   WholeStageCodegen (partial_ on the map side);
 * top-k compiles to TakeOrderedAndProject (no global sort).
 
+Then it prints a Python-stage census: the number of Python evaluation
+nodes (``MapInArrow``, ``MapInPandas``, ``*EvalPython`` …) in the final
+executed plan of every registry query, and their total. Each such node
+pays pyspark's fixed per-task cost on every action (docs/DESIGN.md
+"Fixed costs per action at sandbox scale"). Python stages that a query
+runs while it is built (eager checkpoints, driver-side collects) are
+not in the returned frame's plan and are not counted.
+
 Usage: python tools/explain_plans.py [sf_dir]
 """
 
 from __future__ import annotations
 
+import re
 import sys
 from pathlib import Path
 
@@ -48,6 +57,30 @@ def check(name: str, df, must_contain: list[str], must_not: list[str] = ()) -> b
     if not ok:
         print(plan[:4000])
     return ok
+
+
+def python_nodes(df) -> int:
+    """Python evaluation nodes in ``df``'s final executed plan; ``df``
+    is collected first, so the adaptive plan is final and a reused
+    exchange is counted once."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    if "== Final Plan ==" in plan:
+        plan = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    names = re.findall(r"^[\s:|+-]*(\w+)", plan, re.M)
+    return sum("InArrow" in n or "InPandas" in n or "Python" in n for n in names)
+
+
+def python_census(spark, sf_dir: str) -> int:
+    """Print each registry query's Python-node count and return the
+    total."""
+    total = 0
+    for name, fn in em.queries().items():
+        n = python_nodes(fn(spark, sf_dir))
+        total += n
+        print(f"  {name:34s} {n}")
+    print(f"python stages, all {len(em.queries())} queries: {total}")
+    return total
 
 
 def main(sf_dir: str) -> int:
@@ -170,6 +203,7 @@ def main(sf_dir: str) -> int:
                 must_contain=["HashAggregate", "partial_count"])
 
     print("ALL OK" if ok else "PLAN REGRESSIONS FOUND")
+    python_census(spark, sf_dir)
     return 0 if ok else 1
 
 
